@@ -13,7 +13,7 @@ import graft.ml.{AnnQuality, Similarity}
   * and printed as one JSON line. Run:
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 sbt "runMain graft.AnnQualityMain"
   *
-  * Index-shaped variants (IVF / PQ / IVF-PQ) size their centroid counts
+  * Index-shaped variants (IVF / IVF-PQ) size their centroid counts
   * from the corpus ([[Similarity.autoCoarseCentroids]] /
   * [[Similarity.autoPqCentroids]] / [[Similarity.autoNProbe]]) — the fix
   * for the recall collapse a FIXED count shows as the corpus grows (8
@@ -72,18 +72,6 @@ object AnnQualityMain {
           numCentroids = coarse, nProbe = nProbe)),
       "quantized_int8" -> (() =>
         Similarity.knnQuantized(e, queries, "vec_id", "embedding", k)),
-      "projected_16d" -> (() =>
-        Similarity.knnProjected(e, queries, "vec_id", "embedding", k,
-          inDim = 64, outDim = 16)),
-      "twostage" -> (() =>
-        Similarity.knnTwoStage(e, queries, "vec_id", "embedding", k,
-          candidates = 30, inDim = 64, outDim = 16)),
-      "pq" -> (() =>
-        Similarity.knnPq(e, queries, "vec_id", "embedding", k,
-          numSubspaces = subs, numCentroids = pqc)),
-      "pq_kmeans" -> (() =>
-        Similarity.knnPq(e, queries, "vec_id", "embedding", k,
-          numSubspaces = subs, numCentroids = pqc, refineIters = 3)),
       "ivfpq" -> (() =>
         Similarity.ivfPqSearch(e, queries, "vec_id", "embedding", k,
           numCentroids = coarse, nProbe = nProbe, numSubspaces = subs,
@@ -101,27 +89,6 @@ object AnnQualityMain {
           numCentroids = coarse, nProbe = nProbe, numSubspaces = subs,
           pqCentroids = pqc, refineIters = 3, coarseIters = 3,
           residual = true, rerank = 0)),
-      // exact-refinement stage (FAISS IndexRefineFlat): ADC shortlist of
-      // 5k raw-vector reads per query, exact re-rank to k
-      "pq_rerank" -> (() =>
-        Similarity.knnPq(e, queries, "vec_id", "embedding", k,
-          numSubspaces = subs, numCentroids = pqc, refineIters = 3,
-          rerank = 5 * k)),
-      // byte-budget axis: once pqCentroids hits the 256 cap, the
-      // remaining pure-ADC lever is MORE subspaces (16 x 4-wide = 16-byte
-      // codes) — this row measures what doubling the code budget buys
-      "pq_kmeans_s16" -> (() =>
-        Similarity.knnPq(e, queries, "vec_id", "embedding", k,
-          numSubspaces = 16, numCentroids = pqc, refineIters = 3)),
-      // OPQ learned rotation (parametric: PCA + balanced eigenvalue
-      // allocation) — the pure-ADC recall lever that costs one covariance
-      // pass at build and nothing at search (same code bytes as pq_kmeans)
-      "pq_opq" -> (() =>
-        Similarity.knnPqOpq(e, queries, "vec_id", "embedding", k,
-          numSubspaces = subs, numCentroids = pqc, refineIters = 3)),
-      "pq_opq_s16" -> (() =>
-        Similarity.knnPqOpq(e, queries, "vec_id", "embedding", k,
-          numSubspaces = 16, numCentroids = pqc, refineIters = 3)),
       "ivfpq_residual_rerank" -> (() =>
         Similarity.ivfPqSearch(e, queries, "vec_id", "embedding", k,
           numCentroids = coarse, nProbe = nProbe, numSubspaces = subs,

@@ -2812,15 +2812,6 @@ object SparkEntry {
       TextRank.lmScore(t(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"))),
 
-    // ML: random-projection ANN — deterministic ±1 JL matrix, 64→16 dims
-    // (4x less arithmetic/IO per pair), cosine ranking in projected space.
-    "q_sim_project" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.knnProjected(e, e.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5, inDim = 64, outDim = 16)
-        .orderBy(col("q_id"), col("rk"))
-    }),
-
     // ML: per-source dataset card — doc/token/char volume, language
     // spread, C4 keep-rate, mixture share. Scan-bound narrow projection
     // into one source-cardinality hash agg.
@@ -2944,26 +2935,18 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
 
-    // ML: two-stage ANN — projected candidate generation (16-d, 4x
-    // cheaper over the full cross product) then exact full-vector
-    // re-rank of the top-20 pool.
-    "q_sim_twostage" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.knnTwoStage(e, e.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5, candidates = 20,
-          inDim = 64, outDim = 16)
-        .orderBy(col("q_id"), col("rk"))
-    }),
-
     // ML: product-quantization ANN (Jégou 2011) — corpus encoded once as 8
     // codes/vector (32× smaller than raw floats), neighbors ranked by ADC
     // = exact L2² to the PQ reconstruction; anchor-sampled codebooks so the
     // oracle rebuilds them from the data; top-k via the heap operator.
+    // Flat PQ is IVF-PQ with ONE coarse list: every vector lands in it and
+    // the single probe scans them all.
     "q_sim_pq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Similarity.knnPq(e, e.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5, numSubspaces = 8,
-          numCentroids = 16, dim = 64)
+      Similarity.ivfPqSearch(e, e.filter(col("vec_id") < 10),
+          "vec_id", "embedding", k = 5, numCentroids = 1, nProbe = 1,
+          numSubspaces = 8, pqCentroids = 16, dim = 64,
+          residual = false, rerank = 0)
         .orderBy(col("q_id"), col("rk"))
     }),
 
@@ -2986,9 +2969,10 @@ object SparkEntry {
     // the shortlist, so recall multiplies at R raw reads per query.
     "q_sim_pq_rerank" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Similarity.knnPq(e, e.filter(col("vec_id") < 10),
-          "vec_id", "embedding", k = 5, numSubspaces = 8,
-          numCentroids = 16, dim = 64, rerank = 20)
+      Similarity.ivfPqSearch(e, e.filter(col("vec_id") < 10),
+          "vec_id", "embedding", k = 5, numCentroids = 1, nProbe = 1,
+          numSubspaces = 8, pqCentroids = 16, dim = 64,
+          residual = false, rerank = 20)
         .orderBy(col("q_id"), col("rk"))
     }),
 
@@ -3309,19 +3293,17 @@ object SparkEntry {
       }),
     "q_sim_pq" -> Prepared(
       build = (s, dir) => {
-        val e = t(s, dir, "embeddings")
-        val model = Similarity.pqTrain(e, "vec_id", "embedding",
-          numSubspaces = 8, numCentroids = 16, dim = 64)
-        val codes = java.nio.file.Files.createTempDirectory("pqcodes").toString
-        Similarity.pqEncode(e, "vec_id", "embedding", model)
-          .write.mode("overwrite").parquet(codes)
-        (model, codes)
+        val idx = java.nio.file.Files.createTempDirectory("pqidx").toString
+        Similarity.saveIvfPqIndex(t(s, dir, "embeddings"), "vec_id",
+          "embedding", numCentroids = 1, idx, numSubspaces = 8,
+          pqCentroids = 16, dim = 64)
+        idx
       },
-      search = (s, dir, art) => {
-        val (model, codes) = art.asInstanceOf[(Similarity.PqModel, String)]
+      search = (s, dir, idx) => {
         val e = t(s, dir, "embeddings")
-        Similarity.pqSearch(s.read.parquet(codes),
-            e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, model)
+        Similarity.ivfPqSearchPersisted(s, idx.asInstanceOf[String],
+            e.filter(col("vec_id") < 10), "vec_id", "embedding",
+            k = 5, nProbe = 1)
           .orderBy(col("q_id"), col("rk"))
       }),
     "q_sim_ivfpq" -> Prepared(
@@ -3873,17 +3855,6 @@ object SparkEntry {
     */
   private def dDot(a: String, b: String): String =
     s"list_reduce(list_transform(list_zip($a, $b), p -> p[1] * p[2]), (x, y) -> x + y)"
-
-  /** DuckDB: 64→16 ±1 JL projection of `e` — interpolates the SAME matrix
-    * literals as [[Similarity.projectionMatrix]](64, 16), so the fixed
-    * left-to-right dot fold is engine-identical.
-    */
-  private def dProject(e: String): String =
-    Similarity.projectionMatrix(64, 16).map { row =>
-      val arr = row.map(v => if (v > 0) "1.0" else "-1.0")
-        .mkString("[", ", ", "]")
-      dDot(e, arr)
-    }.mkString("[", ",\n         ", "]")
 
   private def dCosine(a: String, b: String): String =
     s"${dDot(a, b)} / (sqrt(${dDot(a, a)}) * sqrt(${dDot(b, b)}))"
@@ -8742,49 +8713,6 @@ object SparkEntry {
         |  CAST(sum(t) AS BIGINT) AS sum_micro,
         |  CAST(-sum(t) AS DOUBLE) / (count(*) * 1000000) AS avg_nll
         |FROM terms GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    "q_sim_project" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |  FROM embeddings),
-         |qv AS (SELECT vec_id, ${dProject("e")} AS pe FROM v),
-         |p AS (
-         |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-         |    ${dCosine("q.pe", "c.pe")} AS pcosine
-         |  FROM qv q JOIN qv c ON q.vec_id != c.vec_id
-         |  WHERE q.vec_id < 10),
-         |r AS (
-         |  SELECT q_id, n_id, pcosine,
-         |    CAST(row_number() OVER (PARTITION BY q_id
-         |      ORDER BY pcosine DESC, n_id ASC) AS INTEGER) AS rk
-         |  FROM p)
-         |SELECT q_id, n_id, pcosine, rk FROM r WHERE rk <= 5
-         |ORDER BY q_id, rk""".stripMargin,
-
-    "q_sim_twostage" ->
-      s"""WITH v AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-         |  FROM embeddings),
-         |qv AS (SELECT vec_id, e, ${dProject("e")} AS pe FROM v),
-         |p AS (
-         |  SELECT q.vec_id AS q_id, c.vec_id AS n_id, q.e AS q_e, c.e AS c_e,
-         |    ${dCosine("q.pe", "c.pe")} AS pcosine
-         |  FROM qv q JOIN qv c ON q.vec_id != c.vec_id
-         |  WHERE q.vec_id < 10),
-         |cand AS (
-         |  SELECT *, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY pcosine DESC, n_id ASC) AS prk
-         |  FROM p),
-         |ex AS (
-         |  SELECT q_id, n_id, ${dCosine("q_e", "c_e")} AS cosine
-         |  FROM cand WHERE prk <= 20),
-         |r AS (
-         |  SELECT q_id, n_id, cosine,
-         |    CAST(row_number() OVER (PARTITION BY q_id
-         |      ORDER BY cosine DESC, n_id ASC) AS INTEGER) AS rk
-         |  FROM ex)
-         |SELECT q_id, n_id, cosine, rk FROM r WHERE rk <= 5
-         |ORDER BY q_id, rk""".stripMargin,
 
     "q_sim_pq" ->
       """WITH v AS (

@@ -27,25 +27,21 @@ object Compaction {
   /** Compact one stream's date partition if it has more than `maxFiles`
     * parquet files. Returns (filesBefore, filesAfter) when compacted.
     *
-    * `zorderDims` switches the rewrite from the latest-first time sort to
-    * a Z-order layout over the given (column, lo, hi) dims — compaction is
+    * `zorder` ((dims, bits), the stream's
+    * [[graft.ingest.IngestPipeline.ZOrderPolicy]]) switches the rewrite
+    * from the latest-first time sort to a Z-order layout — compaction is
     * exactly the moment to buy multi-dimensional stats pruning, since the
-    * partition is being rewritten anyway ([[ZOrder]]).
-    *
-    * `zorder` is the STREAM-POLICY form of the same switch ((dims, bits),
-    * [[graft.ingest.IngestPipeline.ZOrderPolicy]]): min/max come from the
-    * partition itself via the exact-BIGINT scaling the ingest path uses
-    * ([[graft.operators.ZOrder.zOrderBy]]), so a policy stream's
-    * compaction re-clusters with NO hand-tuned bounds — per-append z-runs
-    * merge into partition-wide runs and the per-file dim stats tighten
-    * further. Takes precedence over `zorderDims` when both are given.
+    * partition is being rewritten anyway. Min/max come from the partition
+    * itself via the exact-BIGINT scaling the ingest path uses
+    * ([[graft.operators.ZOrder.zOrderBy]]), so compaction re-clusters
+    * with NO hand-tuned bounds — per-append z-runs merge into
+    * partition-wide runs and the per-file dim stats tighten further.
     */
   def compactPartition(spark: SparkSession, root: String, stream: String,
                        date: String, timeCol: String = "p_timestamp",
                        maxFiles: Int = 8,
                        targetFiles: Int = 1,
                        txnCatalog: Option[(String, Seq[String])] = None,
-                       zorderDims: Seq[(String, Double, Double)] = Nil,
                        zorder: Option[(Seq[String], Int)] = None)
       : Option[(Int, Int)] = {
     val partDir = Paths.get(root, stream, s"date=$date")
@@ -62,8 +58,6 @@ object Compaction {
     val laidOut = zorder match {
       case Some((dims, bits)) if dims.forall(df.columns.contains) =>
         graft.operators.ZOrder.zOrderBy(df, dims, bits, targetFiles)
-      case _ if zorderDims.nonEmpty =>
-        ZOrder.layout(df, zorderDims, targetFiles)
       case _ => df.repartition(targetFiles)
         .sortWithinPartitions(col(timeCol).desc)
     }

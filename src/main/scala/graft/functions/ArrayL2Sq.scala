@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * `list_reduce` result) — but compiled to a tight primitive loop inside
   * whole-stage codegen instead of per-element interpreted lambda dispatch.
   * The hot loop of product-quantization encode/ADC scoring
-  * ([[graft.ml.Similarity.knnPq]]): per-row cost × corpus × queries.
+  * ([[graft.ml.Similarity.ivfPqSearch]]): per-row cost × corpus × queries.
   *
   * Null contract: null array → null; any null *element* → null; mismatched
   * array lengths → null (all three match the zip_with/aggregate pipeline —

@@ -7,12 +7,14 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Native codegen'd Morton (Z-curve) bit interleave over 1–4 bucketized
-  * long columns: bit `b` of child `i` lands at position `b·n + i`.
+/** Native codegen'd Morton (Z-curve) bit interleave over `n` gridded long
+  * columns (`bits·n ≤ 63`): bit `b` of child `i` lands at position
+  * `b·n + i`. Backs [[graft.operators.ZOrder.zValue]].
   *
-  * Semantically identical to the `graft.catalog.ZOrder` composition of
-  * `2·bits·n` builtin shift/mask/add expressions, but compiles to `n`
-  * tight loops in whole-stage codegen instead of a ~64-node expression
+  * Semantically identical to the sum of `bits·n` builtin
+  * `shiftleft(shiftright(c, b) & 1, b·n + i)` terms (the reference
+  * `operators.ZOrderSpec` pins it against), but compiles to `n` tight
+  * loops in whole-stage codegen instead of a ~4·bits·n-node expression
   * tree — smaller generated methods (the composed tree flirts with the
   * JIT's 8 KB inline limit inside wide projections) and one fresh
   * variable instead of dozens. This is the write-path hot loop for
@@ -28,8 +30,8 @@ case class MortonInterleave(children: Seq[Expression], bits: Int)
   override def nullable: Boolean = children.exists(_.nullable)
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (children.isEmpty || children.size > 4)
-      TypeCheckResult.TypeCheckFailure("expects 1 to 4 arguments")
+    if (children.isEmpty)
+      TypeCheckResult.TypeCheckFailure("expects at least one argument")
     else if (children.forall(_.dataType == LongType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(

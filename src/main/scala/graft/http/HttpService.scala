@@ -255,6 +255,13 @@ final class GraftHttpServer(
   private[http] def tenantKey(tenant: String, stream: String): String =
     if (tenant == DefaultTenant) stream else s"$tenant/$stream"
 
+  /** [[graft.streaming.LiveTail]] key of a (tenant-scoped) stream key: the
+    * stream's storage path, so two servers on different roots in one JVM
+    * never tail or stage each other's batches.
+    */
+  private[http] def liveTailKey(streamKey: String): String =
+    s"$root/$streamKey"
+
   /** Streams of the DEFAULT tenant (single-tenant compatibility surface). */
   def streams: Map[String, QueryService.Stream] = streamsFor(DefaultTenant)
 
@@ -276,9 +283,10 @@ final class GraftHttpServer(
       bare.map(_ -> QueryService.Stream(s"$root/$key", "p_timestamp",
         catalogPath = Option(statsPath(key))
           .filter(p => new java.io.File(p).isDirectory),
-        // staging/live-tail buffers are keyed by the tenant-scoped key:
-        // a query can never union another tenant's same-named staging rows
-        tailKey = key))
+        // staging/live-tail buffers are keyed by root + tenant-scoped key:
+        // a query can never union another tenant's (or another server's)
+        // same-named staging rows
+        tailKey = liveTailKey(key)))
     }.toMap
   }
 

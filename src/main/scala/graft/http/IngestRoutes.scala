@@ -229,8 +229,9 @@ private[http] trait IngestRoutes { self: GraftHttpServer =>
       // live-tail fan-out (reference livetail.rs `process`): only pay the
       // collect when someone is actually tailing; persisted=true because
       // the rows are already in the table (no staging double count)
-      if (graft.streaming.LiveTail.subscriberCount(cfg.name) > 0)
-        graft.streaming.LiveTail.publish(cfg.name, df, persisted = true)
+      val tail = liveTailKey(cfg.name)
+      if (graft.streaming.LiveTail.subscriberCount(tail) > 0)
+        graft.streaming.LiveTail.publish(tail, df, persisted = true)
       // stats upkeep must never fail an ingest, but queries read THROUGH
       // the catalog once it exists — on failure, drop it entirely so
       // readers fall back to full listing (correct, just slower); the next

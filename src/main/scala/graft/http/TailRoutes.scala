@@ -70,7 +70,8 @@ private[http] trait TailRoutes { self: GraftHttpServer =>
         new java.util.concurrent.LinkedBlockingQueue[graft.streaming.LiveTail.Batch](256)
       val skipped = new java.util.concurrent.atomic.AtomicLong
       val unsubscribe =
-        graft.streaming.LiveTail.subscribe(tenantKey(tenant, name)) { b =>
+        graft.streaming.LiveTail.subscribe(
+            liveTailKey(tenantKey(tenant, name))) { b =>
           if (!queue.offer(b)) { skipped.addAndGet(b.rows.length.toLong); () }
         }
       val w = new java.io.OutputStreamWriter(ex.getResponseBody, UTF_8)

@@ -1813,307 +1813,6 @@ object Similarity {
       }
     }
 
-  /** Project an embedding to `outDim` dimensions: each output component is
-    * one native dot product against a ±1 matrix row (fixed left-to-right
-    * summation — engine-portable). The JL guarantee makes downstream
-    * cosine ranking approximately distance-preserving at a 4x (64→16)
-    * scan/shuffle/compute reduction — the standard first move when ANN
-    * cost at corpus scale is dominated by vector width. Unscaled ±1 rows:
-    * the 1/√outDim factor cancels inside cosine.
-    */
-  def randomProject(vec: Column, inDim: Int, outDim: Int): Column = {
-    // fused native mat-vec: one vector pass instead of outDim separate
-    // dot expressions (bit-identical — parity spec + gated oracles)
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.MatVecProject(
-      ColumnBridge.expression(vec), projectionMatrix(inDim, outDim)))
-  }
-
-  /** Top-k by cosine in the PROJECTED space: [[knnBruteForce]] over
-    * [[randomProject]] vectors (approximate ranking, 4x less arithmetic
-    * per pair; re-rank survivors with full vectors when exactness
-    * matters).
-    */
-  def knnProjected(corpus: DataFrame, queries: DataFrame,
-                   idCol: String, vecCol: String, k: Int,
-                   inDim: Int, outDim: Int): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("q_id"),
-      randomProject(col(vecCol), inDim, outDim).as("q_vec")))
-    val c = corpus.select(col(idCol).as("n_id"),
-      randomProject(col(vecCol), inDim, outDim).as("n_vec"))
-    val scored = c.crossJoin(q)
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("pcosine", nanvl(cosine(col("q_vec"), col("n_vec")), lit(-2d)))
-    topKRanked(scored, "q_id", "pcosine", "n_id", k)
-      .select(col("q_id"), col("n_id"), col("pcosine"), col("rk"))
-  }
-
-  /** Two-stage ANN — the production retrieval shape: stage 1 ranks ALL
-    * corpus vectors per query in the cheap PROJECTED space (outDim ≪
-    * inDim, so the full cross product costs inDim/outDim× less arithmetic
-    * and IO) and keeps `candidates` per query; stage 2 re-ranks only those
-    * candidates with exact full-vector cosine and returns the top `k`.
-    * Recall is governed by `candidates` (JL distortion shrinks as the
-    * candidate pool grows); cost by `outDim`. Both stages are
-    * deterministic (projected tie → n_id, exact tie → n_id), so results
-    * are engine-reproducible — gated against a DuckDB oracle like every
-    * batch operator here.
-    */
-  def knnTwoStage(corpus: DataFrame, queries: DataFrame,
-                  idCol: String, vecCol: String, k: Int, candidates: Int,
-                  inDim: Int, outDim: Int): DataFrame = {
-    require(candidates >= k, "candidate pool must be at least k")
-    val q = broadcast(queries.select(col(idCol).as("q_id"),
-      col(vecCol).as("q_full"),
-      randomProject(col(vecCol), inDim, outDim).as("q_proj")))
-    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_full"),
-      randomProject(col(vecCol), inDim, outDim).as("n_proj"))
-    // stage 1: the full cross product — the heap operator keeps only
-    // `candidates` rows per query, so the big projected scan never feeds a
-    // per-query window shuffle (no rank needed here, just the set).
-    val cand = graft.operators.TopK.perGroup(
-      c.crossJoin(q)
-        .filter(col("q_id") =!= col("n_id"))
-        .withColumn("pcosine", nanvl(cosine(col("q_proj"), col("n_proj")), lit(-2d))),
-      Seq(col("q_id")), Seq(col("pcosine").desc, col("n_id").asc), candidates)
-    val rescored = cand.withColumn("cosine", nanvl(cosine(col("q_full"), col("n_full")), lit(-2d)))
-    topKRanked(rescored, "q_id", "cosine", "n_id", k)
-      .select(col("q_id"), col("n_id"), col("cosine"), col("rk"))
-  }
-
-  // --------------------------------------------- product quantization (PQ)
-
-  /** Product-quantization ANN (Jégou et al. 2011, "Product Quantization for
-    * Nearest Neighbor Search"): each corpus vector is ENCODED once as
-    * `numSubspaces` small codes — the index of its nearest codebook centroid
-    * in each `dim/numSubspaces`-wide subspace — and queries rank neighbors
-    * by the asymmetric distance (ADC): the exact L2² between the query and
-    * the corpus vector's PQ *reconstruction* (the concatenation of its
-    * assigned centroid subvectors).
-    *
-    * Codebooks here are anchor-sampled — subvectors of the `numCentroids`
-    * lowest-`idCol` corpus vectors — the deterministic analog of
-    * sample-initialized k-means codebooks, so every engine can rebuild the
-    * identical codebook from the data alone (the correctness oracle does).
-    *
-    * Scale shape (100 TB): the encode pass is one narrow map over the
-    * corpus producing `numSubspaces` bytes per vector (64-d float → 8
-    * codes = 32× smaller than the raw vectors); in a real deployment the
-    * codes column is persisted and ranking scans ONLY codes (the classic
-    * PQ memory win — a 100 TB embedding corpus becomes ~3 TB of codes).
-    * Ranking is the same broadcast-queries × corpus map as
-    * [[knnBruteForce]] with the top-k bounded by the
-    * [[graft.plans.TopKPerGroup]] heap operator — no shuffle of scored
-    * candidates, no per-query window sort.
-    *
-    * The codebook collect is `numCentroids` rows (tiny, driver-side by
-    * design — codebooks are broadcast literals, exactly like the JL
-    * projection matrix in [[knnTwoStage]]).
-    */
-  def knnPq(corpus: DataFrame, queries: DataFrame, idCol: String,
-            vecCol: String, k: Int, numSubspaces: Int = 8,
-            numCentroids: Int = 16, dim: Int = 64,
-            refineIters: Int = 0, rerank: Int = 0): DataFrame = {
-    val model =
-      if (refineIters == 0)
-        pqTrain(corpus, idCol, vecCol, numSubspaces, numCentroids, dim)
-      else pqTrainKmeans(corpus, idCol, vecCol, numSubspaces, numCentroids,
-        dim, refineIters)
-    val encoded = pqEncode(corpus, idCol, vecCol, model)
-    if (rerank <= 0)
-      pqSearch(encoded, queries, idCol, vecCol, k, model)
-    else exactRerank(
-      pqSearch(encoded, queries, idCol, vecCol, math.max(rerank, k), model),
-      corpus, queries, idCol, vecCol, k)
-  }
-
-  // ------------------------------------------ OPQ-style learned rotation
-
-  /** Parametric OPQ rotation (Ge et al. 2013, "Optimized Product
-    * Quantization", §4 — the closed-form variant for Gaussian-ish data):
-    * rotate the embedding space by the PCA eigenbasis, with principal
-    * directions dealt across subspaces so each subspace carries a
-    * BALANCED share of the variance (greedy min-log-variance-sum
-    * assignment, the paper's eigenvalue-allocation step). Axis-aligned PQ
-    * subspaces waste code budget when the data's variance is concentrated
-    * in a few correlated directions; the rotation decorrelates dimensions
-    * and equalizes per-subspace information so every codebook earns its
-    * bits.
-    *
-    * Returned as rotation-matrix ROWS (output dim r = row r · x), applied
-    * with the fused [[graft.functions.MatVecProject]] kernel. The mean is
-    * deliberately NOT subtracted at apply time: the PQ pipeline is
-    * translation-invariant end to end (anchor seeding and Lloyd updates
-    * are translation-equivariant, ADC compares differences), so
-    * `R·(x−μ)` and `R·x` produce identical rankings — the covariance is
-    * centered, the application is a single mat-vec.
-    *
-    * Scale shape: ONE narrow corpus pass accumulates per-partition
-    * (count, Σx, Σxxᵀ) partials (`mapPartitions` — a dim×dim fold no
-    * Expression expresses; dim² doubles per PARTITION, not per row),
-    * reduced driver-side; the 64×64 symmetric eigendecomposition is a
-    * driver-side cyclic-Jacobi solve (microseconds at embedding dims).
-    * Deterministic: no sampling, no seeds — the same corpus always
-    * yields the same rotation (cyclic Jacobi has a fixed sweep order).
-    */
-  def opqRotation(corpus: DataFrame, idCol: String, vecCol: String,
-                  dim: Int, numSubspaces: Int): Seq[Seq[Double]] = {
-    require(dim % numSubspaces == 0,
-      s"dim $dim must divide into $numSubspaces subspaces")
-    val session = corpus.sparkSession
-    import session.implicits._
-    val partials = corpus.select(col(vecCol).cast("array<double>"))
-      .as[Seq[Double]]
-      .mapPartitions { it =>
-        val sum = new Array[Double](dim)
-        val prod = new Array[Double](dim * dim)
-        var cnt = 0L
-        it.foreach { v =>
-          if (v != null && v.length == dim) {
-            val a = v.toArray
-            var i = 0
-            while (i < dim) {
-              sum(i) += a(i)
-              var j = 0
-              val base = i * dim
-              while (j < dim) { prod(base + j) += a(i) * a(j); j += 1 }
-              i += 1
-            }
-            cnt += 1
-          }
-        }
-        if (cnt == 0L) Iterator.empty
-        else Iterator.single((cnt, sum.toSeq, prod.toSeq))
-      }.collect()
-    require(partials.nonEmpty, "opqRotation needs a non-empty corpus")
-    val n = partials.map(_._1).sum.toDouble
-    val mean = new Array[Double](dim)
-    val m2 = Array.ofDim[Double](dim, dim)
-    partials.foreach { case (_, s, p) =>
-      var i = 0
-      while (i < dim) {
-        mean(i) += s(i)
-        var j = 0
-        while (j < dim) { m2(i)(j) += p(i * dim + j); j += 1 }
-        i += 1
-      }
-    }
-    var i = 0
-    while (i < dim) { mean(i) /= n; i += 1 }
-    val cov = Array.tabulate(dim, dim)((r, c) => m2(r)(c) / n - mean(r) * mean(c))
-    val (eigVals, eigVecs) = jacobiEigSym(cov)
-    // eigenvalue allocation: deal directions (variance descending) to the
-    // non-full subspace with the smallest accumulated log-variance — each
-    // subspace ends with sd directions of roughly equal variance product
-    val sd = dim / numSubspaces
-    val order = eigVals.indices.sortBy(i => -eigVals(i))
-    val logSum = new Array[Double](numSubspaces)
-    val buckets = Array.fill(numSubspaces)(
-      scala.collection.mutable.ArrayBuffer.empty[Int])
-    order.foreach { e =>
-      val open = (0 until numSubspaces).filter(buckets(_).length < sd)
-      val tgt = open.minBy(b => (logSum(b), b))
-      buckets(tgt) += e
-      logSum(tgt) += math.log(math.max(eigVals(e), 1e-300))
-    }
-    // row r of the rotation = the r-th allocated eigenvector (transposed
-    // column of the Jacobi basis)
-    buckets.flatten.toSeq.map(e => (0 until dim).map(r => eigVecs(r)(e)))
-  }
-
-  /** Cyclic Jacobi eigendecomposition of a symmetric matrix:
-    * A = V·diag(λ)·Vᵀ, eigenvectors as COLUMNS of V. Fixed sweep order →
-    * deterministic; converges quadratically (tens of sweeps at dim 64).
-    */
-  private def jacobiEigSym(a0: Array[Array[Double]])
-      : (Array[Double], Array[Array[Double]]) = {
-    val nd = a0.length
-    val a = a0.map(_.clone())
-    val v = Array.tabulate(nd, nd)((r, c) => if (r == c) 1.0 else 0.0)
-    def off(): Double = {
-      var s = 0.0
-      var p = 0
-      while (p < nd) {
-        var q = p + 1
-        while (q < nd) { s += a(p)(q) * a(p)(q); q += 1 }
-        p += 1
-      }
-      s
-    }
-    val eps = 1e-22 * (0 until nd).map(i => a(i)(i) * a(i)(i)).sum.max(1e-300)
-    var sweep = 0
-    while (sweep < 64 && off() > eps) {
-      var p = 0
-      while (p < nd - 1) {
-        var q = p + 1
-        while (q < nd) {
-          val apq = a(p)(q)
-          if (math.abs(apq) > 1e-300) {
-            val theta = (a(q)(q) - a(p)(p)) / (2.0 * apq)
-            val t = math.signum(theta) match {
-              case 0.0 => 1.0 / (theta + math.sqrt(theta * theta + 1.0))
-              case sg => sg / (math.abs(theta) + math.sqrt(theta * theta + 1.0))
-            }
-            val c = 1.0 / math.sqrt(t * t + 1.0)
-            val s = t * c
-            var r = 0
-            while (r < nd) {
-              val arp = a(r)(p); val arq = a(r)(q)
-              a(r)(p) = c * arp - s * arq
-              a(r)(q) = s * arp + c * arq
-              r += 1
-            }
-            r = 0
-            while (r < nd) {
-              val apr = a(p)(r); val aqr = a(q)(r)
-              a(p)(r) = c * apr - s * aqr
-              a(q)(r) = s * apr + c * aqr
-              r += 1
-            }
-            r = 0
-            while (r < nd) {
-              val vrp = v(r)(p); val vrq = v(r)(q)
-              v(r)(p) = c * vrp - s * vrq
-              v(r)(q) = s * vrp + c * vrq
-              r += 1
-            }
-          }
-          q += 1
-        }
-        p += 1
-      }
-      sweep += 1
-    }
-    ((0 until nd).map(i => a(i)(i)).toArray, v)
-  }
-
-  /** Replace `vecCol` with its OPQ-rotated image `R·x` (fused
-    * [[graft.functions.MatVecProject]] mat-vec — one kernel call per row).
-    */
-  def opqRotate(df: DataFrame, vecCol: String,
-                rotation: Seq[Seq[Double]]): DataFrame = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    df.withColumn(vecCol, ColumnBridge.column(graft.functions.MatVecProject(
-      ColumnBridge.expression(col(vecCol)), rotation)))
-  }
-
-  /** [[knnPq]] in OPQ-rotated space: learn the rotation from the corpus,
-    * rotate corpus and queries, then train/encode/search PQ exactly as
-    * the unrotated path does. Rotation is orthonormal, so L2 distances —
-    * and therefore the exact-rerank stage and full-depth exactness — are
-    * preserved; only the QUANTIZATION grid changes (aligned to balanced
-    * principal directions instead of raw coordinate blocks).
-    */
-  def knnPqOpq(corpus: DataFrame, queries: DataFrame, idCol: String,
-               vecCol: String, k: Int, numSubspaces: Int = 8,
-               numCentroids: Int = 16, dim: Int = 64,
-               refineIters: Int = 0, rerank: Int = 0): DataFrame = {
-    val rot = opqRotation(corpus, idCol, vecCol, dim, numSubspaces)
-    knnPq(opqRotate(corpus, vecCol, rot), opqRotate(queries, vecCol, rot),
-      idCol, vecCol, k, numSubspaces, numCentroids, dim, refineIters,
-      rerank)
-  }
-
   /** Exact refinement of an ANN shortlist (the FAISS `IndexRefineFlat`
     * pattern): re-rank each query's top-`R` approximate candidates by the
     * EXACT L2² against the raw vectors and keep the top-`k`. The
@@ -2241,10 +1940,18 @@ object Similarity {
     }.toDF("q_id", "n_id", "cosine", "rk")
   }
 
-  /** A trained PQ codebook: `anchors(c)` is centroid `c`'s full `dim`-wide
-    * vector; subspace `j`'s codebook is each anchor's `[j*sd, (j+1)*sd)`
-    * slice. Train once ([[pqTrain]]), encode once ([[pqEncode]]), search
-    * many times ([[pqSearch]]) — the bench times the phases separately.
+  // --------------------------------------------- product quantization (PQ)
+
+  /** A trained PQ codebook (Jégou et al. 2011, "Product Quantization for
+    * Nearest Neighbor Search"): `codebooks(j)(c)` is centroid `c`'s
+    * subvector in subspace `j` (`dim/numSubspaces` wide). A vector encodes
+    * as one code per subspace — the index of its nearest centroid there —
+    * and queries rank by the asymmetric distance (ADC): the exact L2²
+    * between the query and the code row's reconstruction. Flat PQ is
+    * [[ivfPqSearch]] with one coarse list (`numCentroids = 1`,
+    * `nProbe = 1`); train once ([[pqTrain]] / [[pqTrainKmeans]]), persist
+    * the codes with [[saveIvfPqIndex]], search many times with
+    * [[ivfPqSearchPersisted]].
     */
   final case class PqModel(codebooks: Seq[Seq[Seq[Double]]], dim: Int) {
     val numSubspaces: Int = codebooks.size
@@ -2268,8 +1975,10 @@ object Similarity {
   }
 
   /** Codebook train: subvectors of the `numCentroids` lowest-id corpus
-    * vectors (deterministic anchor sampling — see [[knnPq]] doc). The
-    * collect is `numCentroids` rows, driver-side by design.
+    * vectors — the deterministic analog of sample-initialized k-means, so
+    * every engine rebuilds the identical codebook from the data alone (the
+    * correctness oracle does). The collect is `numCentroids` rows,
+    * driver-side by design.
     */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
               numSubspaces: Int = 8, numCentroids: Int = 16,
@@ -2372,41 +2081,6 @@ object Similarity {
       }, dim)
     }
     model
-  }
-
-  /** Encode pass: `(n_id, codes)` — per subspace, the index of the row's
-    * nearest codebook centroid (first-min ties). One narrow map over the
-    * corpus; the output is the thing a deployment persists (32× smaller
-    * than the raw vectors at the 64-d/8-subspace defaults).
-    */
-  def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
-               model: PqModel): DataFrame = {
-    // fused native kernel: one vector pass per row instead of
-    // numSubspaces × numCentroids interpreted-lambda L2² evaluations
-    // (bit-identical to the transform/array_position formulation — the
-    // parity spec and the gated oracles pin it)
-    corpus.select(col(idCol).as("n_id"),
-      pqCodesOf(col(vecCol), model).as("codes"))
-  }
-
-  /** ADC ranking over an encoded corpus (`[[pqEncode]]` output or a
-    * persisted codes table): exact L2² between each query and the PQ
-    * reconstruction of each code row, top-k per query through the
-    * [[graft.plans.TopKPerGroup]] heap operator.
-    */
-  def pqSearch(encoded: DataFrame, queries: DataFrame, idCol: String,
-               vecCol: String, k: Int, model: PqModel): DataFrame = {
-    val q = broadcast(queries.select(col(idCol).as("q_id"),
-      col(vecCol).cast("array<double>").as("q_vec")))
-    val scored = encoded.crossJoin(q)
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("adc", pqAdcOf(col("q_vec"), col("codes"), model))
-    val top = graft.operators.TopK.perGroup(scored, Seq(col("q_id")),
-      Seq(col("adc").asc, col("n_id").asc), k)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").asc, col("n_id").asc)
-    top.withColumn("rk", row_number().over(w))
-      .select(col("q_id"), col("n_id"), col("adc"), col("rk"))
   }
 
   /** IVF-PQ composite ANN (the FAISS IVFPQ layout; Jégou et al. 2011
@@ -2578,8 +2252,8 @@ object Similarity {
     (centroids, coded, model, () => { pqInput.unpersist(); centroids.unpersist(); () })
   }
 
-  /** Fused-kernel PQ codes of `vec` under `model` (shared by
-    * [[pqEncode]] and the residual IVF-PQ path).
+  /** Fused-kernel PQ codes of `vec` under `model` (shared by the IVF-PQ
+    * build, append and merge paths).
     */
   private def pqCodesOf(vec: Column, model: PqModel): Column = {
     import org.apache.spark.sql.graft.ColumnBridge

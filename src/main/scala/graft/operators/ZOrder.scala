@@ -28,7 +28,9 @@ object ZOrder {
 
   /** Bit-interleaved Morton value of `dims`, each already gridded by the
     * caller to `[0, 2^bits)` (values clamp; dimension d's bit i lands at
-    * position `i·k + d`). `k · bits` must fit a positive BIGINT.
+    * position `i·k + d`; the clamp grids a null to 0). `k · bits`
+    * must fit a positive BIGINT. The interleave is the fused
+    * [[graft.functions.MortonInterleave]] kernel.
     */
   def zValue(dims: Seq[Column], bits: Int): Column = {
     val k = dims.size
@@ -39,11 +41,9 @@ object ZOrder {
     val cap = (1L << bits) - 1
     val clamped = dims.map(d =>
       least(greatest(d.cast("long"), lit(0L)), lit(cap)))
-    val terms = for {
-      (c, d) <- clamped.zipWithIndex
-      i <- 0 until bits
-    } yield shiftleft(shiftright(c, i).bitwiseAND(lit(1L)), i * k + d)
-    terms.reduce(_ + _)
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(graft.functions.MortonInterleave(
+      clamped.map(ColumnBridge.expression), bits))
   }
 
   /** Adds a `z` column: each dimension min-max-scaled onto the

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
 import graft.engine.GraftSession
 
 /** Dev tool (optimization round): materialize a query and print the FINAL
@@ -19,7 +19,7 @@ object FinalPlan {
         case Some(p) => p.search(spark, sfDir, p.build(spark, sfDir))
         case None => SparkEntry.queries(n)(spark, sfDir)
       }
-      Bench2.materialize(df)
+      Bench.materialize(df)
       println(s"\n===== $n (final) =====")
       println(df.queryExecution.executedPlan.toString)
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
 import graft.engine.GraftSession
 
 /** Dev tool (optimization round): split a query's per-pass wall time into
@@ -30,7 +30,7 @@ object PlanProfile {
     names.foreach { n =>
       try {
         // warm pass (codegen caches, file listing), as the bench does
-        Bench2.materialize(body(n))
+        Bench.materialize(body(n))
         // planning only, fresh DF
         val tp0 = System.nanoTime()
         body(n).queryExecution.executedPlan
@@ -38,7 +38,7 @@ object PlanProfile {
         // full pass, fresh DF (min of 2, as the bench does)
         val tTotal = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
-          Bench2.materialize(body(n))
+          Bench.materialize(body(n))
           (System.nanoTime() - t0) / 1e9
         }.min
         println(f"$n%-34s $tPlan%8.3f $tTotal%8.3f ${tTotal - tPlan}%8.3f")
@@ -48,16 +48,4 @@ object PlanProfile {
     }
     spark.stop()
   }
-}
-
-/** Re-export of the bench materializer for tools (Bench.materialize is
-  * package-private to graft; tools live in graft.tools).
-  */
-private[tools] object Bench2 {
-  def materialize(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.mapPartitions { it =>
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      Iterator.single(n)
-    }.collect().sum
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{Bench, SparkEntry}
 import graft.engine.GraftSession
 
 /** Scratch profiler: split a query's construction+planning into phases —
@@ -21,7 +21,7 @@ object ProfilePhases {
     }
     println(f"${"query"}%-26s ${"construct"}%9s ${"analyze"}%8s ${"optimize"}%9s ${"physical"}%9s ${"execute"}%8s")
     args.foreach { n =>
-      Bench2.materialize(body(n)) // warm
+      Bench.materialize(body(n)) // warm
       (1 to 2).foreach { _ =>
         val t0 = System.nanoTime()
         val df = body(n)
@@ -33,7 +33,7 @@ object ProfilePhases {
         val t3 = System.nanoTime()
         qe.executedPlan
         val t4 = System.nanoTime()
-        Bench2.materialize(df)
+        Bench.materialize(df)
         val t5 = System.nanoTime()
         def s(a: Long, b: Long) = f"${(b - a) / 1e9}%8.3f"
         println(f"$n%-26s ${s(t0, t1)}%9s ${s(t1, t2)}%8s ${s(t2, t3)}%9s ${s(t3, t4)}%9s ${s(t4, t5)}%8s  nodes=${qe.optimizedPlan.collect { case p => p }.size}")

@@ -33,8 +33,8 @@ class PlanAuditSpec extends SparkSuite {
     // true merge: same ≤8-row centroid cross joins as q_sim_ivfpq
     // (A's build, B's build, the merge re-assign, the probe subquery)
     "q_sim_merge_ivfpq",
-    "q_sim_knn", "q_sim_pq", "q_sim_pq_rerank", "q_sim_project",
-    "q_sim_quantized", "q_sim_twostage", "q_text_bm25",
+    "q_sim_knn", "q_sim_pq", "q_sim_pq_rerank",
+    "q_sim_quantized", "q_text_bm25",
     "q_text_lmscore", "q_text_tfidf", "q_vocab_topk",
     // radius search: `corpus.crossJoin(broadcast(q))` with a single
     // query row — same tiny-query-side contract as q_sim_knn. Verified

@@ -13,6 +13,13 @@ class PreparedQuerySpec extends SparkSuite {
     assert(unknown.isEmpty, s"prepared keys with no gated query: $unknown")
   }
 
+  test("every gated query has an oracle, and every oracle a gated query") {
+    val q = SparkEntry.queries.keySet
+    val o = SparkEntry.oracleSql.keySet
+    assert(q -- o == Set.empty, s"gated queries with no oracle SQL: ${q -- o}")
+    assert(o -- q == Set.empty, s"oracle SQL with no gated query: ${o -- q}")
+  }
+
   for ((name, p) <- SparkEntry.prepared.toSeq.sortBy(_._1)) {
     test(s"$name: build+search rows == fused query rows") {
       val fused = SparkEntry.queries(name)(spark, sfDir)

@@ -107,7 +107,7 @@ class CompactionSpec extends SparkSuite {
     }
     val res = Compaction.compactPartition(spark, root, "logs", "2024-01-01",
       targetFiles = 8,
-      zorderDims = Seq(("x", 0.0, 1000.0), ("y", 0.0, 1000.0)))
+      zorder = Some((Seq("x", "y"), 16)))
     assert(res.contains((12, 8)))
     val after = spark.read.parquet(s"$root/logs/date=2024-01-01")
     assert(after.count() == 2400)

@@ -23,7 +23,7 @@ import graft.ml.Similarity
   * dragging all co-resident expressions with it. Values stayed correct
   * (same body, interpreted), which is exactly why the parity specs never
   * caught it. The statics are now named distinctly (`adc`, `encode`,
-  * `bandKeys`, `quantize`, `project`) so the forwarders exist; this spec
+  * `bandKeys`, `quantize`) so the forwarders exist; this spec
   * makes the compile itself the assertion:
   *
   *  - [[GenerateUnsafeProjection.generate]] has NO interpreted fallback —
@@ -43,19 +43,18 @@ class KernelCodegenSpec extends SparkSuite {
   private val planes: Seq[Seq[Double]] = Seq(
     Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0),
     Seq(0.0, 0.0, 1.0, 0.0), Seq(0.0, 0.0, 0.0, -1.0))
-  private val projRows: Seq[Seq[Double]] = Seq(
-    Seq(1.0, 1.0, 0.0, 0.0), Seq(0.0, 0.0, 1.0, -1.0))
-
   private val qAttr = AttributeReference("q", ArrayType(DoubleType))()
   private val cAttr = AttributeReference("c", ArrayType(IntegerType))()
-  private val attrs = Seq(qAttr, cAttr)
+  // five Morton dimensions: past the SQL surface's four, 5 × 12 ≤ 63 bits
+  private val zAttrs = (0 until 5).map(i => AttributeReference(s"z$i", LongType)())
+  private val attrs = Seq(qAttr, cAttr) ++ zAttrs
 
   private def kernels: Seq[Expression] = Seq(
     PqAdcL2Sq(qAttr, cAttr, codebooks),
     PqEncodeCodes(qAttr, codebooks),
     SignBandKeys(qAttr, planes, bandBits = 2),
     QuantizeInt8Vec(qAttr),
-    MatVecProject(qAttr, projRows))
+    MortonInterleave(zAttrs, bits = 12))
 
   test("all five kernels compile via GenerateUnsafeProjection (no fallback path exists here)") {
     val bound = kernels.map(BindReferences.bindReference[Expression](_, attrs))
@@ -64,7 +63,7 @@ class KernelCodegenSpec extends SparkSuite {
 
     val row = InternalRow(
       new GenericArrayData(Array(1.0, 2.0, 9.0, 11.0)),
-      new GenericArrayData(Array(0, 1)))
+      new GenericArrayData(Array(0, 1)), 1L, 2L, 3L, 4095L, 0L)
     val out = proj(row)
 
     // generated output == interpreted eval, field by field
@@ -78,14 +77,18 @@ class KernelCodegenSpec extends SparkSuite {
       interp(2).asInstanceOf[ArrayData].toLongArray().toSeq)
     assert(out.getArray(3).toDoubleArray.toSeq ==
       interp(3).asInstanceOf[ArrayData].toDoubleArray().toSeq)
-    assert(out.getArray(4).toDoubleArray.toSeq ==
-      interp(4).asInstanceOf[ArrayData].toDoubleArray().toSeq)
+    assert(out.getLong(4) == interp(4).asInstanceOf[Long])
+    // dimension i's bit b lands at position 5·b + i
+    val want = Seq(1L, 2L, 3L, 4095L, 0L).zipWithIndex.map { case (v, i) =>
+      (0 until 12).map(b => ((v >> b) & 1L) << (5 * b + i)).sum
+    }.sum
+    assert(out.getLong(4) == want)
   }
 
   test("null/degenerate inputs keep the compiled projection on the documented contract") {
     val bound = kernels.map(BindReferences.bindReference[Expression](_, attrs))
     val proj = GenerateUnsafeProjection.generate(bound)
-    val row = InternalRow(null, null)
+    val row = InternalRow(null, null, 1L, null, 3L, 4L, 5L)
     val out = proj(row)
     assert(out.isNullAt(0) && out.isNullAt(1))
     // SignBandKeys: null vector → all-zero band keys, NOT null
@@ -114,7 +117,8 @@ class KernelCodegenSpec extends SparkSuite {
         k(PqEncodeCodes(ve, codebooks)).as("codes"),
         k(SignBandKeys(ve, planes, 2)).as("keys"),
         k(QuantizeInt8Vec(ve)).as("q8"),
-        k(MatVecProject(ve, projRows)).as("proj"))
+        k(MortonInterleave(Seq.fill(5)(
+          ColumnBridge.expression(col("vec_id"))), 12)).as("z"))
         .withColumn("adc", k(PqAdcL2Sq(
           ColumnBridge.expression(col("v")),
           ColumnBridge.expression(col("codes")), codebooks)))
@@ -125,9 +129,10 @@ class KernelCodegenSpec extends SparkSuite {
         (1L, Array(0f, 0f, 0f, 0f)), (2L, Array(10f, 10f, 10f, 10f)),
         (3L, Array(1f, 1f, 9f, 9f)), (4L, Array(9f, 9f, 1f, 1f)),
       ).toDF("vec_id", "embedding")
-      val knn = Similarity.knnPq(fvecs, fvecs.filter($"vec_id" === 1L),
-        "vec_id", "embedding", k = 3, numSubspaces = 2, numCentroids = 2,
-        dim = 4)
+      val knn = Similarity.ivfPqSearch(fvecs, fvecs.filter($"vec_id" === 1L),
+        "vec_id", "embedding", k = 3, numCentroids = 1, nProbe = 1,
+        numSubspaces = 2, pqCentroids = 2, dim = 4, residual = false,
+        rerank = 0)
       assert(knn.collect().length == 3)
     } finally {
       spark.conf.set(factoryKey, prevFactory)

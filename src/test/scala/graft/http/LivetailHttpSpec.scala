@@ -107,15 +107,15 @@ class LivetailHttpSpec extends SparkSuite {
       // dead socket and the server unsubscribes
       val (conn2, reader2) = openTail(
         s"$base/livetail/taillogs?timeoutMs=60000", basic("alice", "pw"))
-      assert(LiveTail.subscriberCount("taillogs") == 1)
+      assert(LiveTail.subscriberCount(srv.liveTailKey("taillogs")) == 1)
       reader2.close(); conn2.disconnect()
       val deadline = System.currentTimeMillis() + 30000
-      while (LiveTail.subscriberCount("taillogs") > 0 &&
+      while (LiveTail.subscriberCount(srv.liveTailKey("taillogs")) > 0 &&
              System.currentTimeMillis() < deadline) {
         ingest("""{"m": "poke"}""")
         Thread.sleep(200)
       }
-      assert(LiveTail.subscriberCount("taillogs") == 0,
+      assert(LiveTail.subscriberCount(srv.liveTailKey("taillogs")) == 0,
         "disconnected tail left its subscription behind")
 
       // gates: no grant → 403; unknown stream → 404; bad path → 400
@@ -125,6 +125,42 @@ class LivetailHttpSpec extends SparkSuite {
         basic("alice", "pw"))._1 == 404)
       assert(http("GET", s"$base/livetail",
         basic("alice", "pw"))._1 == 400)
-    } finally { srv.stop(); Rbac.clear(); LiveTail.clear("taillogs") }
+    } finally {
+      srv.stop(); Rbac.clear(); LiveTail.clear(srv.liveTailKey("taillogs"))
+    }
+  }
+
+  test("two servers on different roots in one JVM never tail each " +
+       "other's ingests of a same-named stream") {
+    def server(): GraftHttpServer = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-tail2").toString
+      val srv = new GraftHttpServer(spark, tmp)
+      srv.start()
+      srv
+    }
+    val a = server()
+    val b = server()
+    try {
+      def ingest(srv: GraftHttpServer, m: String): Unit = {
+        val (s, body) = http("POST",
+          s"http://127.0.0.1:${srv.boundPort}/api/v1/ingest",
+          Map("X-P-Stream" -> "shared"), Some(s"""{"m": "$m"}"""))
+        assert(s == 200, body)
+      }
+      assert(a.liveTailKey("shared") != b.liveTailKey("shared"))
+      ingest(a, "create")
+      val (conn, reader) = openTail(s"http://127.0.0.1:${a.boundPort}" +
+        "/api/v1/livetail/shared?maxEvents=1&timeoutMs=60000", Map.empty)
+      assert(LiveTail.subscriberCount(a.liveTailKey("shared")) == 1)
+      assert(LiveTail.subscriberCount(b.liveTailKey("shared")) == 0)
+      // B's ingest lands first: with a root-blind key it would be the
+      // one event A's tail delivers
+      ingest(b, "fromB")
+      ingest(a, "fromA")
+      val line = reader.readLine()
+      conn.disconnect()
+      assert(line != null && mapper.readTree(line).get("m").asText() ==
+        "fromA", s"server A's tail delivered: $line")
+    } finally { a.stop(); b.stop() }
   }
 }

@@ -1,9 +1,13 @@
 package graft.ml
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.SparkSuite
 
-/** Product-quantization ANN ([[Similarity.knnPq]]). */
+/** Product-quantization ANN: flat PQ is [[Similarity.ivfPqSearch]] with one
+  * coarse list; IVF-PQ, residual encoding and the persisted index.
+  */
 class PqSpec extends SparkSuite {
   import spark.implicits._
 
@@ -15,9 +19,22 @@ class PqSpec extends SparkSuite {
     (4L, Array(9f, 9f, 1f, 1f)),   // codes (1, 0) -> recon (10,10,0,0)
   ).toDF("vec_id", "embedding")
 
-  private def pq(k: Int) =
-    Similarity.knnPq(vecs, vecs.filter($"vec_id" === 1L), "vec_id",
-      "embedding", k = k, numSubspaces = 2, numCentroids = 2, dim = 4)
+  /** Flat PQ: one coarse list holds every vector, the one probe scans it. */
+  private def flatPq(q: DataFrame, k: Int, numSubspaces: Int = 2,
+                     refineIters: Int = 0, rerank: Int = 0): DataFrame =
+    Similarity.ivfPqSearch(vecs, q, "vec_id", "embedding", k = k,
+      numCentroids = 1, nProbe = 1, numSubspaces = numSubspaces,
+      pqCentroids = 2, dim = 4, refineIters = refineIters,
+      residual = false, rerank = rerank)
+
+  private def pq(k: Int) = flatPq(vecs.filter($"vec_id" === 1L), k)
+
+  /** `(n_id, codes)` through the fused encode kernel. */
+  private def encode(df: DataFrame, model: Similarity.PqModel): DataFrame =
+    df.select(col("vec_id").as("n_id"),
+      ColumnBridge.column(graft.functions.PqEncodeCodes(
+        ColumnBridge.expression(col("embedding")), model.codebooks))
+        .as("codes"))
 
   test("ADC is the exact L2 squared to the PQ reconstruction") {
     val r = pq(3).collect().map(r =>
@@ -39,8 +56,7 @@ class PqSpec extends SparkSuite {
   test("ADC to an anchor vector is its exact distance (zero quantization error)") {
     // an anchor's nearest centroid in every subspace is itself, so its
     // reconstruction is lossless and ADC degenerates to the true L2².
-    val q3 = Similarity.knnPq(vecs, vecs.filter($"vec_id" === 3L), "vec_id",
-      "embedding", k = 3, numSubspaces = 2, numCentroids = 2, dim = 4)
+    val q3 = flatPq(vecs.filter($"vec_id" === 3L), k = 3)
     val adcTo2 = q3.filter($"n_id" === 2L).select($"adc").as[Double].head()
     // exact L2²((1,1,9,9),(10,10,10,10)) = 81+81+1+1
     assert(adcTo2 == 164.0)
@@ -53,16 +69,12 @@ class PqSpec extends SparkSuite {
 
   test("dim must divide into subspaces") {
     intercept[IllegalArgumentException] {
-      Similarity.knnPq(vecs, vecs, "vec_id", "embedding", k = 1,
-        numSubspaces = 3, numCentroids = 2, dim = 4)
+      flatPq(vecs, k = 1, numSubspaces = 3)
     }
   }
 
   test("ivfPqSearch with all lists probed equals plain PQ") {
-    val full = Similarity.knnPq(vecs, vecs.filter($"vec_id" === 1L),
-        "vec_id", "embedding", k = 3, numSubspaces = 2, numCentroids = 2,
-        dim = 4)
-      .orderBy("rk").collect().map(_.toSeq).toSeq
+    val full = pq(3).orderBy("rk").collect().map(_.toSeq).toSeq
     val ivfpq = Similarity.ivfPqSearch(vecs, vecs.filter($"vec_id" === 1L),
         "vec_id", "embedding", k = 3, numCentroids = 2, nProbe = 2,
         numSubspaces = 2, pqCentroids = 2, dim = 4,
@@ -121,7 +133,6 @@ class PqSpec extends SparkSuite {
   }
 
   test("PqEncodeCodes kernel equals the transform/array_position formulation") {
-    import org.apache.spark.sql.graft.ColumnBridge
     val rnd = new scala.util.Random(123L)
     val data = (1L to 60L).map(i =>
         (i, Array.fill(8)((rnd.nextFloat() - 0.5f) * 4f)))
@@ -137,7 +148,7 @@ class PqSpec extends SparkSuite {
           ColumnBridge.expression(cent))))
       (array_position(dists, array_min(dists)) - 1).cast("int")
     }: _*)
-    val rows = Similarity.pqEncode(data, "vec_id", "embedding", model)
+    val rows = encode(data, model)
       .join(data.select(col("vec_id").as("n_id"),
         columnForm.as("expected"), col("embedding")), "n_id")
       .collect()
@@ -193,14 +204,13 @@ class PqSpec extends SparkSuite {
   }
 
   test("PqAdcL2Sq kernel is bit-identical to l2sq(q, recon(codes))") {
-    import org.apache.spark.sql.graft.ColumnBridge
     val rnd = new scala.util.Random(77L)
     val data = (1L to 50L).map(i =>
         (i, Array.fill(8)((rnd.nextFloat() - 0.5f) * 4f)))
       .toDF("vec_id", "embedding")
     val model = Similarity.pqTrain(data, "vec_id", "embedding",
       numSubspaces = 4, numCentroids = 8, dim = 8)
-    val encoded = Similarity.pqEncode(data, "vec_id", "embedding", model)
+    val encoded = encode(data, model)
     val q = data.filter($"vec_id" <= 3L)
       .select($"vec_id".as("q_id"),
         $"embedding".cast("array<double>").as("q_vec"))
@@ -228,10 +238,9 @@ class PqSpec extends SparkSuite {
     }
   }
 
-  test("knnPq with refineIters ranks by the refined codebooks") {
-    val r = Similarity.knnPq(vecs, vecs.filter($"vec_id" === 1L),
-      "vec_id", "embedding", k = 3, numSubspaces = 2, numCentroids = 2,
-      dim = 4, refineIters = 2).collect()
+  test("flat PQ with refineIters ranks by the refined codebooks") {
+    val r = flatPq(vecs.filter($"vec_id" === 1L), k = 3, refineIters = 2)
+      .collect()
     assert(r.length == 3)
     assert(r.map(_.getAs[Long]("n_id")).toSet == Set(2L, 3L, 4L))
   }
@@ -285,9 +294,7 @@ class PqSpec extends SparkSuite {
       "ranking (ADC errors corrected)") {
     // plain PQ scores v3/v4 at adc 200 (quantized recon); the re-rank
     // stage must replace that with the exact L2² (164) and keep order
-    val rr = Similarity.knnPq(vecs, vecs.filter($"vec_id" === 1L),
-        "vec_id", "embedding", k = 3, numSubspaces = 2, numCentroids = 2,
-        dim = 4, rerank = 10)
+    val rr = flatPq(vecs.filter($"vec_id" === 1L), k = 3, rerank = 10)
       .orderBy("rk").collect()
     assert(rr.map(r => r.getAs[Long]("n_id") -> r.getAs[Double]("dist"))
       .toSeq == Seq(3L -> 164.0, 4L -> 164.0, 2L -> 400.0))
@@ -336,10 +343,9 @@ class PqSpec extends SparkSuite {
     // a bare temp-variable name in doGenCode would collide when the same
     // kernel appears twice in one generated-method scope and silently
     // fall the stage back to interpreted mode
-    import org.apache.spark.sql.graft.ColumnBridge
     val model = Similarity.pqTrain(vecs, "vec_id", "embedding",
       numSubspaces = 2, numCentroids = 2, dim = 4)
-    val enc = Similarity.pqEncode(vecs, "vec_id", "embedding", model)
+    val enc = encode(vecs, model)
       .join(vecs.select($"vec_id".as("n_id"),
         $"embedding".cast("array<double>").as("q_vec")), "n_id")
     def adc = ColumnBridge.column(graft.functions.PqAdcL2Sq(

@@ -74,24 +74,6 @@ class SimilarityPropertySpec extends SparkSuite {
     }
   }
 
-  test("knnTwoStage with a full-width candidate pool degrades to brute force") {
-    forAll(genVecs, iters = 6) { corpus =>
-      if (corpus.length >= 4) {
-        val df = corpus.toDF("vec_id", "embedding")
-        val queries = corpus.take(2).toDF("vec_id", "embedding")
-        val dim = corpus.head._2.length
-        val brute = Similarity.knnBruteForce(df, queries, "vec_id",
-            "embedding", k = 3)
-          .select("q_id", "rk", "n_id").collect().map(_.toSeq).toSet
-        val two = Similarity.knnTwoStage(df, queries, "vec_id", "embedding",
-            k = 3, candidates = corpus.length, inDim = dim,
-            outDim = math.max(2, dim - 1))
-          .select("q_id", "rk", "n_id").collect().map(_.toSeq).toSet
-        assert(two == brute)
-      }
-    }
-  }
-
   test("assignToCentroids: every vector assigned to its argmax centroid") {
     forAll(genVecs, iters = 6) { corpus =>
       if (corpus.length >= 4) {
@@ -137,9 +119,11 @@ class SimilarityPropertySpec extends SparkSuite {
               .sortBy { case (nid, d) => (d, nid) }.take(k).map(_._1).toSet
           }.toMap
           def recallAt(rerank: Int): Double = {
-            val got = Similarity.knnPq(df, queries, "vec_id", "embedding",
-                k = k, numSubspaces = 2, numCentroids = math.min(4, corpus.length),
-                dim = dim, rerank = rerank)
+            // flat PQ: one coarse list, one probe
+            val got = Similarity.ivfPqSearch(df, queries, "vec_id",
+                "embedding", k = k, numCentroids = 1, nProbe = 1,
+                numSubspaces = 2, pqCentroids = math.min(4, corpus.length),
+                dim = dim, residual = false, rerank = rerank)
               .collect().groupBy(_.getAs[Long]("q_id"))
               .view.mapValues(_.map(_.getAs[Long]("n_id")).toSet).toMap
             truth.map { case (q, t) =>

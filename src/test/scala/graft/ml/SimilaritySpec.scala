@@ -313,6 +313,9 @@ class SimilaritySpec extends SparkSuite {
 
   test("projectionMatrix rows are pairwise distinct and near-orthogonal") {
     val m = Similarity.projectionMatrix(64, 16)
+    assert(m.length == 16 && m.forall(_.length == 64))
+    assert(m.flatten.forall(v => v == 1.0 || v == -1.0))
+    assert(m == Similarity.projectionMatrix(64, 16)) // reproducible
     // all rows distinct — a rank-collapsed matrix voids the JL property
     assert(m.distinct.length == 16)
     // pairwise |dot| far below inDim: random ±1 rows concentrate around
@@ -324,46 +327,6 @@ class SimilaritySpec extends SparkSuite {
     // column balance: signs split roughly evenly overall
     val total = m.flatten.sum
     assert(math.abs(total) <= 128.0)
-  }
-
-  test("randomProject: deterministic ±1 JL projection preserves clusters") {
-    val m = Similarity.projectionMatrix(64, 16)
-    assert(m.length == 16 && m.forall(_.length == 64))
-    assert(m.flatten.forall(v => v == 1.0 || v == -1.0))
-    assert(m == Similarity.projectionMatrix(64, 16)) // reproducible
-    // two tight clusters in 64-d stay separated after 64→16 projection
-    val vecs = (0 until 20).map { i =>
-      val base = Array.tabulate(64)(d =>
-        if ((d < 32) == (i % 2 == 0)) 1.0f + 0.01f * i * (d % 3) else 0.001f * d)
-      (i.toLong, base)
-    }.toDF("vec_id", "embedding")
-    val queries = vecs.filter(col("vec_id") < 2)
-    val proj = Similarity.knnProjected(vecs, queries, "vec_id", "embedding",
-        k = 5, inDim = 64, outDim = 16)
-      .select("q_id", "n_id").as[(Long, Long)].collect()
-    assert(proj.nonEmpty)
-    assert(proj.forall { case (q, n) => (q % 2) == (n % 2) })
-  }
-
-  test("knnTwoStage with a full candidate pool equals exact brute force") {
-    val vecs = (0 until 30).map { i =>
-      (i.toLong, Array.tabulate(64)(d => ((i * 7 + d * 3) % 13 - 6) * 0.25f))
-    }.toDF("vec_id", "embedding")
-    val queries = vecs.filter(col("vec_id") < 3)
-    val exact = Similarity.knnBruteForce(vecs, queries, "vec_id", "embedding",
-        k = 5).select("q_id", "n_id", "rk")
-      .as[(Long, Long, Int)].collect().toSet
-    // candidates = corpus size - 1: stage 1 keeps everything, so stage 2
-    // IS the exact ranking
-    val full = Similarity.knnTwoStage(vecs, queries, "vec_id", "embedding",
-        k = 5, candidates = 29, inDim = 64, outDim = 16)
-      .select("q_id", "n_id", "rk").as[(Long, Long, Int)].collect().toSet
-    assert(full == exact)
-    // a small pool still returns k rows per query, ranked deterministically
-    val narrow = Similarity.knnTwoStage(vecs, queries, "vec_id", "embedding",
-        k = 5, candidates = 8, inDim = 64, outDim = 16)
-      .select("q_id", "n_id", "rk").as[(Long, Long, Int)].collect()
-    assert(narrow.groupBy(_._1).forall(_._2.length == 5))
   }
 
   test("knnQuantized ranks like exact knn on well-separated vectors") {
@@ -439,24 +402,6 @@ class SimilaritySpec extends SparkSuite {
       Similarity.quantizeInt8(col("embedding")).as("k"),
       columnForm(col("embedding")).as("c")).collect()
     rows.foreach(r => assert(r.getSeq[Double](0) == r.getSeq[Double](1)))
-  }
-
-  test("MatVecProject kernel is bit-identical to per-row dot expressions") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7L)
-    val inDim = 12; val outDim = 5
-    val m = Similarity.projectionMatrix(inDim, outDim)
-    val vecs = (1L to 30L).map(i =>
-        (i, Array.fill(inDim)((rnd.nextFloat() - 0.5f) * 2f)))
-      .toDF("vec_id", "embedding")
-    val columnForm = array(m.map(row =>
-      Similarity.dot(col("embedding"), lit(row.toArray))): _*)
-    val rows = vecs.select(
-      Similarity.randomProject(col("embedding"), inDim, outDim).as("k"),
-      columnForm.as("c")).collect()
-    rows.foreach { r =>
-      assert(r.getSeq[Double](0) == r.getSeq[Double](1))
-    }
   }
 
   test("SignBandKeys kernel is bit-identical to the per-bit dot formulation") {
@@ -567,8 +512,6 @@ class SimilaritySpec extends SparkSuite {
       "embedding", 3)) == 2L)
     assert(top1(Similarity.knnQuantized(withDead, q, "vec_id",
       "embedding", 3)) == 2L)
-    assert(top1(Similarity.knnTwoStage(withDead, q, "vec_id", "embedding",
-      k = 3, candidates = 5, inDim = 3, outDim = 2)) == 2L)
     // the dead vector still appears — ranked LAST with the sentinel score
     val all = Similarity.knnBruteForce(withDead, q, "vec_id", "embedding", 4)
       .orderBy("rk").collect()

@@ -15,12 +15,15 @@ import org.apache.spark.sql.functions._
   * (`src/query/stream_schema_provider.rs:1032-1137`).
   *
   * Spark-first shape: the catalog is itself a small parquet table (one row
-  * per data file), read on the driver at plan time to produce the pruned
-  * file list passed to `spark.read.parquet(files:_*)`. At 100 TB / millions
-  * of files this stays cheap because stats rows are tiny and the catalog
-  * read is a single-column-predicate scan; Spark never opens data-file
-  * footers that the catalog already excluded — the same file-skip economics
-  * as the reference's manifest, Delta's data skipping, or Iceberg manifests.
+  * per data file), consulted at plan time to produce the pruned file list.
+  * A [[TxnCatalog]] version of at most
+  * [[graft.plans.StatsFileIndex.DefaultMaxDriverRows]] rows is held on the
+  * driver, so [[resolve]], pruning and [[countStar]] over it run no Spark
+  * job; a larger one, or a plain parquet-dir catalog, is read as a parquet
+  * table (a single-column-predicate scan). Each commit still writes the
+  * whole next snapshot. Spark never opens data-file footers that the
+  * catalog already excluded — the same file-skip economics as the
+  * reference's manifest, Delta's data skipping, or Iceberg manifests.
   *
   * Statistics follow the reference's 4-variant TypedStatistics (Bool, Int64,
   * Float64, Utf8; `column.rs:54-59`): min/max are stored as strings with a
@@ -42,11 +45,15 @@ object StatsCatalog {
     statAgg(spark.read.parquet(tableRoot), statCols)
 
   /** As [[collect]] over an explicit file list (incremental refresh path —
-    * only the named files are scanned).
+    * only the named files are scanned). The read schema is the footer of
+    * the first path in sorted order, the file Spark's own inference would
+    * open, read on the driver instead of by an inference job.
     */
   def collectFiles(spark: SparkSession, paths: Seq[String],
                    statCols: Seq[String]): DataFrame =
-    statAgg(spark.read.parquet(paths: _*), statCols)
+    statAgg(spark.read
+      .schema(graft.plans.StatsFileIndex.footerSchema(spark, paths.min))
+      .parquet(paths: _*), statCols)
 
   /** Per-file stats aggregation. A stat column ABSENT from the scanned
     * schema (schema drift: files written before the column existed, or by
@@ -101,7 +108,8 @@ object StatsCatalog {
     */
   /** Load a catalog from either layout: a plain parquet dir, or a
     * [[TxnCatalog]] root (detected by `_commits/`) — in which case the
-    * latest committed snapshot is read.
+    * latest committed snapshot is returned: a driver-resident
+    * `LocalRelation` frame when the version is held, else its parquet dir.
     */
   def resolve(spark: SparkSession, catalogPath: String): DataFrame =
     if (java.nio.file.Files.isDirectory(
@@ -247,7 +255,15 @@ object StatsCatalog {
   def countStar(spark: SparkSession, catalogPath: String): Long =
     countStar(spark, resolve(spark, catalogPath))
 
-  /** As above over a loaded stats frame (e.g. a pinned TxnCatalog snapshot). */
+  /** As above over a loaded stats frame (e.g. a pinned TxnCatalog snapshot).
+    * A resident snapshot is summed on the driver.
+    */
   def countStar(spark: SparkSession, cat: DataFrame): Long =
-    cat.agg(sum(col("num_rows"))).collect()(0).getLong(0)
+    TxnCatalog.residentOf(cat) match {
+      case Some(s) => s.derived[java.lang.Long]("count-star") {
+        cat.select(col("num_rows").cast("long")).collect()
+          .iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).sum
+      }
+      case None => cat.agg(sum(col("num_rows"))).collect()(0).getLong(0)
+    }
 }

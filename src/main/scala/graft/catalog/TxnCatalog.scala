@@ -2,9 +2,19 @@ package graft.catalog
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{StringType, StructType}
+
+import graft.plans.StatsFileIndex
 
 /** Versioned, atomically-committed stats catalog — the transaction-log
   * layer over [[StatsCatalog]]'s per-file statistics table.
@@ -30,55 +40,240 @@ import org.apache.spark.sql.functions._
   *   - readers pin a version for their whole operation → snapshot isolation
   *     (a concurrent compaction can't make a query's file list dangle).
   *
-  * Scale note: snapshots are stats rows (one per data file) — small even at
-  * millions of files — and time travel is free (old versions stay until
-  * [[vacuum]]).
+  * Residency: a committed version of at most
+  * [[StatsFileIndex.DefaultMaxDriverRows]] rows is held on the driver as an
+  * immutable [[Snapshot]], keyed by its writer-unique snapshot dir (never by
+  * N: a catalog deleted and rebuilt from v0 gets new dirs, so it can never
+  * hit stale rows). A writer installs the rows it just committed; any other
+  * version (another process's commit, a pinned old version) is loaded once.
+  * A reader then pays one `_commits` listing plus a marker read, and every
+  * frame it gets is a `LocalRelation` — filtering, projecting or collecting
+  * it launches no Spark job. Larger catalogs stay distributed: their frames
+  * read the snapshot dir, as every frame did before residency.
+  *
+  * Each commit still writes the whole next snapshot (O(catalog) bytes per
+  * version); time travel is free (old versions stay until [[vacuum]]).
   */
 object TxnCatalog {
 
   private def commitsDir(root: String): Path = Paths.get(root, "_commits")
 
-  /** Latest committed version, or None for an empty/uninitialized catalog. */
-  def latestVersion(root: String): Option[Long] = {
+  /** Committed version numbers, from one `_commits` listing. */
+  private def versions(root: String): Seq[Long] = {
     val d = commitsDir(root)
-    if (!Files.isDirectory(d)) None
+    if (!Files.isDirectory(d)) Nil
     else {
-      val vs = Files.list(d).toArray.toSeq
-        .map(p => p.asInstanceOf[Path].getFileName.toString)
-        .flatMap { name =>
-          if (name.endsWith(".json"))
-            scala.util.Try(name.stripSuffix(".json").toLong).toOption
-          else None
-        }
-      if (vs.isEmpty) None else Some(vs.max)
+      val names = Files.list(d)
+      try names.iterator().asScala.toSeq.flatMap { p =>
+        val name = p.getFileName.toString
+        if (name.endsWith(".json"))
+          scala.util.Try(name.stripSuffix(".json").toLong).toOption
+        else None
+      } finally names.close()
     }
   }
 
-  /** The committed snapshot dir for a version (from its marker). */
+  /** Latest committed version, or None for an empty/uninitialized catalog. */
+  def latestVersion(root: String): Option[Long] = versions(root).maxOption
+
+  /** The committed snapshot dir for a version (from its marker), absolute
+    * and normalized: the residency key.
+    */
   private def snapshotDir(root: String, v: Long): Option[String] = {
     val marker = commitsDir(root).resolve(s"$v.json")
-    if (!Files.exists(marker)) None
-    else {
-      val txt = Files.readString(marker)
-      // marker JSON is flat; pull "dir" without a JSON dependency
-      "\"dir\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
-        .map(m => Paths.get(root, m.group(1)).toString)
-    }
+    val txt =
+      try Some(Files.readString(marker))
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    // marker JSON is flat; pull "dir" without a JSON dependency
+    txt.flatMap("\"dir\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(_))
+      .map(m => Paths.get(root, m.group(1)).toAbsolutePath.normalize.toString)
   }
+
+  /** One committed catalog version held on the driver. Immutable: its rows
+    * back every frame handed out for the version, and consumers that
+    * recognize a resident frame ([[residentOf]]) fold over them directly.
+    */
+  final class Snapshot private[catalog] (
+      private[catalog] val root: String,
+      private[catalog] val version: Long,
+      val dir: String,
+      val schema: StructType,
+      committedRows: IndexedSeq[InternalRow]) {
+
+    // a no-op update hands back the base version's payload: keep only its
+    // rows, never a chain of earlier snapshots
+    private val rows = committedRows match {
+      case r: Rows => r.rows
+      case other   => other
+    }
+    private val data = new Rows(this, rows)
+
+    def size: Int = rows.size
+
+    /** A new frame over the rows: a `LocalRelation` (fresh attribute ids,
+      * so two frames of one version self-join cleanly).
+      */
+    def frame(spark: SparkSession): DataFrame =
+      ColumnBridge.ofRows(spark,
+        LocalRelation(DataTypeUtils.toAttributes(schema), data))
+
+    /** The rows as [[StatsFileIndex]] file entries, converted once. */
+    lazy val files: Seq[StatsFileIndex.FileRow] = {
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      StatsFileIndex.fileRows(schema,
+        rows.map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]))
+    }
+
+    private val derivedValues = new ConcurrentHashMap[String, AnyRef]()
+
+    /** A value derived from the rows alone (a fold, a projection), computed
+      * once per snapshot under `key`.
+      */
+    def derived[T <: AnyRef](key: String)(compute: => T): T =
+      derivedValues.computeIfAbsent(key, _ => compute).asInstanceOf[T]
+
+    /** `file_path` of the first row, the file [[dataSchema]] reads. */
+    private def firstPath: Option[String] =
+      Option(schema.fieldNames.indexOf("file_path")).filter(_ >= 0)
+        .filter(i => schema(i).dataType == StringType && rows.nonEmpty &&
+          !rows.head.isNullAt(i))
+        .map(i => rows.head.getUTF8String(i).toString)
+
+    /** Data schema of the first cataloged file, from its footer, read on
+      * the driver once per snapshot.
+      */
+    def dataSchema(spark: SparkSession): Option[StructType] =
+      derived("data-schema")(firstPath.map(StatsFileIndex.footerSchema(spark, _)))
+  }
+
+  /** LocalRelation payload that remembers its [[Snapshot]]. */
+  private final class Rows(val snapshot: Snapshot, val rows: IndexedSeq[InternalRow])
+      extends scala.collection.immutable.IndexedSeq[InternalRow] {
+    def apply(i: Int): InternalRow = rows(i)
+    def length: Int = rows.length
+  }
+
+  private val resident = new ConcurrentHashMap[String, Snapshot]()
+
+  /** The resident snapshot behind a frame from [[snapshot]], if it has one
+    * (the frame itself, not a query over it).
+    */
+  def residentOf(df: DataFrame): Option[Snapshot] =
+    ColumnBridge.logicalPlan(df) match {
+      case l: LocalRelation => l.data match {
+        case d: Rows => Some(d.snapshot)
+        case _       => None
+      }
+      case _ => None
+    }
+
+  /** Versions of the catalog at `root` currently held on the driver. */
+  private[catalog] def residentVersions(root: String): Seq[Long] = {
+    val key = rootKey(root)
+    resident.values().asScala.filter(_.root == key).map(_.version).toSeq.sorted
+  }
+
+  /** Whether a catalog of `rows` rows is held on the driver. */
+  private def holdable(rows: Long): Boolean =
+    rows <= StatsFileIndex.DefaultMaxDriverRows
+
+  /** Hold `s`, dropping older versions of its catalog and any version
+    * whose dir is gone (a deleted, or deleted and rebuilt, catalog).
+    */
+  private def install(s: Snapshot): Snapshot = {
+    resident.put(s.dir, s)
+    resident.values().removeIf(o => o.dir != s.dir &&
+      ((o.root == s.root && o.version < s.version) ||
+        !Files.isDirectory(Paths.get(o.dir))))
+    s
+  }
+
+  private def rootKey(root: String): String =
+    Paths.get(root).toAbsolutePath.normalize.toString
+
+  /** The parquet data files of a snapshot dir, in the sorted order Spark's
+    * schema inference uses.
+    */
+  private def partFiles(dir: String): Seq[String] = {
+    val parts =
+      try Files.list(Paths.get(dir))
+      catch {
+        // vacuumed under a pinned reader: the parquet read of the dir
+        // fails fast with PATH_NOT_FOUND
+        case _: java.nio.file.NoSuchFileException => return Nil
+      }
+    try parts.iterator().asScala.map(_.toUri.toString)
+      .filter(u => u.endsWith(".parquet") &&
+        !u.substring(u.lastIndexOf('/') + 1).matches("[_.].*"))
+      .toSeq.sorted
+    finally parts.close()
+  }
+
+  /** Rows in parquet files, from their footers (no Spark job). */
+  private def footerRowCount(spark: SparkSession, files: Seq[String]): Long =
+    files.map { f =>
+      org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark.sparkContext.hadoopConfiguration, new org.apache.hadoop.fs.Path(f),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
+
+  /** The frame of version `v`: resident rows when held (loading them once
+    * if this JVM did not commit the version), else the snapshot dir. Both
+    * take the schema from a footer read on the driver, not an inference job.
+    */
+  private def load(spark: SparkSession, root: String,
+                   v: Long): Option[DataFrame] =
+    snapshotDir(root, v).map { dir =>
+      Option(resident.get(dir)) match {
+        case Some(s) => s.frame(spark)
+        case None =>
+          val parts = partFiles(dir)
+          val df = parts.headOption
+            .fold(spark.read)(f =>
+              spark.read.schema(StatsFileIndex.footerSchema(spark, f)))
+            .parquet(dir)
+          if (!holdable(footerRowCount(spark, parts))) df
+          else {
+            val toRow = CatalystTypeConverters.createToCatalystConverter(df.schema)
+            install(new Snapshot(rootKey(root), v, dir, df.schema,
+              df.collect().map(r => toRow(r).asInstanceOf[InternalRow])
+                .toIndexedSeq)).frame(spark)
+          }
+      }
+    }
 
   /** Read a snapshot: the given version, or the latest committed one.
     * None if the catalog has no commits yet.
     */
   def snapshot(spark: SparkSession, root: String,
                version: Option[Long] = None): Option[DataFrame] =
-    version.orElse(latestVersion(root))
-      .flatMap(v => snapshotDir(root, v))
-      .map(spark.read.parquet(_))
+    version.orElse(latestVersion(root)).flatMap(load(spark, root, _))
+
+  /** The rows of a frame computable on the driver alone: its optimized
+    * plan is local data (a resident frame filtered or projected, or a union
+    * of such). None when producing it needs a Spark job.
+    */
+  private def driverRows(df: DataFrame): Option[IndexedSeq[InternalRow]] = {
+    def local(p: LogicalPlan): Option[Seq[InternalRow]] = p match {
+      case l: LocalRelation => Some(l.data)
+      case u: Union =>
+        val parts = u.children.map(local)
+        if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
+      case _ => None
+    }
+    local(ColumnBridge.optimizedPlan(df)).map(_.toIndexedSeq)
+  }
 
   /** Atomically commit `update(current)` as the next version. The update
     * function is re-applied on conflict (optimistic concurrency), so it must
     * be a pure function of the current snapshot. Returns the committed
     * version number.
+    *
+    * When the update is driver work over a resident version (a filter, a
+    * union with collected rows), the next snapshot is written from those
+    * rows and installed as resident (write-through); otherwise it is
+    * written by a distributed job and loaded by its first reader.
     */
   def commit(spark: SparkSession, root: String, maxRetries: Int = 10)(
       update: Option[DataFrame] => DataFrame): Long = {
@@ -86,11 +281,13 @@ object TxnCatalog {
     while (true) {
       val base = latestVersion(root)
       val next = base.getOrElse(-1L) + 1
-      val updated = update(snapshot(spark, root, base))
+      val current = base.flatMap(load(spark, root, _))
+      val updated = update(current)
+      val held = driverRows(updated).filter(r => holdable(r.size.toLong))
       // writer-unique snapshot data, invisible until the marker lands
-      val dirName = f"v$next%06d-${UUID.randomUUID().toString.take(8)}"
-      updated.coalesce(1).write.mode("overwrite")
-        .parquet(Paths.get(root, dirName).toString)
+      val dirName = f"v$next%06d-${UUID.randomUUID()}"
+      val dir = Paths.get(root, dirName).toAbsolutePath.normalize
+      updated.coalesce(1).write.mode("overwrite").parquet(dir.toString)
       Files.createDirectories(commitsDir(root))
       val tmp = Files.createTempFile(commitsDir(root), s".v$next-", ".tmp")
       Files.writeString(tmp,
@@ -98,6 +295,8 @@ object TxnCatalog {
       try {
         Files.createLink(commitsDir(root).resolve(s"$next.json"), tmp)
         Files.deleteIfExists(tmp)
+        held.foreach(rows => install(new Snapshot(rootKey(root), next,
+          dir.toString, ColumnBridge.asNullable(updated.schema), rows)))
         return next
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
@@ -105,7 +304,7 @@ object TxnCatalog {
           // dir is invisible (no marker references it); clean it up and
           // re-apply on top of the new latest
           Files.deleteIfExists(tmp)
-          deleteRecursively(Paths.get(root, dirName))
+          deleteRecursively(dir)
           attempt += 1
           if (attempt > maxRetries)
             throw new IllegalStateException(
@@ -113,6 +312,31 @@ object TxnCatalog {
       }
     }
     -1L // unreachable
+  }
+
+  /** `keep(current)` plus stats rows for the `fresh` data files. When the
+    * result stays resident, the fresh stats are collected here (their only
+    * Spark jobs), so [[commit]] writes the next version from driver rows.
+    */
+  private def withFreshStats(spark: SparkSession, current: Option[DataFrame],
+                             fresh: Seq[String], tableRoot: String,
+                             statCols: Seq[String],
+                             keep: DataFrame => DataFrame = identity): DataFrame = {
+    val kept = current.map(keep)
+    val freshStats =
+      if (fresh.isEmpty)
+        kept.getOrElse(
+          StatsCatalog.collect(spark, tableRoot, statCols).limit(0))
+          .limit(0)
+      else {
+        val stats = StatsCatalog.collectFiles(spark, fresh, statCols)
+        val base = current.map(c => residentOf(c).map(_.size.toLong))
+        if (base.forall(_.exists(n => holdable(n + fresh.size))))
+          spark.createDataFrame(stats.collect().toSeq.asJava, stats.schema)
+        else stats
+      }
+    kept.map(_.unionByName(freshStats, allowMissingColumns = true))
+      .getOrElse(freshStats)
   }
 
   /** Incremental stats refresh: compute [[StatsCatalog]] rows ONLY for data
@@ -128,16 +352,8 @@ object TxnCatalog {
       val known: Set[String] = current
         .map(_.select("file_path").collect().map(_.getString(0)).toSet)
         .getOrElse(Set.empty)
-      val onDisk = listParquet(Paths.get(tableRoot))
-      val fresh = onDisk.filterNot(p => known.contains(p))
-      val freshStats =
-        if (fresh.isEmpty)
-          current.getOrElse(
-            StatsCatalog.collect(spark, tableRoot, statCols).limit(0))
-            .limit(0)
-        else StatsCatalog.collectFiles(spark, fresh, statCols)
-      current.map(_.unionByName(freshStats, allowMissingColumns = true))
-        .getOrElse(freshStats)
+      val fresh = listParquet(Paths.get(tableRoot)).filterNot(known.contains)
+      withFreshStats(spark, current, fresh, tableRoot, statCols)
     }
 
   /** [[appendNewFiles]] with partition-watermark discovery: instead of
@@ -146,6 +362,9 @@ object TxnCatalog {
     * listed — O(new partitions + files in the newest partition), not
     * O(table). With date-encoded partition names (`date=YYYY-MM-DD/…`, the
     * ingest layout) lexical order IS time order.
+    *
+    * A resident catalog yields its watermark and the watermark partition's
+    * known paths on the driver; a distributed one computes both in Spark.
     *
     * Assumes partitions arrive in non-decreasing order (true for the
     * arrival-time-derived ingest path). For out-of-order backfill into old
@@ -163,18 +382,23 @@ object TxnCatalog {
         val slash = rel.indexOf('/')
         if (slash < 0) "" else rel.substring(0, slash)
       }
-      val watermark: Option[String] =
-        current.flatMap(c => partitionWatermark(c, tableUri))
-      val fresh = watermark match {
-        case None => listParquet(Paths.get(tableRoot)) // empty catalog: full list
-        case Some(wm) =>
+      // (watermark, known files of the watermark partition)
+      val known: Option[(String, Set[String])] = current.flatMap { c =>
+        if (residentOf(c).isDefined) {
+          val parts = c.select("file_path").collect()
+            .map(r => r.getString(0)).groupBy(partOf)
+          parts.keys.maxOption.map(wm => wm -> parts(wm).toSet)
+        } else
           // only the known files of the single watermark partition are
           // needed for the diff — filtered in Spark, so the driver only
           // materializes one partition's paths, never the whole catalog
-          val knownInWm: Set[String] = current
-            .map(_.filter(partitionOfExpr(tableUri) === wm)
+          partitionWatermark(c, tableUri).map(wm => wm ->
+            c.filter(partitionOfExpr(tableUri) === wm)
               .select("file_path").collect().map(_.getString(0)).toSet)
-            .getOrElse(Set.empty)
+      }
+      val fresh = known match {
+        case None => listParquet(Paths.get(tableRoot)) // empty catalog: full list
+        case Some((wm, knownInWm)) =>
           val dirs = Files.list(Paths.get(tableRoot)).toArray.toSeq
             .map(_.asInstanceOf[Path])
             .filter(p => Files.isDirectory(p) &&
@@ -182,14 +406,7 @@ object TxnCatalog {
           dirs.flatMap(d => listParquet(d))
             .filterNot(p => partOf(p) < wm || knownInWm.contains(p))
       }
-      val freshStats =
-        if (fresh.isEmpty)
-          current.getOrElse(
-            StatsCatalog.collect(spark, tableRoot, statCols).limit(0))
-            .limit(0)
-        else StatsCatalog.collectFiles(spark, fresh, statCols)
-      current.map(_.unionByName(freshStats, allowMissingColumns = true))
-        .getOrElse(freshStats)
+      withFreshStats(spark, current, fresh, tableRoot, statCols)
     }
 
   /** Top-level partition of a cataloged `file_path` as a Spark expression:
@@ -203,12 +420,10 @@ object TxnCatalog {
     when(rel.contains("/"), substring_index(rel, "/", 1)).otherwise(lit(""))
   }
 
-  /** Highest cataloged partition, computed as a single-row `max` aggregate —
-    * the driver fetches ONE row regardless of catalog size. (The previous
-    * shape collected every `file_path` to the driver per ingest append:
-    * O(total files) driver memory — hundreds of MB of strings at ~10⁶
-    * files.) Partition names on the ingest path are ASCII (`date=…`), where
-    * Spark's UTF-8 binary string max and the JVM's lexical max agree.
+  /** Highest cataloged partition of a distributed catalog, computed as a
+    * single-row `max` aggregate — the driver fetches ONE row regardless of
+    * catalog size. Partition names on the ingest path are ASCII (`date=…`),
+    * where Spark's UTF-8 binary string max and the JVM's lexical max agree.
     */
   private[catalog] def partitionWatermark(snapshot: DataFrame,
                                           tableUri: String): Option[String] = {
@@ -232,15 +447,10 @@ object TxnCatalog {
         .map(_.select("file_path").collect().map(_.getString(0)).toSet)
         .getOrElse(Set.empty)
       val fresh = onDisk.filterNot(known.contains)
-      val kept = current.map(_.filter(col("file_path").isInCollection(
-        // isin over a big list builds a wide predicate; for catalog-sized
-        // row counts this is fine (driver-bounded metadata)
-        onDiskSet))).getOrElse(
-        StatsCatalog.collect(spark, tableRoot, statCols).limit(0))
-      if (fresh.isEmpty) kept
-      else kept.unionByName(
-        StatsCatalog.collectFiles(spark, fresh, statCols),
-        allowMissingColumns = true)
+      // isin over a big list builds a wide predicate; for catalog-sized
+      // row counts this is fine (driver-bounded metadata)
+      withFreshStats(spark, current, fresh, tableRoot, statCols,
+        keep = _.filter(col("file_path").isInCollection(onDiskSet)))
     }
 
   /** Recursive parquet listing as `file:`-scheme URIs (matching the
@@ -271,21 +481,20 @@ object TxnCatalog {
         .getOrElse(added)
     }
 
-  /** Drop versions older than the latest `keep` (marker first, then data:
+  /** Drop every version but the latest `keep` (marker first, then data:
     * a version without a marker is invisible, so readers can't pick up a
     * half-deleted snapshot; readers already pinned to it fail fast — run
-    * vacuum outside query windows).
+    * vacuum outside query windows). One `_commits` listing, whatever the
+    * version numbers: cost follows the versions present, not their range.
     */
-  def vacuum(root: String, keep: Int = 2): Unit = {
-    val latest = latestVersion(root).getOrElse(return)
-    val cutoff = latest - keep + 1
-    (0L until cutoff).foreach { v =>
+  def vacuum(root: String, keep: Int = 2): Unit =
+    versions(root).sorted(Ordering[Long].reverse).drop(keep).foreach { v =>
       snapshotDir(root, v).foreach { dir =>
         Files.deleteIfExists(commitsDir(root).resolve(s"$v.json"))
+        resident.remove(dir)
         deleteRecursively(Paths.get(dir))
       }
     }
-  }
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {

@@ -28,6 +28,18 @@ object ColumnBridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
 
+  /** The optimized logical plan behind a DataFrame. */
+  def optimizedPlan(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.optimizedPlan
+
+  /** `schema` with every field nullable, as a file read reports it
+    * (`StructType.asNullable` is `private[spark]`).
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Spark's own WRONG_NUM_ARGS AnalysisException
     * (`QueryCompilationErrors.wrongNumArgsError` is `private[sql]`) — so
     * function-builder arity failures surface exactly like builtin ones.

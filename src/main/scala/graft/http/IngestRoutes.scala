@@ -236,9 +236,11 @@ private[http] trait IngestRoutes { self: GraftHttpServer =>
       // the catalog once it exists — on failure, drop it entirely so
       // readers fall back to full listing (correct, just slower); the next
       // successful sync rebuilds it. The hot path is the transaction log's
-      // watermarked append: O(new partitions) listed per ingest, one
-      // atomic catalog version appended — never a full relist or a
-      // full-catalog rewrite (the economics that survive 100 TB).
+      // watermarked append: O(new partitions) listed per ingest and stats
+      // computed for the new files only, then one atomic catalog version
+      // committed. That version is still a full snapshot rewrite
+      // (O(catalog) bytes), written from driver rows when the catalog is
+      // resident.
       try {
         // z-ordered streams record min/max for the clustered dims too —
         // that's what lets StatsFileIndex prune a user's box predicate

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StructType
 
-import graft.catalog.StatsCatalog
+import graft.catalog.{StatsCatalog, TxnCatalog}
 
 /** Catalog-pruned scans inside Spark's own scan machinery: a custom
   * [[FileIndex]] that answers `listFiles` from the per-file stats catalog,
@@ -30,14 +30,17 @@ import graft.catalog.StatsCatalog
   * millions of objects is the difference between planning in milliseconds
   * and planning in minutes.
   *
-  * Catalog residency (the Delta-log-replay concern): a catalog up to
-  * `maxDriverRows` is collected once and pruned on the driver (fastest for
-  * the common case); beyond that the catalog DATAFRAME becomes the source
-  * of truth — `listFiles` runs the SAME `mayMatch` predicate as a
-  * distributed filter over the catalog and collects ONLY the surviving
-  * rows, and `sizeInBytes`/`rootPaths` come from tiny aggregates. A 10M-file
-  * catalog thus never materializes on the driver; what comes back is
-  * bounded by the query's own pruning (e.g. its time window).
+  * Catalog residency (the Delta-log-replay concern): a [[TxnCatalog]]
+  * frame of a resident version (at most [[StatsFileIndex.DefaultMaxDriverRows]]
+  * rows, decided once per version by [[TxnCatalog]]) brings its file
+  * entries with it — pruning runs on the driver with no Spark job. Any
+  * other frame up to `maxDriverRows` is collected once and pruned on the
+  * driver; beyond that the catalog DATAFRAME becomes the source of truth —
+  * `listFiles` runs the SAME `mayMatch` predicate as a distributed filter
+  * over the catalog and collects ONLY the surviving rows, and
+  * `sizeInBytes`/`rootPaths` come from tiny aggregates. A 10M-file catalog
+  * thus never materializes on the driver; what comes back is bounded by
+  * the query's own pruning (e.g. its time window).
   */
 final class StatsFileIndex(
     spark: SparkSession,
@@ -49,11 +52,15 @@ final class StatsFileIndex(
     * distributed.
     */
   private lazy val cached: Option[Seq[StatsFileIndex.FileRow]] =
-    // clamp: a cap near Long.MaxValue must not overflow the Int limit arg
-    if (cat.limit(math.min(maxDriverRows + 1, Int.MaxValue.toLong).toInt)
-          .count() <= maxDriverRows)
-      Some(StatsFileIndex.loadRows(cat))
-    else None
+    TxnCatalog.residentOf(cat) match {
+      case Some(s) => Option.when(s.size <= maxDriverRows)(s.files)
+      case None =>
+        // clamp: a cap near Long.MaxValue must not overflow the Int limit arg
+        if (cat.limit(math.min(maxDriverRows + 1, Int.MaxValue.toLong).toInt)
+              .count() <= maxDriverRows)
+          Some(StatsFileIndex.loadRows(cat))
+        else None
+    }
 
   // tiny aggregates (one short job each, cached) — never the full row set
   private lazy val totalBytes: Long = cached match {
@@ -168,14 +175,35 @@ object StatsFileIndex {
     * Collects the WHOLE catalog — callers above the
     * [[DefaultMaxDriverRows]] residency class use [[prunedRows]] instead.
     */
-  def loadRows(cat: DataFrame): Seq[FileRow] = {
-    val statCols = cat.columns.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-    cat.collect().map { r =>
+  def loadRows(cat: DataFrame): Seq[FileRow] =
+    fileRows(cat.schema, cat.collect().toSeq)
+
+  /** Catalog rows of `schema` as file entries. */
+  def fileRows(schema: StructType, rows: Seq[Row]): Seq[FileRow] = {
+    val statCols = schema.fieldNames.filter(_.startsWith("min_"))
+      .map(_.stripPrefix("min_"))
+    rows.map { r =>
       val mm = statCols.map { c =>
         c -> (r.getAs[String](s"min_$c"), r.getAs[String](s"max_$c"))
       }.toMap
       FileRow(r.getAs[String]("file_path"), r.getAs[Long]("file_size"), mm)
-    }.toSeq
+    }
+  }
+
+  /** A parquet file's data schema from its footer, read on the driver: the
+    * schema `spark.read.parquet(file).schema` infers, without the
+    * inference job.
+    */
+  def footerSchema(spark: SparkSession, file: String): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+    val path = new Path(file)
+    val meta = ParquetFileReader.readFooter(spark.sessionState.newHadoopConf(),
+      path, ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ColumnBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(path, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
 
   /** Distributed catalog pruning: the EXACT [[mayMatch]] predicate runs
@@ -209,8 +237,9 @@ object StatsFileIndex {
   }
 
   /** A DataFrame over the cataloged files with stats-based file skipping
-    * wired into the scan. `schema` comes from one surviving file's footer
-    * (or pass explicitly for schema-evolved tables).
+    * wired into the scan. `schema` comes from the first cataloged file's
+    * footer, read on the driver and kept with a resident snapshot (or pass
+    * it explicitly for schema-evolved tables).
     *
     * `bucketBy = Some((n, cols))` declares the files as Spark-bucketed
     * (they must have been WRITTEN by Spark's bucketed writer — the bucket
@@ -261,14 +290,16 @@ object StatsFileIndex {
         }
     }
     val index = new StatsFileIndex(spark, cat)
-    val dataSchema = schema.getOrElse {
-      // one file's footer is enough (streams share a write schema; pass
-      // `schema` explicitly for schema-evolved tables) — never list every
-      // cataloged path into one read
-      val first = cat.select("file_path").limit(1).collect()
-      require(first.nonEmpty, "empty stats catalog and no explicit schema")
-      spark.read.parquet(first(0).getString(0)).schema
-    }
+    // one file's footer is enough (streams share a write schema; pass
+    // `schema` explicitly for schema-evolved tables) — never list every
+    // cataloged path into one read. A resident snapshot keeps it.
+    val dataSchema = schema
+      .orElse(TxnCatalog.residentOf(cat).flatMap(_.dataSchema(spark)))
+      .getOrElse {
+        val first = cat.select("file_path").limit(1).collect()
+        require(first.nonEmpty, "empty stats catalog and no explicit schema")
+        footerSchema(spark, first(0).getString(0))
+      }
     val bs = bucketBy.map { case (n, cols) =>
       org.apache.spark.sql.catalyst.catalog.BucketSpec(n, cols, Nil) }
     val relation = HadoopFsRelation(index, new StructType(), dataSchema,

@@ -93,7 +93,8 @@ object Counts {
     * or carry no time stats) are actually scanned. With minute-partitioned
     * ingest and ≥1-minute bins nearly every file is contained, so a
     * 100 TB histogram costs one tiny catalog aggregate plus a scan of the
-    * handful of boundary files.
+    * handful of boundary files. Over a driver-resident [[graft.catalog.TxnCatalog]]
+    * version the metadata half is a driver fold: no Spark job.
     *
     * Returns sparse `(binIndex, count)` pairs for bins intersecting
     * `[startMs, endMs)`, or `None` when more than `maxStraddlers` files
@@ -110,25 +111,54 @@ object Counts {
       maxStraddlers: Int = 10000): Option[Seq[(Int, Long)]] = {
     val mn = unix_millis(to_timestamp(col(s"min_$timeCol")))
     val mx = unix_millis(to_timestamp(col(s"max_$timeCol")))
-    // no-stats files can hold in-range rows: keep them (as straddlers)
-    val overlap = cat
-      .select(col("file_path"), col("num_rows"), mn.as("mn"), mx.as("mx"))
-      .filter(col("mn").isNull || col("mx").isNull ||
-        (col("mx") >= startMs && col("mn") < endMs))
-      .withColumn("bmin",
-        floor((col("mn") - startMs) / binMillis).cast("int"))
-      .withColumn("bmax",
-        floor((col("mx") - startMs) / binMillis).cast("int"))
-    val contained = col("mn").isNotNull && col("mx").isNotNull &&
-      col("mn") >= startMs && col("mx") < endMs && col("bmin") === col("bmax")
-    // the metadata half: one aggregate over catalog rows, never the data
-    val fromStats = overlap.filter(contained)
-      .groupBy(col("bmin").as("bin"))
-      .agg(sum(col("num_rows")).as("cnt"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq
-    val straddlers = overlap.filter(!contained).select("file_path")
-      .limit(maxStraddlers + 1)
-      .collect().map(_.getString(0)).toSeq
+    val (fromStats, straddlers) = graft.catalog.TxnCatalog.residentOf(cat) match {
+      case Some(snapshot) =>
+        // resident catalog: each file's time span is computed once per
+        // snapshot, then binned on the driver with the same rules as the
+        // Spark plan below (no Spark job)
+        val spans = snapshot.derived(s"time-span:$timeCol:" +
+            cat.sparkSession.conf.get("spark.sql.session.timeZone")) {
+          cat.select(col("file_path"), col("num_rows").cast("long"), mn, mx)
+            .collect()
+        }
+        val stats = Seq.newBuilder[(Int, Long)]
+        val straddling = Seq.newBuilder[String]
+        spans.foreach { r =>
+          if (r.isNullAt(2) || r.isNullAt(3)) straddling += r.getString(0)
+          else {
+            val (lo, hi) = (r.getLong(2), r.getLong(3))
+            if (hi >= startMs && lo < endMs) {
+              val bin = (lo - startMs) / binMillis
+              if (lo >= startMs && hi < endMs &&
+                  bin == (hi - startMs) / binMillis)
+                stats += bin.toInt -> (if (r.isNullAt(1)) 0L else r.getLong(1))
+              else straddling += r.getString(0)
+            }
+          }
+        }
+        (stats.result(), straddling.result().take(maxStraddlers + 1))
+      case None =>
+        // no-stats files can hold in-range rows: keep them (as straddlers)
+        val overlap = cat
+          .select(col("file_path"), col("num_rows"), mn.as("mn"), mx.as("mx"))
+          .filter(col("mn").isNull || col("mx").isNull ||
+            (col("mx") >= startMs && col("mn") < endMs))
+          .withColumn("bmin",
+            floor((col("mn") - startMs) / binMillis).cast("int"))
+          .withColumn("bmax",
+            floor((col("mx") - startMs) / binMillis).cast("int"))
+        val contained = col("mn").isNotNull && col("mx").isNotNull &&
+          col("mn") >= startMs && col("mx") < endMs &&
+          col("bmin") === col("bmax")
+        // the metadata half: one aggregate over catalog rows, never the data
+        (overlap.filter(contained)
+          .groupBy(col("bmin").as("bin"))
+          .agg(sum(col("num_rows")).as("cnt"))
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq,
+          overlap.filter(!contained).select("file_path")
+            .limit(maxStraddlers + 1)
+            .collect().map(_.getString(0)).toSeq)
+    }
     if (straddlers.size > maxStraddlers) return None
     val scanned =
       if (straddlers.isEmpty) Seq.empty[(Int, Long)]

@@ -213,6 +213,31 @@ class TxnCatalogSpec extends SparkSuite {
       Seq(StatsCatalog.Pred("id", StatsCatalog.GtEq, "0"))).nonEmpty)
   }
 
+  test("vacuum keeps exactly the latest `keep` versions present, at high " +
+       "version numbers with gaps") {
+    val root = tmp()
+    val present = Seq(1000000L, 1000001L, 1000003L, 1000004L, 1000007L)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "_commits"))
+    present.foreach { v =>
+      val dir = s"v$v-seed"
+      Seq((s"f$v", 1L)).toDF("file_path", "num_rows")
+        .coalesce(1).write.parquet(s"$root/$dir")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(root, "_commits", s"$v.json"),
+        s"""{"version": $v, "dir": "$dir", "ts": 0}""")
+    }
+    TxnCatalog.vacuum(root, keep = 3)
+    def names(sub: String) = Files.list(java.nio.file.Paths.get(root, sub))
+      .toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+    assert(names("_commits").toSet ==
+      Set("1000003.json", "1000004.json", "1000007.json"))
+    assert(names(".").filter(_.startsWith("v")).toSet ==
+      Set("v1000003-seed", "v1000004-seed", "v1000007-seed"))
+    assert(TxnCatalog.snapshot(spark, root).get
+      .select("file_path").as[String].collect().toSeq == Seq("f1000007"))
+    assert(TxnCatalog.commit(spark, root)(_.get) == 1000008L)
+  }
+
   test("vacuum drops old versions, keeps the latest readable") {
     val root = tmp()
     (0 until 4).foreach { i =>

@@ -3035,7 +3035,7 @@ object SparkEntry {
   /** Day-partitioned copy of the events timestamps + per-file stats
     * catalog — the storage layout `q_counts_density` answers from.
     * One-time: a deployment's ingest path maintains exactly this
-    * (partitioned parquet + synced StatsCatalog); only the stats-answered
+    * (partitioned parquet + synced TxnCatalog); only the stats-answered
     * histogram is the repeated query.
     */
   private def countsDensityBuild(s: SparkSession, dir: String): String = {
@@ -3048,7 +3048,7 @@ object SparkEntry {
       // day dir instead of tasks×days fragments
       .repartition(col("d"))
       .write.partitionBy("d").parquet(s"$base/t")
-    graft.catalog.StatsCatalog.refresh(s, s"$base/t", s"$base/cat",
+    graft.catalog.TxnCatalog.reconcile(s, s"$base/t", s"$base/cat",
       Seq("ts"))
     base
   }

@@ -4,9 +4,10 @@ import java.time.LocalDate
 
 import scala.util.Try
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** Data-lifecycle retention for date-partitioned streams — the reference's
   * retention config and delete task (`src/storage/retention.rs:98-180`
@@ -19,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * between the two steps leaves only unreferenced files, never dangling
   * manifest entries).
   *
-  * All filesystem work goes through the Hadoop `FileSystem` API — the same
+  * All partition work goes through the Hadoop `FileSystem` API — the same
   * abstraction Spark's own writers use — so retention behaves identically
   * on local disk and object stores. Deleting a date partition is O(1)
   * directory removes, never a row-level rewrite: at 100 TB the unit of
@@ -104,48 +105,27 @@ object Retention {
       .sorted
   }
 
-  /** Enforce a delete task: drop expired rows from the stats catalog FIRST
-    * (metadata before data, the reference's ordering), then remove each
-    * expired `date=…` directory. Returns the removed partition names.
+  /** Enforce a delete task: drop expired rows from the stream's
+    * [[TxnCatalog]] FIRST, as one atomic version (metadata before data, the
+    * reference's ordering; readers pinned to older versions stay
+    * consistent), then remove each expired `date=…` directory. A catalog
+    * with no committed version has no rows to drop. Returns the removed
+    * partition names.
     */
   def enforce(spark: SparkSession, tableRoot: String, days: Int,
               today: LocalDate,
               catalogPath: Option[String] = None): Seq[String] = {
     val dates = expiredDates(spark, tableRoot, days, today)
     if (dates.isEmpty) return Seq.empty
-    val conf = spark.sessionState.newHadoopConf()
-    catalogPath.foreach { cp =>
-      val cpPath = new Path(cp)
-      val fs = cpPath.getFileSystem(conf)
-      if (fs.exists(cpPath)) {
-        // keep only catalog rows whose file sits in a surviving partition
-        val doomed = dates.map(d => s"/$d/")
-        val cond = doomed.map(d =>
-          org.apache.spark.sql.functions.col("file_path").contains(d))
-          .reduce(_ || _)
-        if (fs.exists(new Path(cp, "_commits"))) {
-          // transaction-log layout: drop the doomed rows as one atomic
-          // version — readers pinned to older versions stay consistent.
-          // A _commits dir with no committed version (half-initialized
-          // catalog) has no rows to drop — don't let cur.get throw and
-          // block the partition deletes below forever.
-          if (TxnCatalog.latestVersion(cp).nonEmpty) {
-            // cur is Some by the guard above (vacuum always keeps the
-            // latest version, so it cannot vanish mid-commit)
-            TxnCatalog.commit(spark, cp)(cur => cur.get.filter(!cond))
-            ()
-          }
-        } else {
-          val kept = spark.read.parquet(cp).filter(!cond)
-          val tmp = s"$cp.retention.tmp"
-          kept.write.mode("overwrite").parquet(tmp)
-          fs.delete(cpPath, true)
-          fs.rename(new Path(tmp), cpPath)
-          ()
-        }
-      }
+    catalogPath.filter(TxnCatalog.latestVersion(_).nonEmpty).foreach { cp =>
+      // keep only catalog rows whose file sits in a surviving partition;
+      // the current version is present (vacuum always keeps the latest)
+      val doomed = dates.map(d => col("file_path").contains(s"/$d/"))
+        .reduce(_ || _)
+      TxnCatalog.commit(spark, cp)(cur => cur.get.filter(!doomed))
     }
-    val fs = new Path(tableRoot).getFileSystem(conf)
+    val fs = new Path(tableRoot)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     dates.foreach(d => fs.delete(new Path(tableRoot, d), true))
     dates
   }

@@ -1,7 +1,5 @@
 package graft.catalog
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,24 +13,22 @@ import org.apache.spark.sql.functions._
   * (`src/query/stream_schema_provider.rs:1032-1137`).
   *
   * Spark-first shape: the catalog is itself a small parquet table (one row
-  * per data file), consulted at plan time to produce the pruned file list.
-  * A [[TxnCatalog]] version of at most
-  * [[graft.plans.StatsFileIndex.DefaultMaxDriverRows]] rows is held on the
-  * driver, so [[resolve]], pruning and [[countStar]] over it run no Spark
-  * job; a larger one, or a plain parquet-dir catalog, is read as a parquet
-  * table (a single-column-predicate scan). Each commit still writes the
+  * per data file), and it has one layout: a [[TxnCatalog]] root, whose
+  * latest committed version every reader and writer goes through. A
+  * version of at most [[graft.plans.StatsFileIndex.DefaultMaxDriverRows]]
+  * rows is held on the driver, so [[resolve]], pruning and [[countStar]]
+  * over it run no Spark job; a larger one is read as its parquet snapshot
+  * dir and pruned by a distributed filter. Each commit still writes the
   * whole next snapshot. Spark never opens data-file footers that the
   * catalog already excluded — the same file-skip economics as the
   * reference's manifest, Delta's data skipping, or Iceberg manifests.
   *
-  * Statistics follow the reference's 4-variant TypedStatistics (Bool, Int64,
-  * Float64, Utf8; `column.rs:54-59`): min/max are stored as strings with a
-  * type tag; merge across types drops stats to None (`column.rs:78-135`).
+  * Statistics stand in for the reference's 4-variant TypedStatistics
+  * (`column.rs:54-59`): min/max are stored as their string casts, and a
+  * file that lacks the column records null stats, which never prune — the
+  * reference drops stats to None on a type conflict (`column.rs:78-135`).
   */
 object StatsCatalog {
-
-  final case class ColumnStats(name: String, typeTag: String, min: String, max: String)
-  final case class FileStats(path: String, numRows: Long, columns: Seq[ColumnStats])
 
   /** Compute per-file stats for every parquet data file under `tableRoot`.
     * Runs as one distributed Spark job: rows are grouped by their source
@@ -78,13 +74,6 @@ object StatsCatalog {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Write/refresh the catalog table for a stream. */
-  def refresh(spark: SparkSession, tableRoot: String, catalogPath: String,
-      statCols: Seq[String]): Unit =
-    collect(spark, tableRoot, statCols)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(catalogPath)
-
   /** Binary predicate usable for pruning: col op literal. */
   sealed trait Op
   case object Lt extends Op
@@ -94,159 +83,26 @@ object StatsCatalog {
   case object Eq extends Op
   final case class Pred(column: String, op: Op, value: String)
 
-  /** Files that may satisfy all predicates (min/max overlap test — the
-    * reference's `satisfy_constraints`). Values compare via the same
-    * ordering the stats were written with (string min/max cast — callers
-    * pass numeric predicates for numeric columns, which compare correctly
-    * because both sides re-cast to double when parseable).
-    */
-  def pruneFiles(spark: SparkSession, catalogPath: String, preds: Seq[Pred]): Seq[String] =
-    pruneFileStats(spark, catalogPath, preds).map(_._1)
-
-  /** As [[pruneFiles]] but keeps each surviving file's row count (for limit
-    * truncation).
-    */
-  /** Load a catalog from either layout: a plain parquet dir, or a
-    * [[TxnCatalog]] root (detected by `_commits/`) — in which case the
-    * latest committed snapshot is returned: a driver-resident
-    * `LocalRelation` frame when the version is held, else its parquet dir.
+  /** The latest committed [[TxnCatalog]] snapshot at `catalogPath`: a
+    * driver-resident `LocalRelation` frame when the version is held, else
+    * its parquet dir. A catalog with no committed version is no catalog:
+    * an empty frame.
     */
   def resolve(spark: SparkSession, catalogPath: String): DataFrame =
-    if (java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(catalogPath, "_commits")))
-      TxnCatalog.snapshot(spark, catalogPath).getOrElse(spark.emptyDataFrame)
-    else spark.read.parquet(catalogPath)
+    TxnCatalog.snapshot(spark, catalogPath).getOrElse(spark.emptyDataFrame)
 
-  def pruneFileStats(spark: SparkSession, catalogPath: String,
-                     preds: Seq[Pred]): Seq[(String, Long)] =
-    pruneFileStats(resolve(spark, catalogPath), preds)
+  /** Files that may satisfy all predicates: the min/max overlap test
+    * [[graft.plans.StatsFileIndex.mayMatch]] (the reference's
+    * `satisfy_constraints`) over the latest snapshot. No catalog → no files.
+    */
+  def pruneFiles(spark: SparkSession, catalogPath: String, preds: Seq[Pred]): Seq[String] =
+    TxnCatalog.snapshot(spark, catalogPath).fold(Seq.empty[String])(pruneFiles(_, preds))
 
   /** As above over an already-loaded stats frame — e.g. a pinned
     * [[TxnCatalog]] snapshot (snapshot-isolated pruning).
     */
-  def pruneFileStats(cat: DataFrame,
-                     preds: Seq[Pred]): Seq[(String, Long)] = {
-    val keep = preds.foldLeft(cat) { (df, p) =>
-      val numeric = scala.util.Try(p.value.toDouble).isSuccess
-      val minC = if (numeric) col(s"min_${p.column}").cast("double")
-                 else col(s"min_${p.column}")
-      val maxC = if (numeric) col(s"max_${p.column}").cast("double")
-                 else col(s"max_${p.column}")
-      val v = if (numeric) lit(p.value.toDouble) else lit(p.value)
-      val cond = p.op match {
-        case Eq   => minC <= v && v <= maxC
-        case Lt   => minC < v
-        case LtEq => minC <= v
-        case Gt   => maxC > v
-        case GtEq => maxC >= v
-      }
-      // a file with absent stats for the column can never be pruned
-      df.filter(minC.isNull || maxC.isNull || cond)
-    }
-    keep.select("file_path", "num_rows").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-  }
-
-  /** Limit pushdown to the file list: stop adding files once cumulative
-    * `num_rows` covers the limit (reference
-    * `src/query/stream_schema_provider.rs:581-597`). Only valid for plain
-    * (filterless) limits — callers with residual predicates must pass the
-    * full list.
-    */
-  def truncateByLimit(files: Seq[(String, Long)], limit: Long): Seq[String] = {
-    var cum = 0L
-    val out = Seq.newBuilder[String]
-    val it = files.iterator
-    while (cum < limit && it.hasNext) {
-      val (path, rows) = it.next()
-      out += path
-      cum += rows
-    }
-    out.result()
-  }
-
-  /** Read a table through the catalog: file-level pruning (and optional
-    * limit truncation) happens *before* Spark lists/opens anything — the
-    * returned DataFrame scans only surviving files. Residual filtering
-    * above the scan remains the caller's responsibility (stats pruning is
-    * may-contain, not exact).
-    */
-  def prunedRead(spark: SparkSession, catalogPath: String,
-                 preds: Seq[Pred], limit: Option[Long] = None): DataFrame = {
-    val files = pruneFileStats(spark, catalogPath, preds)
-    val paths =
-      if (preds.isEmpty && limit.isDefined) truncateByLimit(files, limit.get)
-      else files.map(_._1)
-    if (paths.isEmpty)
-      spark.emptyDataFrame
-    else
-      spark.read.parquet(paths: _*)
-  }
-
-  /** Scheme-independent file identity: catalog `file_path`s come from
-    * `_metadata.file_path` ("file:///…"), listings from Hadoop Paths
-    * ("file:/…") — compare by the bare path.
-    */
-  private def normPath(s: String): String =
-    new org.apache.hadoop.fs.Path(s).toUri.getPath
-
-  /** Incremental reconcile after an append OR a deletion: list the
-    * stream's data files, stat only the ones the catalog doesn't know,
-    * DROP catalog rows whose files are gone (retention/compaction), and
-    * rewrite the (tiny) catalog. This is the reference's manifest update
-    * per flush (`src/catalog/mod.rs:108-260`, called from the sync loop
-    * after each parquet conversion): the cost is one listing plus a stats
-    * job over the NEW files only — the catalog itself stays a small
-    * metadata table however large the data grows.
-    *
-    * Returns the number of files added.
-    */
-  def addNewFiles(spark: SparkSession, tableRoot: String, catalogPath: String,
-                  statCols: Seq[String]): Int = {
-    val rootPath = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(rootPath)) return 0
-    val listing = Seq.newBuilder[String]
-    val it = fs.listFiles(rootPath, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_") &&
-          !name.startsWith("."))
-        listing += f.getPath.toString
-    }
-    val all = listing.result()
-    val onDisk = all.map(normPath).toSet
-    val existing: Seq[org.apache.spark.sql.Row] =
-      if (new java.io.File(catalogPath).isDirectory)
-        // an empty/not-yet-written catalog dir reads as no catalog
-        try resolve(spark, catalogPath).collect().toSeq
-        catch { case _: org.apache.spark.sql.AnalysisException => Seq.empty }
-      else Seq.empty
-    val kept = existing.filter(r =>
-      onDisk.contains(normPath(r.getAs[String]("file_path"))))
-    val known = kept.map(r => normPath(r.getAs[String]("file_path"))).toSet
-    val fresh = all.filterNot(p => known.contains(normPath(p)))
-    if (fresh.isEmpty && kept.size == existing.size) return 0
-    if (fresh.isEmpty) {
-      // deletions only: rewrite the survivors (schema from existing rows)
-      val schema = resolve(spark, catalogPath).schema
-      spark.createDataFrame(kept.asJava, schema)
-        .coalesce(1).write.mode("overwrite").parquet(catalogPath)
-      return 0
-    }
-    val added = collectFiles(spark, fresh, statCols)
-    val merged =
-      if (kept.isEmpty) added
-      else added.unionByName(
-        spark.createDataFrame(kept.asJava, added.schema))
-    // the catalog is driver-bounded metadata; collect() breaks the
-    // read-then-overwrite-same-path hazard
-    val rows = merged.collect().toSeq
-    spark.createDataFrame(rows.asJava, added.schema)
-      .coalesce(1).write.mode("overwrite").parquet(catalogPath)
-    fresh.size
-  }
+  def pruneFiles(cat: DataFrame, preds: Seq[Pred]): Seq[String] =
+    graft.plans.StatsFileIndex.prunedRows(cat, preds).map(_.path)
 
   /** COUNT(*) fast path: answer a bare unfiltered count from the catalog
     * without touching data files (reference `src/query/mod.rs:427-462` +

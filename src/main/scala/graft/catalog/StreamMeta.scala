@@ -179,61 +179,3 @@ object StreamMeta {
       retention, schema, cfg.zOrder.map(p => (p.dims, p.bits)),
       cfg.timePartitionLimitDays)
 }
-
-/** Retention enforcement: drop whole `date=` partition directories older
-  * than the configured horizon (reference retention task,
-  * `src/storage/retention.rs:100-140` — delete-by-days). Directory-level
-  * deletes mean retention cost scales with partition count, never rows.
-  */
-object RetentionJob {
-
-  /** Delete date partitions strictly older than `days` before `today`.
-    * Returns the deleted partition names. When `txnCatalog` is given (and a
-    * Spark session to commit with), the deleted partitions' stats rows are
-    * dropped in ONE atomic catalog version after the file deletes — pinned
-    * readers keep their (pre-retention) file list, new readers never plan a
-    * scan over vanished files.
-    */
-  def apply(root: String, stream: String, days: Int,
-            today: java.time.LocalDate,
-            spark: org.apache.spark.sql.SparkSession,
-            txnCatalog: String): Seq[String] = {
-    val deleted = apply(root, stream, days, today)
-    if (deleted.nonEmpty) {
-      import org.apache.spark.sql.functions.col
-      val cond = deleted
-        .map(d => col("file_path").contains(s"/$stream/$d/"))
-        .reduce(_ || _)
-      TxnCatalog.commit(spark, txnCatalog) { current =>
-        current.map(_.filter(!cond)).getOrElse(
-          spark.emptyDataFrame)
-      }
-    }
-    deleted
-  }
-
-  /** Delete date partitions strictly older than `days` before `today`.
-    * Returns the deleted partition names.
-    */
-  def apply(root: String, stream: String, days: Int,
-            today: java.time.LocalDate = java.time.LocalDate.now()): Seq[String] = {
-    val cutoff = today.minusDays(days.toLong)
-    val dir = Paths.get(root, stream)
-    if (!Files.exists(dir)) return Nil
-    val deleted = Seq.newBuilder[String]
-    Files.list(dir).forEach { p =>
-      val name = p.getFileName.toString
-      if (name.startsWith("date=")) {
-        val date = scala.util.Try(
-          java.time.LocalDate.parse(name.stripPrefix("date="))).toOption
-        if (date.exists(_.isBefore(cutoff))) {
-          // recursive delete of the partition dir
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { Files.delete(f); () })
-          deleted += name
-        }
-      }
-    }
-    deleted.result()
-  }
-}

@@ -276,13 +276,22 @@ object TxnCatalog {
     * written by a distributed job and loaded by its first reader.
     */
   def commit(spark: SparkSession, root: String, maxRetries: Int = 10)(
-      update: Option[DataFrame] => DataFrame): Long = {
+      update: Option[DataFrame] => DataFrame): Long =
+    commitChange(spark, root, maxRetries)(current => Some(update(current)))
+
+  /** [[commit]] for an update that may find nothing to change: None
+    * commits nothing and returns the latest version (-1 when there is none).
+    */
+  private def commitChange(spark: SparkSession, root: String,
+                           maxRetries: Int = 10)(
+      update: Option[DataFrame] => Option[DataFrame]): Long = {
     var attempt = 0
     while (true) {
       val base = latestVersion(root)
       val next = base.getOrElse(-1L) + 1
       val current = base.flatMap(load(spark, root, _))
-      val updated = update(current)
+      // nothing to change: the latest version stands, nothing is written
+      val updated = update(current).getOrElse(return next - 1)
       val held = driverRows(updated).filter(r => holdable(r.size.toLong))
       // writer-unique snapshot data, invisible until the marker lands
       val dirName = f"v$next%06d-${UUID.randomUUID()}"
@@ -314,46 +323,43 @@ object TxnCatalog {
     -1L // unreachable
   }
 
-  /** `keep(current)` plus stats rows for the `fresh` data files. When the
-    * result stays resident, the fresh stats are collected here (their only
-    * Spark jobs), so [[commit]] writes the next version from driver rows.
+  /** `keep(current)` plus stats rows for the `fresh` data files, or None
+    * when neither changes the catalog (`removed` says whether `keep` drops
+    * a row). When the result stays resident, the fresh stats are collected
+    * here (their only Spark jobs), so [[commit]] writes the next version
+    * from driver rows.
     */
   private def withFreshStats(spark: SparkSession, current: Option[DataFrame],
-                             fresh: Seq[String], tableRoot: String,
-                             statCols: Seq[String],
-                             keep: DataFrame => DataFrame = identity): DataFrame = {
-    val kept = current.map(keep)
-    val freshStats =
-      if (fresh.isEmpty)
-        kept.getOrElse(
-          StatsCatalog.collect(spark, tableRoot, statCols).limit(0))
-          .limit(0)
-      else {
-        val stats = StatsCatalog.collectFiles(spark, fresh, statCols)
-        val base = current.map(c => residentOf(c).map(_.size.toLong))
+                             fresh: Seq[String], statCols: Seq[String],
+                             keep: DataFrame => DataFrame = identity,
+                             removed: Boolean = false): Option[DataFrame] =
+    if (fresh.isEmpty) Option.when(removed)(keep(current.get))
+    else {
+      val stats = StatsCatalog.collectFiles(spark, fresh, statCols)
+      val base = current.map(c => residentOf(c).map(_.size.toLong))
+      val freshStats =
         if (base.forall(_.exists(n => holdable(n + fresh.size))))
           spark.createDataFrame(stats.collect().toSeq.asJava, stats.schema)
         else stats
-      }
-    kept.map(_.unionByName(freshStats, allowMissingColumns = true))
-      .getOrElse(freshStats)
-  }
+      Some(current.map(keep)
+        .fold(freshStats)(_.unionByName(freshStats, allowMissingColumns = true)))
+    }
 
   /** Incremental stats refresh: compute [[StatsCatalog]] rows ONLY for data
-    * files not yet in the catalog and append them as a new version. The full
-    * `StatsCatalog.refresh` rescans every file — O(table); this diffs the
-    * file listing against the catalog and runs the stats job over just the
-    * new paths — O(new data), the only refresh economics that survive
-    * 100 TB. (Catalog paths are `file:`-scheme URIs, as `_metadata` emits.)
+    * files not yet in the catalog and append them as a new version — it
+    * diffs the file listing against the catalog and runs the stats job over
+    * just the new paths, O(new data), the only refresh economics that
+    * survive 100 TB. No new file, no new version. (Catalog paths are
+    * `file:`-scheme URIs, as `_metadata` emits.)
     */
   def appendNewFiles(spark: SparkSession, tableRoot: String, root: String,
                      statCols: Seq[String]): Long =
-    commit(spark, root) { current =>
+    commitChange(spark, root) { current =>
       val known: Set[String] = current
         .map(_.select("file_path").collect().map(_.getString(0)).toSet)
         .getOrElse(Set.empty)
       val fresh = listParquet(Paths.get(tableRoot)).filterNot(known.contains)
-      withFreshStats(spark, current, fresh, tableRoot, statCols)
+      withFreshStats(spark, current, fresh, statCols)
     }
 
   /** [[appendNewFiles]] with partition-watermark discovery: instead of
@@ -372,7 +378,7 @@ object TxnCatalog {
     */
   def appendNewFilesWatermarked(spark: SparkSession, tableRoot: String,
                                 root: String, statCols: Seq[String]): Long =
-    commit(spark, root) { current =>
+    commitChange(spark, root) { current =>
       val tableUri = Paths.get(tableRoot).toUri.toString
         .replaceFirst("^file:///", "file:/")
       // top-level partition of a cataloged file = first path segment under
@@ -406,7 +412,7 @@ object TxnCatalog {
           dirs.flatMap(d => listParquet(d))
             .filterNot(p => partOf(p) < wm || knownInWm.contains(p))
       }
-      withFreshStats(spark, current, fresh, tableRoot, statCols)
+      withFreshStats(spark, current, fresh, statCols)
     }
 
   /** Top-level partition of a cataloged `file_path` as a Spark expression:
@@ -440,7 +446,7 @@ object TxnCatalog {
     */
   def reconcile(spark: SparkSession, tableRoot: String, root: String,
                 statCols: Seq[String]): Long =
-    commit(spark, root) { current =>
+    commitChange(spark, root) { current =>
       val onDisk = listParquet(Paths.get(tableRoot))
       val onDiskSet = onDisk.toSet
       val known: Set[String] = current
@@ -449,8 +455,9 @@ object TxnCatalog {
       val fresh = onDisk.filterNot(known.contains)
       // isin over a big list builds a wide predicate; for catalog-sized
       // row counts this is fine (driver-bounded metadata)
-      withFreshStats(spark, current, fresh, tableRoot, statCols,
-        keep = _.filter(col("file_path").isInCollection(onDiskSet)))
+      withFreshStats(spark, current, fresh, statCols,
+        keep = _.filter(col("file_path").isInCollection(onDiskSet)),
+        removed = !known.subsetOf(onDiskSet))
     }
 
   /** Recursive parquet listing as `file:`-scheme URIs (matching the

@@ -30,37 +30,23 @@ import graft.catalog.{StatsCatalog, TxnCatalog}
   * millions of objects is the difference between planning in milliseconds
   * and planning in minutes.
   *
-  * Catalog residency (the Delta-log-replay concern): a [[TxnCatalog]]
-  * frame of a resident version (at most [[StatsFileIndex.DefaultMaxDriverRows]]
-  * rows, decided once per version by [[TxnCatalog]]) brings its file
-  * entries with it — pruning runs on the driver with no Spark job. Any
-  * other frame up to `maxDriverRows` is collected once and pruned on the
-  * driver; beyond that the catalog DATAFRAME becomes the source of truth —
-  * `listFiles` runs the SAME `mayMatch` predicate as a distributed filter
-  * over the catalog and collects ONLY the surviving rows, and
-  * `sizeInBytes`/`rootPaths` come from tiny aggregates. A 10M-file catalog
-  * thus never materializes on the driver; what comes back is bounded by
-  * the query's own pruning (e.g. its time window).
+  * Catalog residency (the Delta-log-replay concern) has two classes, both
+  * decided once per version by [[TxnCatalog]]: a frame of a resident
+  * version (at most [[StatsFileIndex.DefaultMaxDriverRows]] rows) brings
+  * its file entries with it — pruning runs on the driver with no Spark job.
+  * Every other frame stays distributed: the catalog DATAFRAME is the source
+  * of truth — `listFiles` runs the SAME `mayMatch` predicate as a
+  * distributed filter over the catalog and collects ONLY the surviving
+  * rows, and `sizeInBytes`/`rootPaths` come from tiny aggregates. A
+  * 10M-file catalog thus never materializes on the driver; what comes back
+  * is bounded by the query's own pruning (e.g. its time window).
   */
-final class StatsFileIndex(
-    spark: SparkSession,
-    cat: DataFrame,
-    maxDriverRows: Long = StatsFileIndex.DefaultMaxDriverRows)
+final class StatsFileIndex(spark: SparkSession, cat: DataFrame)
     extends FileIndex {
 
-  /** Driver-side rows when the catalog is small enough; None → stay
-    * distributed.
-    */
+  /** The resident version's file entries; None → stay distributed. */
   private lazy val cached: Option[Seq[StatsFileIndex.FileRow]] =
-    TxnCatalog.residentOf(cat) match {
-      case Some(s) => Option.when(s.size <= maxDriverRows)(s.files)
-      case None =>
-        // clamp: a cap near Long.MaxValue must not overflow the Int limit arg
-        if (cat.limit(math.min(maxDriverRows + 1, Int.MaxValue.toLong).toInt)
-              .count() <= maxDriverRows)
-          Some(StatsFileIndex.loadRows(cat))
-        else None
-    }
+    TxnCatalog.residentOf(cat).map(_.files)
 
   // tiny aggregates (one short job each, cached) — never the full row set
   private lazy val totalBytes: Long = cached match {
@@ -88,11 +74,8 @@ final class StatsFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val preds = dataFilters.flatMap(StatsFileIndex.toPred)
-    val survivors = cached match {
-      case Some(rows) => rows.filter(f => StatsFileIndex.mayMatch(f, preds))
-      case None       => StatsFileIndex.prunedRows(cat, preds)
-    }
+    val survivors = StatsFileIndex.prunedRows(cat,
+      dataFilters.flatMap(StatsFileIndex.toPred))
     Seq(PartitionDirectory(InternalRow.empty, survivors.map { f =>
       FileStatusWithMetadata(new FileStatus(
         f.sizeBytes, false, 1, 128L * 1024 * 1024, 0L, new Path(f.path)))
@@ -142,8 +125,8 @@ object StatsFileIndex {
   }
 
   /** Min/max overlap test (null stats → cannot prune). Numeric compare when
-    * both sides parse as double, else lexicographic — same contract as
-    * [[StatsCatalog.pruneFileStats]].
+    * both sides parse as double, else lexicographic. The one overlap test:
+    * every scan, path list and distributed prune goes through it.
     */
   def mayMatch(f: FileRow, preds: Seq[StatsCatalog.Pred]): Boolean =
     preds.forall { p =>
@@ -165,18 +148,11 @@ object StatsFileIndex {
       }
     }
 
-  /** Rows-on-driver cap before [[StatsFileIndex]] switches to distributed
-    * catalog pruning (~100k rows ≈ tens of MB of strings — the same
+  /** Largest [[TxnCatalog]] version held on the driver; a larger one is
+    * pruned distributed (~100k rows ≈ tens of MB of strings — the same
     * ballpark Delta tolerates for log replay).
     */
   val DefaultMaxDriverRows: Long = 100000L
-
-  /** Load catalog rows (plain path or a pinned TxnCatalog snapshot).
-    * Collects the WHOLE catalog — callers above the
-    * [[DefaultMaxDriverRows]] residency class use [[prunedRows]] instead.
-    */
-  def loadRows(cat: DataFrame): Seq[FileRow] =
-    fileRows(cat.schema, cat.collect().toSeq)
 
   /** Catalog rows of `schema` as file entries. */
   def fileRows(schema: StructType, rows: Seq[Row]): Seq[FileRow] = {
@@ -206,35 +182,40 @@ object StatsFileIndex {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
 
-  /** Distributed catalog pruning: the EXACT [[mayMatch]] predicate runs
-    * inside a `mapPartitions` over the catalog DataFrame, so only
-    * window-overlapping rows ever reach the driver. One short Spark job
-    * per `listFiles` — at millions of files this replaces a multi-GB
-    * driver collect with a collect bounded by the query's own selectivity.
+  /** Catalog rows that may satisfy all `preds` ([[mayMatch]]). A resident
+    * snapshot is filtered on the driver with no Spark job. Any other frame
+    * is pruned distributed: the EXACT predicate runs inside a
+    * `mapPartitions` over the catalog DataFrame, so only window-overlapping
+    * rows ever reach the driver — at millions of files one short job
+    * replaces a multi-GB driver collect with a collect bounded by the
+    * query's own selectivity.
     */
   def prunedRows(cat: DataFrame,
-                 preds: Seq[StatsCatalog.Pred]): Seq[FileRow] = {
-    val statCols = cat.columns.filter(_.startsWith("min_"))
-      .map(_.stripPrefix("min_"))
-    val needed = cat.select(
-      (Seq("file_path", "file_size") ++
-        statCols.flatMap(c => Seq(s"min_$c", s"max_$c")))
-        .map(org.apache.spark.sql.functions.col): _*)
-    val colsB = statCols.toSeq
-    val predsB = preds
-    implicit val enc: org.apache.spark.sql.Encoder[FileRow] =
-      org.apache.spark.sql.Encoders.product[FileRow]
-    needed.mapPartitions { it =>
-      it.flatMap { r =>
-        val mm = colsB.map { c =>
-          c -> (r.getAs[String](s"min_$c"), r.getAs[String](s"max_$c"))
-        }.toMap
-        val f = FileRow(r.getAs[String]("file_path"),
-          r.getAs[Long]("file_size"), mm)
-        if (mayMatch(f, predsB)) Some(f) else None
-      }
-    }.collect().toSeq
-  }
+                 preds: Seq[StatsCatalog.Pred]): Seq[FileRow] =
+    TxnCatalog.residentOf(cat) match {
+      case Some(s) => s.files.filter(mayMatch(_, preds))
+      case None =>
+        val statCols = cat.columns.filter(_.startsWith("min_"))
+          .map(_.stripPrefix("min_"))
+        val needed = cat.select(
+          (Seq("file_path", "file_size") ++
+            statCols.flatMap(c => Seq(s"min_$c", s"max_$c")))
+            .map(org.apache.spark.sql.functions.col): _*)
+        val colsB = statCols.toSeq
+        val predsB = preds
+        implicit val enc: org.apache.spark.sql.Encoder[FileRow] =
+          org.apache.spark.sql.Encoders.product[FileRow]
+        needed.mapPartitions { it =>
+          it.flatMap { r =>
+            val mm = colsB.map { c =>
+              c -> (r.getAs[String](s"min_$c"), r.getAs[String](s"max_$c"))
+            }.toMap
+            val f = FileRow(r.getAs[String]("file_path"),
+              r.getAs[Long]("file_size"), mm)
+            if (mayMatch(f, predsB)) Some(f) else None
+          }
+        }.collect().toSeq
+    }
 
   /** A DataFrame over the cataloged files with stats-based file skipping
     * wired into the scan. `schema` comes from the first cataloged file's

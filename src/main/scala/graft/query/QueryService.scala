@@ -302,20 +302,32 @@ object QueryService {
     * durable data.
     */
   def windowedRead(spark: SparkSession, name: String, s: Stream,
-                   range: TimeRange): DataFrame = {
-    val source = s.catalogPath match {
-      case Some(cat) =>
-        val catDf = graft.catalog.StatsCatalog.resolve(spark, cat)
-        if (catDf.columns.contains("file_size"))
-          graft.plans.StatsFileIndex.read(spark, catDf,
-            s.metaRoot.flatMap(graft.catalog.StreamMeta.unionSchema(_, name)))
-        else plainReader(spark, name, s).parquet(s.path)
-      case _ => plainReader(spark, name, s).parquet(s.path)
+                   range: TimeRange): DataFrame =
+    inWindow(catalogRead(spark, name, s), s, range)
+
+  /** The stream's scan: through the stats-catalog `FileIndex` when it has a
+    * committed catalog version — every pushed predicate (the time window
+    * AND the user's own filters) prunes files inside the scan itself —
+    * else a plain read of the table.
+    */
+  private def catalogRead(spark: SparkSession, name: String,
+                          s: Stream): DataFrame =
+    s.catalogPath.flatMap(graft.catalog.TxnCatalog.snapshot(spark, _)) match {
+      case Some(cat) => graft.plans.StatsFileIndex.read(spark, cat,
+        s.metaRoot.flatMap(graft.catalog.StreamMeta.unionSchema(_, name)))
+      case None => plainReader(spark, name, s).parquet(s.path)
     }
-    val timed = source.filter(
+
+  /** `df` restricted to the range: the exact row-level window, plus — for
+    * streams written by IngestPipeline, Hive-partitioned by date/hour
+    * string dirs — a coarse date-range predicate on the partition column
+    * that turns the window into directory pruning.
+    */
+  private def inWindow(df: DataFrame, s: Stream, range: TimeRange): DataFrame = {
+    val timed = df.filter(
       col(s.timeCol) >= lit(Instant.ofEpochMilli(range.start.toEpochMilli)) &&
         col(s.timeCol) < lit(Instant.ofEpochMilli(range.end.toEpochMilli)))
-    if (source.columns.contains("date")) {
+    if (df.columns.contains("date")) {
       val fmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
         .withZone(java.time.ZoneOffset.UTC)
       timed.filter(col("date").between(
@@ -373,58 +385,14 @@ object QueryService {
     val constrained =
       constrainedStreams(spark, referenced.toMap, sql, qscope)
     referenced.foreach { case (name, s) =>
+        // a stream whose SQL already constrains time reads plain, as is;
+        // every other stream gets the window over its catalog-pruned scan
         val skipInject = constrained.contains(name)
         def windowed(df: DataFrame): DataFrame =
-          if (skipInject) df
-          else {
-            val timed = df.filter(
-              col(s.timeCol) >= lit(Instant.ofEpochMilli(range.start.toEpochMilli)) &&
-                col(s.timeCol) < lit(Instant.ofEpochMilli(range.end.toEpochMilli)))
-            // streams written by IngestPipeline are Hive-partitioned by
-            // date/hour string dirs — a coarse date-range predicate on the
-            // partition column turns the time window into directory
-            // pruning (the row filter above is exact; this one skips IO)
-            if (df.columns.contains("date")) {
-              val fmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
-                .withZone(java.time.ZoneOffset.UTC)
-              timed.filter(col("date").between(
-                fmt.format(range.start), fmt.format(range.end)))
-            } else timed
-          }
-        // file-level pruning from the stats catalog happens before Spark
-        // lists anything (reference manifest pruning); the exact row-level
-        // window still applies above the pruned scan. Bounds widen to whole
-        // seconds so the string min/max comparison stays conservative.
-        val reader = plainReader(spark, name, s)
-        val source = s.catalogPath match {
-          case Some(cat) if !skipInject =>
-            import graft.catalog.StatsCatalog
-            val catDf = StatsCatalog.resolve(spark, cat)
-            if (catDf.columns.contains("file_size")) {
-              // catalog-backed FileIndex: every pushed predicate (the
-              // injected window AND the user's own filters) prunes files
-              // inside the scan itself — no pre-computed path list
-              val schema = s.metaRoot
-                .flatMap(graft.catalog.StreamMeta.unionSchema(_, name))
-              graft.plans.StatsFileIndex.read(spark, catDf, schema)
-            } else {
-              // legacy catalogs (no file_size): driver-side path pruning
-              val fmt = java.time.format.DateTimeFormatter
-                .ofPattern("yyyy-MM-dd HH:mm:ss")
-                .withZone(java.time.ZoneOffset.UTC)
-              val preds = Seq(
-                StatsCatalog.Pred(s.timeCol, StatsCatalog.GtEq,
-                  fmt.format(range.start.truncatedTo(java.time.temporal.ChronoUnit.SECONDS))),
-                StatsCatalog.Pred(s.timeCol, StatsCatalog.Lt,
-                  fmt.format(range.end.plusSeconds(1)
-                    .truncatedTo(java.time.temporal.ChronoUnit.SECONDS))))
-              val files = StatsCatalog.pruneFiles(spark, cat, preds)
-              if (files.isEmpty) reader.parquet(s.path).filter(lit(false))
-              else reader.parquet(files: _*)
-            }
-          case _ => reader.parquet(s.path)
-        }
-        val base = windowed(source)
+          if (skipInject) df else inWindow(df, s, range)
+        val base =
+          if (skipInject) plainReader(spark, name, s).parquet(s.path)
+          else inWindow(catalogRead(spark, name, s), s, range)
         val df =
           if (range.end.toEpochMilli < freshCutoff) base
           else

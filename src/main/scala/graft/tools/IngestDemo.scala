@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import graft.catalog.StatsCatalog
+import graft.catalog.{StatsCatalog, TxnCatalog}
 import graft.engine.GraftSession
 import graft.ingest.IngestPipeline
 import graft.ingest.IngestPipeline.{SchemaRegistry, StreamConfig}
@@ -40,7 +40,7 @@ object IngestDemo {
 
     IngestPipeline.append(df, root, cfg)
     val catPath = s"$root/_catalog/applogs"
-    StatsCatalog.refresh(spark, s"$root/applogs", catPath, Seq("latency_ms"))
+    TxnCatalog.reconcile(spark, s"$root/applogs", catPath, Seq("latency_ms"))
     println(s"count* fast path: ${StatsCatalog.countStar(spark, catPath)}")
     require(StatsCatalog.countStar(spark, catPath) == 4)
 

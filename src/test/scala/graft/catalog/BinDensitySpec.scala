@@ -9,7 +9,7 @@ import graft.SparkSuite
 import graft.query.Counts
 
 /** Manifest-answered histogram density (`Counts.binDensityFromStats` +
-  * `StatsCatalog.addNewFiles`): bin counts come from catalog metadata for
+  * `TxnCatalog.reconcile`): bin counts come from catalog metadata for
   * bin-contained files and from a scan of ONLY the straddling files; the
   * catalog updates incrementally per append.
   */
@@ -34,8 +34,10 @@ class BinDensitySpec extends SparkSuite {
     writeFile(dir, Seq(Min + 1000, Min + 59000))          // B: 2 rows, bin 1
     writeFile(dir, Seq(2 * Min + 50000, 3 * Min + 5000))  // C: 2 rows, 2|3
 
-    assert(StatsCatalog.addNewFiles(spark, dir, cat, Seq("ts")) == 3)
-    assert(StatsCatalog.addNewFiles(spark, dir, cat, Seq("ts")) == 0)
+    assert(TxnCatalog.reconcile(spark, dir, cat, Seq("ts")) == 0L)
+    assert(StatsCatalog.resolve(spark, cat).count() == 3)
+    // nothing new: no new version
+    assert(TxnCatalog.reconcile(spark, dir, cat, Seq("ts")) == 0L)
 
     val scannedPaths = mutable.Buffer.empty[String]
     def readRec(paths: Seq[String]): DataFrame = {
@@ -79,7 +81,8 @@ class BinDensitySpec extends SparkSuite {
 
     // incremental: append one more file, only it is stat'd
     writeFile(dir, Seq(3 * Min + 30000))
-    assert(StatsCatalog.addNewFiles(spark, dir, cat, Seq("ts")) == 1)
+    assert(TxnCatalog.reconcile(spark, dir, cat, Seq("ts")) == 1L)
+    assert(StatsCatalog.resolve(spark, cat).count() == 4)
     val after = Counts.binDensityFromStats(
       StatsCatalog.resolve(spark, cat), "ts",
       startMs = 0L, endMs = 4 * Min, binMillis = Min,
@@ -92,7 +95,8 @@ class BinDensitySpec extends SparkSuite {
       .select(input_file_name()).head.getString(0)
     java.nio.file.Files.delete(java.nio.file.Paths.get(
       new java.net.URI(victim).getPath))
-    assert(StatsCatalog.addNewFiles(spark, dir, cat, Seq("ts")) == 0)
+    assert(TxnCatalog.reconcile(spark, dir, cat, Seq("ts")) == 2L)
+    assert(StatsCatalog.resolve(spark, cat).count() == 3)
     val pruned = Counts.binDensityFromStats(
       StatsCatalog.resolve(spark, cat), "ts",
       startMs = 0L, endMs = 4 * Min, binMillis = Min,

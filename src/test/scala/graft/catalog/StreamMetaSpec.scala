@@ -82,16 +82,25 @@ class StreamMetaSpec extends SparkSuite {
 
   test("retention deletes only date partitions past the horizon") {
     val root = Files.createTempDirectory("ret").toString
+    val cat = Files.createTempDirectory("retcat").toString
     val today = java.time.LocalDate.parse("2024-06-15")
     Seq(
       (1L, "2024-06-01"), // 14 days old — delete at days=7
       (2L, "2024-06-12"), // 3 days old — keep
       (3L, "2024-06-14")).toDF("id", "date")
       .write.partitionBy("date").parquet(s"$root/logs")
-    val deleted = RetentionJob(root, "logs", days = 7, today = today)
+    TxnCatalog.reconcile(spark, s"$root/logs", cat, Seq("id"))
+    val deleted = Retention.enforce(spark, s"$root/logs", days = 7, today,
+      catalogPath = Some(cat))
     assert(deleted == Seq("date=2024-06-01"))
     val back = spark.read.parquet(s"$root/logs")
     assert(back.select("id").as[Long].collect().toSet == Set(2L, 3L))
+    // idempotent, and a missing table root is a no-op
+    assert(Retention.enforce(spark, s"$root/logs", days = 7, today,
+      catalogPath = Some(cat)).isEmpty)
+    assert(Retention.enforce(spark, s"$root/nope", days = 7, today,
+      catalogPath = Some(cat)).isEmpty)
+    assert(StatsCatalog.countStar(spark, cat) == 2L)
   }
 
   test("retention drops deleted partitions' catalog rows atomically") {
@@ -100,10 +109,11 @@ class StreamMetaSpec extends SparkSuite {
     val today = java.time.LocalDate.parse("2024-06-15")
     Seq((1L, "2024-06-01"), (2L, "2024-06-14")).toDF("id", "date")
       .write.partitionBy("date").parquet(s"$root/logs")
-    TxnCatalog.appendNewFiles(spark, s"$root/logs", cat, Seq("id"))
+    TxnCatalog.reconcile(spark, s"$root/logs", cat, Seq("id"))
     val v0 = TxnCatalog.latestVersion(cat).get
 
-    val deleted = RetentionJob(root, "logs", days = 7, today, spark, cat)
+    val deleted = Retention.enforce(spark, s"$root/logs", days = 7, today,
+      catalogPath = Some(cat))
     assert(deleted == Seq("date=2024-06-01"))
     val paths = TxnCatalog.snapshot(spark, cat).get
       .select("file_path").as[String].collect()

@@ -75,10 +75,45 @@ class TxnCatalogSpec extends SparkSuite {
     assert(snap.select("file_path").distinct().count() == snap.count())
 
     // snapshot-isolated pruning: id >= 50 keeps only the new file
-    val keep = StatsCatalog.pruneFileStats(snap,
+    val keep = StatsCatalog.pruneFiles(snap,
       Seq(StatsCatalog.Pred("id", StatsCatalog.GtEq, "50")))
     assert(keep.size == 1)
-    assert(spark.read.parquet(keep.map(_._1): _*).count() == 1)
+    assert(spark.read.parquet(keep: _*).count() == 1)
+  }
+
+  test("an empty diff commits nothing; reconcile with no table and no " +
+       "catalog is a no-op") {
+    val root = tmp()
+    val table = tmp()
+    def markers = java.nio.file.Files.list(
+      java.nio.file.Paths.get(root, "_commits")).toArray.length
+    // missing table, then an empty one: nothing to catalog, nothing written
+    assert(TxnCatalog.reconcile(spark, s"$table/t", root, Seq("id")) == -1L)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(table, "t"))
+    assert(TxnCatalog.reconcile(spark, s"$table/t", root, Seq("id")) == -1L)
+    assert(TxnCatalog.appendNewFiles(spark, s"$table/t", root, Seq("id")) == -1L)
+    assert(TxnCatalog.latestVersion(root).isEmpty)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_commits")))
+
+    Seq((1L, 1.0)).toDF("id", "v").coalesce(1)
+      .write.mode("append").parquet(s"$table/t/date=2024-01-01")
+    assert(TxnCatalog.reconcile(spark, s"$table/t", root, Seq("id")) == 0L)
+    assert(markers == 1)
+    // back-to-back no-op updates of every flavour keep v0, one marker
+    assert(TxnCatalog.reconcile(spark, s"$table/t", root, Seq("id")) == 0L)
+    assert(TxnCatalog.reconcile(spark, s"$table/t", root, Seq("id")) == 0L)
+    assert(TxnCatalog.appendNewFiles(spark, s"$table/t", root, Seq("id")) == 0L)
+    assert(TxnCatalog.appendNewFilesWatermarked(spark, s"$table/t", root,
+      Seq("id")) == 0L)
+    assert(markers == 1)
+    assert(TxnCatalog.snapshot(spark, root).get.count() == 1)
+
+    // a real change still commits
+    Seq((2L, 2.0)).toDF("id", "v").coalesce(1)
+      .write.mode("append").parquet(s"$table/t/date=2024-01-01")
+    assert(TxnCatalog.reconcile(spark, s"$table/t", root, Seq("id")) == 1L)
+    assert(markers == 2)
+    assert(TxnCatalog.snapshot(spark, root).get.count() == 2)
   }
 
   test("appendNewFilesWatermarked: discovers new partitions and new files " +

@@ -154,14 +154,17 @@ class PrismSpec extends SparkSuite {
       // unreadable stats catalog: the fast path AND the catalog-routed
       // scan both fail — each logs before degrading — and the dataset
       // entry still renders, with an all-zero histogram
-      // (_commits as a regular FILE defeats the catalog's self-healing
-      // reconcile — a readable-but-wrong catalog would just be rebuilt)
+      // (a committed version whose snapshot is not parquet defeats the
+      // catalog's self-healing reconcile, which must load that version
+      // first — a readable-but-wrong catalog would just be rebuilt)
       val statsDir = java.nio.file.Paths.get(tmp, ".stats", "fall")
-      java.nio.file.Files.createDirectories(statsDir)
-      java.nio.file.Files.write(statsDir.resolve("part-0.parquet"),
+      java.nio.file.Files.createDirectories(statsDir.resolve("_commits"))
+      java.nio.file.Files.createDirectories(statsDir.resolve("v000000-junk"))
+      java.nio.file.Files.write(
+        statsDir.resolve("v000000-junk").resolve("part-0.parquet"),
         "not a parquet file".getBytes(UTF_8))
-      java.nio.file.Files.write(statsDir.resolve("_commits"),
-        "junk".getBytes(UTF_8))
+      java.nio.file.Files.write(statsDir.resolve("_commits").resolve("0.json"),
+        """{"version": 0, "dir": "v000000-junk", "ts": 0}""".getBytes(UTF_8))
       val (s2, b2) = http("POST", s"$base/datasets", body = Some("{}"))
       assert(s2 == 200, b2)
       assert(binTotal(b2) == 0L, b2)

@@ -62,7 +62,7 @@ class IngestPipelineSpec extends SparkSuite {
     append(d2, root, cfg)
 
     val catPath = s"$root/_catalog/s4"
-    StatsCatalog.refresh(spark, s"$root/s4", catPath, Seq("v"))
+    graft.catalog.TxnCatalog.reconcile(spark, s"$root/s4", catPath, Seq("v"))
     assert(StatsCatalog.countStar(spark, catPath) == 4)
 
     val all = StatsCatalog.pruneFiles(spark, catPath, Nil)

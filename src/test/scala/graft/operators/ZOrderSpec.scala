@@ -198,9 +198,9 @@ class ZOrderSpec extends SparkSuite {
     // layout B: z-ordered on (x, y), 16 files
     ZOrder.zOrderBy(grid, Seq("x", "y"), bits = 6, numPartitions = 16)
       .write.parquet(s"$baseDir/zorder")
-    StatsCatalog.refresh(spark, s"$baseDir/sorted",
+    graft.catalog.TxnCatalog.reconcile(spark, s"$baseDir/sorted",
       s"$baseDir/cat_sorted", Seq("x", "y"))
-    StatsCatalog.refresh(spark, s"$baseDir/zorder",
+    graft.catalog.TxnCatalog.reconcile(spark, s"$baseDir/zorder",
       s"$baseDir/cat_zorder", Seq("x", "y"))
     import StatsCatalog.{GtEq, LtEq, Pred}
     val box = Seq(Pred("x", GtEq, "0"), Pred("x", LtEq, "15"),

@@ -6,10 +6,19 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.catalog.StatsCatalog
+import graft.catalog.{StatsCatalog, TxnCatalog}
 
 class StatsFileIndexSpec extends SparkSuite {
   import spark.implicits._
+
+  /** A stats catalog over `table`, built as one [[TxnCatalog]] version;
+    * returns its latest snapshot.
+    */
+  private def catalogOf(table: String, cat: String,
+                        statCols: Seq[String]): org.apache.spark.sql.DataFrame = {
+    TxnCatalog.reconcile(spark, table, cat, statCols)
+    StatsCatalog.resolve(spark, cat)
+  }
 
   private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
     df.collect() // execute THIS queryExecution so metrics populate
@@ -30,8 +39,7 @@ class StatsFileIndexSpec extends SparkSuite {
       r.toDF("id").withColumn("v", col("id") * 2)
         .coalesce(1).write.mode("append").parquet(s"$dir/t")
     }
-    StatsCatalog.refresh(spark, s"$dir/t", s"$dir/cat", Seq("id"))
-    val cat = spark.read.parquet(s"$dir/cat")
+    val cat = catalogOf(s"$dir/t", s"$dir/cat", Seq("id"))
     assert(cat.columns.contains("file_size"))
 
     val table = StatsFileIndex.read(spark, cat)
@@ -60,8 +68,8 @@ class StatsFileIndexSpec extends SparkSuite {
         .toDF("id", "ts")
         .coalesce(1).write.mode("append").parquet(s"$dir/t")
     }
-    StatsCatalog.refresh(spark, s"$dir/t", s"$dir/cat", Seq("ts"))
-    val table = StatsFileIndex.read(spark, spark.read.parquet(s"$dir/cat"))
+    val table = StatsFileIndex.read(spark,
+      catalogOf(s"$dir/t", s"$dir/cat", Seq("ts")))
     val firstHour = table.filter(
       col("ts") < new java.sql.Timestamp(base + 1800_000L))
     assert(firstHour.count() == 5)
@@ -91,8 +99,11 @@ class StatsFileIndexSpec extends SparkSuite {
     Seq(0L until 10L, 100L until 110L, 200L until 210L).foreach { r =>
       r.toDF("id").coalesce(1).write.mode("append").parquet(s"$dir/t")
     }
-    StatsCatalog.refresh(spark, s"$dir/t", s"$dir/cat", Seq("id"))
-    val cat = spark.read.parquet(s"$dir/cat")
+    // a frame of the committed snapshot dir that is NOT the resident
+    // version: the distributed class
+    val resident = catalogOf(s"$dir/t", s"$dir/cat", Seq("id"))
+    val cat = spark.read.parquet(TxnCatalog.residentOf(resident).get.dir)
+    assert(TxnCatalog.residentOf(cat).isEmpty)
 
     // distributed pruning path: the SAME mayMatch semantics, executor-side;
     // only rows overlapping the predicate window come back to the driver
@@ -101,9 +112,9 @@ class StatsFileIndexSpec extends SparkSuite {
     assert(fetched.length == 1)
     assert(fetched.head.minMax("id")._1.toDouble >= 150)
 
-    // an index forced onto the distributed path (cap = 0) plans and
-    // executes identically to the driver-cached path
-    val index = new StatsFileIndex(spark, cat, maxDriverRows = 0L)
+    // an index over the non-resident frame plans and executes
+    // identically to the driver-resident path
+    val index = new StatsFileIndex(spark, cat)
     assert(index.sizeInBytes > 0)
     assert(index.rootPaths.nonEmpty)
     assert(index.inputFiles.length == 3)
@@ -130,8 +141,7 @@ class StatsFileIndexSpec extends SparkSuite {
         val dataDir = new java.io.File(new java.net.URI(
           spark.table(table).inputFiles.head)).getParent
         val catDir = Files.createTempDirectory(s"cat_$table").toString
-        StatsCatalog.refresh(spark, dataDir, catDir, statCols)
-        spark.read.parquet(catDir)
+        catalogOf(dataDir, catDir, statCols)
       }
       // path-based reads (no metastore lookup), declared bucketed
       val f = StatsFileIndex.read(spark, catFor("sfi_facts", Seq("id")),
@@ -171,8 +181,7 @@ class StatsFileIndexSpec extends SparkSuite {
     // 1) files not written by the bucketed writer (no _NNNNN suffix) → reject
     val dir = Files.createTempDirectory("sfival").toString
     (0L until 10L).toDF("id").coalesce(1).write.parquet(s"$dir/t")
-    StatsCatalog.refresh(spark, s"$dir/t", s"$dir/cat", Seq("id"))
-    val plainCat = spark.read.parquet(s"$dir/cat")
+    val plainCat = catalogOf(s"$dir/t", s"$dir/cat", Seq("id"))
     val e1 = intercept[IllegalArgumentException] {
       StatsFileIndex.read(spark, plainCat, bucketBy = Some((8, Seq("id"))))
     }
@@ -185,8 +194,7 @@ class StatsFileIndexSpec extends SparkSuite {
       val dataDir = new java.io.File(new java.net.URI(
         spark.table("sfi_val").inputFiles.head)).getParent
       val catDir = Files.createTempDirectory("cat_sfi_val").toString
-      StatsCatalog.refresh(spark, dataDir, catDir, Seq("k"))
-      val cat = spark.read.parquet(catDir)
+      val cat = catalogOf(dataDir, catDir, Seq("k"))
       val e2 = intercept[IllegalArgumentException] {
         StatsFileIndex.read(spark, cat, bucketBy = Some((4, Seq("k"))))
       }

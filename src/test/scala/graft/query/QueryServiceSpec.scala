@@ -108,7 +108,7 @@ class QueryServiceSpec extends SparkSuite {
   }
 
   test("stats catalog prunes files before the scan; results stay exact") {
-    import graft.catalog.StatsCatalog
+    import graft.catalog.TxnCatalog
     val dir = Files.createTempDirectory("qsprune").toString
     val base = 1700000000000L // fixed epoch for determinism
     // two files in disjoint hour ranges
@@ -118,7 +118,7 @@ class QueryServiceSpec extends SparkSuite {
         .toDF("id", "p_timestamp")
         .coalesce(1).write.mode("append").parquet(s"$dir/logs")
     }
-    StatsCatalog.refresh(spark, s"$dir/logs", s"$dir/cat", Seq("p_timestamp"))
+    TxnCatalog.reconcile(spark, s"$dir/logs", s"$dir/cat", Seq("p_timestamp"))
     val streams = Map("logs" -> QueryService.Stream(s"$dir/logs", "p_timestamp",
       catalogPath = Some(s"$dir/cat")))
     // a range covering only the first hour → 10 rows, one file scanned
@@ -135,6 +135,30 @@ class QueryServiceSpec extends SparkSuite {
       java.time.Instant.ofEpochMilli(base + 7260_000L))
     assert(QueryService.query(spark, streams, "SELECT id FROM logs", none)
       .count() == 0)
+  }
+
+  test("a catalog dir with no committed version reads as no catalog: " +
+       "query, windowedRead and a plain read agree") {
+    val dir = Files.createTempDirectory("qsnover").toString
+    val base = 1700000000000L
+    Seq.tabulate(10)(j => (j.toLong, new Timestamp(base + j * 1000L)))
+      .toDF("id", "p_timestamp")
+      .coalesce(1).write.mode("append").parquet(s"$dir/logs")
+    // a half-initialized catalog: `_commits/` exists, no version in it
+    Files.createDirectories(java.nio.file.Paths.get(dir, "cat", "_commits"))
+    val stream = QueryService.Stream(s"$dir/logs", "p_timestamp",
+      catalogPath = Some(s"$dir/cat"))
+    val range = TimeRange(
+      java.time.Instant.ofEpochMilli(base + 2000L),
+      java.time.Instant.ofEpochMilli(base + 7000L))
+    val plain = spark.read.parquet(s"$dir/logs")
+      .filter(col("p_timestamp") >= new Timestamp(base + 2000L) &&
+        col("p_timestamp") < new Timestamp(base + 7000L)).count()
+    assert(plain == 5)
+    assert(QueryService.query(spark, Map("logs" -> stream),
+      "SELECT id FROM logs", range).count() == plain)
+    assert(QueryService.windowedRead(spark, "logs", stream, range)
+      .count() == plain)
   }
 
   test("window still injected into stream B when only stream A is user-constrained") {

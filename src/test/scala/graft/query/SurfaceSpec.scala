@@ -6,7 +6,7 @@ import java.util.Base64
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.catalog.StatsCatalog
+import graft.catalog.{StatsCatalog, TxnCatalog}
 import graft.ingest.KinesisSource
 
 /** Specs for the smaller reference surfaces: Kinesis unwrap (S3),
@@ -89,7 +89,7 @@ class SurfaceSpec extends SparkSuite {
     assert(back.filter(col("`service.name`") === "api").count() == 2)
   }
 
-  test("stats catalog: prune, limit truncation, count(*) fast path") {
+  test("stats catalog: prune, count(*) fast path") {
     val root = Files.createTempDirectory("cat").toString
     // three files with disjoint id ranges
     Seq.tabulate(3) { i =>
@@ -97,19 +97,13 @@ class SurfaceSpec extends SparkSuite {
         .withColumn("part", lit(i))
         .coalesce(1).write.mode("append").parquet(s"$root/data")
     }
-    StatsCatalog.refresh(spark, s"$root/data", s"$root/cat", Seq("id"))
+    TxnCatalog.reconcile(spark, s"$root/data", s"$root/cat", Seq("id"))
 
     // pruning: id > 250 → only the [200,300) file survives
     val files = StatsCatalog.pruneFiles(spark, s"$root/cat",
       Seq(StatsCatalog.Pred("id", StatsCatalog.Gt, "250")))
     assert(files.length == 1)
-    val pruned = StatsCatalog.prunedRead(spark, s"$root/cat",
-      Seq(StatsCatalog.Pred("id", StatsCatalog.Gt, "250")))
-    assert(pruned.count() == 100) // file-level may-contain; residual filter is caller's
-
-    // limit truncation: 150 rows needs only 2 of 3 files
-    val stats = StatsCatalog.pruneFileStats(spark, s"$root/cat", Nil)
-    assert(StatsCatalog.truncateByLimit(stats, 150).length == 2)
+    assert(spark.read.parquet(files: _*).count() == 100) // file-level may-contain
 
     // count(*) fast path: detector + metadata answer
     assert(QueryService.detectBareCountStar(spark,

@@ -1164,7 +1164,9 @@ object SparkEntry {
           col("o_orderpriority").like("%URGENT%").as("is_urgent"),
           coalesce(nullif(col("o_orderstatus"), lit("P")),
             lit("PENDING")).as("status_or_default"),
-          date_trunc("month", col("o_orderdate")).as("order_month"),
+          // a naive output timestamp, as every gate emits
+          date_trunc("month", col("o_orderdate")).cast("timestamp_ntz")
+            .as("order_month"),
           year(col("o_orderdate")).as("order_year"),
           floor(col("o_totalprice")).cast("long").as("price_floor"),
           abs(col("o_totalprice") - 250.0).as("dist_250"))

@@ -1,7 +1,17 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Manifest-style per-file statistics catalog: num_rows + per-column min/max,
   * consulted to prune the file list before a scan is planned.
@@ -23,6 +33,14 @@ import org.apache.spark.sql.functions._
   * catalog already excluded — the same file-skip economics as the
   * reference's manifest, Delta's data skipping, or Iceberg manifests.
   *
+  * A new file's row is built as the reference builds its manifest entry:
+  * from the file's footer, on the driver ([[readFooter]]) — row-group
+  * counts, the file length, and the column-chunk min/max of integer, DATE
+  * and TIMESTAMP stat columns. Only a file the footer cannot answer
+  * exactly (an INT96 or legacy-calendar timestamp, a floating-point or
+  * string stat column, a row group without statistics) goes through the
+  * Spark aggregate [[collectFiles]].
+  *
   * Statistics stand in for the reference's 4-variant TypedStatistics
   * (`column.rs:54-59`): min/max are stored as their string casts, and a
   * file that lacks the column records null stats, which never prune — the
@@ -40,10 +58,11 @@ object StatsCatalog {
   def collect(spark: SparkSession, tableRoot: String, statCols: Seq[String]): DataFrame =
     statAgg(spark.read.parquet(tableRoot), statCols)
 
-  /** As [[collect]] over an explicit file list (incremental refresh path —
-    * only the named files are scanned). The read schema is the footer of
-    * the first path in sorted order, the file Spark's own inference would
-    * open, read on the driver instead of by an inference job.
+  /** As [[collect]] over an explicit file list: the fallback for files
+    * whose footer cannot give exact stats ([[readFooter]]). The read schema
+    * is the footer of the first path in sorted order, the file Spark's own
+    * inference would open, read on the driver instead of by an inference
+    * job.
     */
   def collectFiles(spark: SparkSession, paths: Seq[String],
                    statCols: Seq[String]): DataFrame =
@@ -72,6 +91,124 @@ object StatsCatalog {
       first(col("_metadata.file_size")).as("file_size"))
     df.groupBy(col("_metadata.file_path").as("file_path"))
       .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Schema of a stats row over `statCols`, in [[statAgg]]'s column order. */
+  def statsSchema(statCols: Seq[String]): StructType =
+    StructType(StructField("file_path", StringType) +:
+      statCols.flatMap(c => Seq(StructField(s"min_$c", StringType),
+        StructField(s"max_$c", StringType))) :+
+      StructField("num_rows", LongType) :+ StructField("file_size", LongType))
+
+  /** One data file's footer, read on the driver: its data schema and, when
+    * the footer answers every stat column exactly, its stats row — the row
+    * [[collectFiles]] would compute for the file.
+    */
+  final case class Footer(path: String, schema: StructType, stats: Option[Row])
+
+  /** Read `path`'s footer once: `num_rows` from the row-group counts,
+    * `file_size` from the file status, and per stat column the min/max of
+    * its column-chunk statistics, rendered through Spark's `Cast` in the
+    * session time zone exactly as [[statAgg]]'s `min(c).cast("string")`
+    * renders them. A stat column absent from the file records null stats,
+    * as in [[statAgg]]; a column the footer cannot answer exactly leaves
+    * `stats` empty.
+    */
+  def readFooter(spark: SparkSession, path: String,
+                 statCols: Seq[String]): Footer = {
+    val conf = spark.sessionState.newHadoopConf()
+    val hpath = new Path(path)
+    val in = HadoopInputFile.fromPath(hpath, conf)
+    val reader = ParquetFileReader.open(in)
+    val meta = try reader.getFooter finally reader.close()
+    val schema = graft.plans.StatsFileIndex.footerSchema(spark, hpath, meta)
+    val minMax = statCols.map(c => footerMinMax(spark, meta, schema, c))
+    val stats = Option.when(minMax.forall(_.isDefined)) {
+      val numRows = meta.getBlocks.asScala.map(_.getRowCount).sum
+      Row.fromSeq(path +: minMax.flatten.flatMap { case (lo, hi) => Seq(lo, hi) } :+
+        numRows :+ in.getLength)
+    }
+    Footer(path, schema, stats)
+  }
+
+  /** (min, max) of stat column `c` from a footer: `Some((null, null))` when
+    * the file lacks the column or holds only nulls in it, None when the
+    * footer cannot answer exactly.
+    */
+  private def footerMinMax(spark: SparkSession, meta: ParquetMetadata,
+                           schema: StructType,
+                           c: String): Option[(String, String)] = {
+    val fileSchema = meta.getFileMetaData.getSchema
+    val field = schema.fields.find(_.name == c)
+    if (field.isEmpty)
+      // a case-insensitive match would resolve in the aggregate
+      return Option.when(!schema.fieldNames.exists(_.equalsIgnoreCase(c)))(
+        (null, null))
+    val parquetType = (fileSchema: org.apache.parquet.schema.GroupType).getType(c)
+    if (!parquetType.isPrimitive) return None
+    renderer(spark, meta, field.get.dataType, parquetType.asPrimitiveType)
+      .flatMap { render =>
+        val colPath = org.apache.parquet.hadoop.metadata.ColumnPath.get(c)
+        var lo = Long.MaxValue
+        var hi = Long.MinValue
+        var seen = false
+        val exact = meta.getBlocks.asScala.filter(_.getRowCount > 0).forall { b =>
+          b.getColumns.asScala.find(_.getPath == colPath).exists { chunk =>
+            val s = chunk.getStatistics
+            if (s == null || s.isEmpty) false
+            else if (s.hasNonNullValue) {
+              lo = math.min(lo, s.genericGetMin.asInstanceOf[Number].longValue)
+              hi = math.max(hi, s.genericGetMax.asInstanceOf[Number].longValue)
+              seen = true
+              true
+            }
+            // an all-null row group adds nothing to min/max
+            else s.isNumNullsSet && s.getNumNulls == b.getRowCount
+          }
+        }
+        Option.when(exact)(
+          if (seen) (render(lo), render(hi)) else (null, null))
+      }
+  }
+
+  /** String rendering of a column-chunk statistic for a stat column read
+    * as `dt`, or None when the footer value is not that column's exact
+    * value: only INT32/INT64 columns with a signed integer, DATE or
+    * (MILLIS/MICROS) TIMESTAMP annotation whose timestamp flavour matches
+    * the read type, in a file not written in the legacy hybrid calendar.
+    */
+  private def renderer(spark: SparkSession, meta: ParquetMetadata,
+                       dt: DataType, pt: PrimitiveType): Option[Long => String] = {
+    import LogicalTypeAnnotation._
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    def cast(t: DataType, v: Any): String =
+      Cast(Literal(v, t), StringType, tz).eval(null).toString
+    val kv = meta.getFileMetaData.getKeyValueMetaData
+    // Spark rebases dates and timestamps of legacy-calendar files on read
+    val rebased = kv.containsKey("org.apache.spark.legacyDateTime") ||
+      Option(kv.get("org.apache.spark.version")).fold(
+        spark.conf.get("spark.sql.parquet.datetimeRebaseModeInRead") ==
+          "LEGACY")(_.startsWith("2."))
+    val integral = pt.getPrimitiveTypeName == PrimitiveTypeName.INT32 ||
+      pt.getPrimitiveTypeName == PrimitiveTypeName.INT64
+    (dt, pt.getLogicalTypeAnnotation) match {
+      case _ if !integral => None
+      case (ByteType | ShortType | IntegerType | LongType, null) =>
+        Some(_.toString)
+      case (ByteType | ShortType | IntegerType | LongType,
+            a: IntLogicalTypeAnnotation) if a.isSigned =>
+        Some(_.toString)
+      case (DateType, _: DateLogicalTypeAnnotation) if !rebased =>
+        Some(v => cast(DateType, v.toInt))
+      case (TimestampType | TimestampNTZType, a: TimestampLogicalTypeAnnotation)
+          if !rebased && a.isAdjustedToUTC == (dt == TimestampType) =>
+        a.getUnit match {
+          case TimeUnit.MICROS => Some(v => cast(dt, v))
+          case TimeUnit.MILLIS => Some(v => cast(dt, Math.multiplyExact(v, 1000L)))
+          case _               => None
+        }
+      case _ => None
+    }
   }
 
   /** Binary predicate usable for pruning: col op literal. */

@@ -51,6 +51,10 @@ import graft.plans.StatsFileIndex
   * it launches no Spark job. Larger catalogs stay distributed: their frames
   * read the snapshot dir, as every frame did before residency.
   *
+  * New files are cataloged from their parquet footers, read on the driver
+  * (see [[withFreshStats]]); a version also records the merged data schema
+  * of its files, so a catalog scan sees every field any file carries.
+  *
   * Each commit still writes the whole next snapshot (O(catalog) bytes per
   * version); time travel is free (old versions stay until [[vacuum]]).
   */
@@ -98,7 +102,8 @@ object TxnCatalog {
       private[catalog] val version: Long,
       val dir: String,
       val schema: StructType,
-      committedRows: IndexedSeq[InternalRow]) {
+      committedRows: IndexedSeq[InternalRow],
+      filesSchema: Option[StructType]) {
 
     // a no-op update hands back the base version's payload: keep only its
     // rows, never a chain of earlier snapshots
@@ -132,18 +137,23 @@ object TxnCatalog {
     def derived[T <: AnyRef](key: String)(compute: => T): T =
       derivedValues.computeIfAbsent(key, _ => compute).asInstanceOf[T]
 
-    /** `file_path` of the first row, the file [[dataSchema]] reads. */
+    /** `file_path` of the first row, the file [[dataSchema]] reads for a
+      * version committed without a data schema.
+      */
     private def firstPath: Option[String] =
       Option(schema.fieldNames.indexOf("file_path")).filter(_ >= 0)
         .filter(i => schema(i).dataType == StringType && rows.nonEmpty &&
           !rows.head.isNullAt(i))
         .map(i => rows.head.getUTF8String(i).toString)
 
-    /** Data schema of the first cataloged file, from its footer, read on
-      * the driver once per snapshot.
+    /** Data schema of the version's files: the merged footer schema its
+      * commit persisted ([[DataSchemaFile]]), else that of the first
+      * cataloged file, from its footer, read on the driver once per
+      * snapshot.
       */
     def dataSchema(spark: SparkSession): Option[StructType] =
-      derived("data-schema")(firstPath.map(StatsFileIndex.footerSchema(spark, _)))
+      filesSchema.orElse(
+        derived("data-schema")(firstPath.map(StatsFileIndex.footerSchema(spark, _))))
   }
 
   /** LocalRelation payload that remembers its [[Snapshot]]. */
@@ -209,6 +219,27 @@ object TxnCatalog {
     finally parts.close()
   }
 
+  /** File beside a version's snapshot data holding the merged data schema
+    * of its files (Spark's schema JSON). Its `_` prefix keeps it out of
+    * parquet reads of the snapshot dir.
+    */
+  private val DataSchemaFile = "_data_schema.json"
+
+  private def persistedSchema(dir: String): Option[StructType] = {
+    val f = Paths.get(dir, DataSchemaFile)
+    Option.when(Files.isRegularFile(f))(
+      org.apache.spark.sql.types.DataType.fromJson(Files.readString(f))
+        .asInstanceOf[StructType])
+  }
+
+  /** `base` plus the top-level fields of `more` it lacks (names compared
+    * case-insensitively, as Spark resolves them): the first type seen for
+    * a name wins, new names append in arrival order.
+    */
+  private def mergeSchema(base: StructType, more: StructType): StructType =
+    StructType(base.fields ++ more.fields.filterNot(f =>
+      base.fieldNames.exists(_.equalsIgnoreCase(f.name))))
+
   /** Rows in parquet files, from their footers (no Spark job). */
   private def footerRowCount(spark: SparkSession, files: Seq[String]): Long =
     files.map { f =>
@@ -219,8 +250,9 @@ object TxnCatalog {
     }.sum
 
   /** The frame of version `v`: resident rows when held (loading them once
-    * if this JVM did not commit the version), else the snapshot dir. Both
-    * take the schema from a footer read on the driver, not an inference job.
+    * if this JVM did not commit the version, with the data schema its
+    * commit persisted), else the snapshot dir. Both take the schema from a
+    * footer read on the driver, not an inference job.
     */
   private def load(spark: SparkSession, root: String,
                    v: Long): Option[DataFrame] =
@@ -238,7 +270,7 @@ object TxnCatalog {
             val toRow = CatalystTypeConverters.createToCatalystConverter(df.schema)
             install(new Snapshot(rootKey(root), v, dir, df.schema,
               df.collect().map(r => toRow(r).asInstanceOf[InternalRow])
-                .toIndexedSeq)).frame(spark)
+                .toIndexedSeq, persistedSchema(dir))).frame(spark)
           }
       }
     }
@@ -277,26 +309,46 @@ object TxnCatalog {
     */
   def commit(spark: SparkSession, root: String, maxRetries: Int = 10)(
       update: Option[DataFrame] => DataFrame): Long =
-    commitChange(spark, root, maxRetries)(current => Some(update(current)))
+    commitChange(spark, root, maxRetries)(current =>
+      Some(Change(update(current))))
+
+  /** A catalog update: the next version's rows, and the data schemas of
+    * the files it adds, from the footers its stats were read from.
+    */
+  private final case class Change(rows: DataFrame,
+                                  addedSchemas: Seq[StructType] = Nil)
 
   /** [[commit]] for an update that may find nothing to change: None
     * commits nothing and returns the latest version (-1 when there is none).
+    *
+    * A version over a resident base (or the first version) also records
+    * its files' data schema: the base's, merged with `addedSchemas`,
+    * persisted as [[DataSchemaFile]] before the marker lands.
     */
   private def commitChange(spark: SparkSession, root: String,
                            maxRetries: Int = 10)(
-      update: Option[DataFrame] => Option[DataFrame]): Long = {
+      update: Option[DataFrame] => Option[Change]): Long = {
     var attempt = 0
     while (true) {
       val base = latestVersion(root)
       val next = base.getOrElse(-1L) + 1
       val current = base.flatMap(load(spark, root, _))
       // nothing to change: the latest version stands, nothing is written
-      val updated = update(current).getOrElse(return next - 1)
+      val Change(updated, added) = update(current).getOrElse(return next - 1)
       val held = driverRows(updated).filter(r => holdable(r.size.toLong))
+      val filesSchema = current match {
+        case None => added.reduceOption(mergeSchema)
+        case Some(c) => residentOf(c)
+          // a base whose first file is gone has no schema to carry
+          .flatMap(s => scala.util.Try(s.dataSchema(spark)).toOption.flatten)
+          .map(added.foldLeft(_)(mergeSchema))
+      }
       // writer-unique snapshot data, invisible until the marker lands
       val dirName = f"v$next%06d-${UUID.randomUUID()}"
       val dir = Paths.get(root, dirName).toAbsolutePath.normalize
       updated.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      filesSchema.foreach(fs =>
+        Files.writeString(dir.resolve(DataSchemaFile), fs.json))
       Files.createDirectories(commitsDir(root))
       val tmp = Files.createTempFile(commitsDir(root), s".v$next-", ".tmp")
       Files.writeString(tmp,
@@ -305,7 +357,8 @@ object TxnCatalog {
         Files.createLink(commitsDir(root).resolve(s"$next.json"), tmp)
         Files.deleteIfExists(tmp)
         held.foreach(rows => install(new Snapshot(rootKey(root), next,
-          dir.toString, ColumnBridge.asNullable(updated.schema), rows)))
+          dir.toString, ColumnBridge.asNullable(updated.schema), rows,
+          filesSchema)))
         return next
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
@@ -325,32 +378,45 @@ object TxnCatalog {
 
   /** `keep(current)` plus stats rows for the `fresh` data files, or None
     * when neither changes the catalog (`removed` says whether `keep` drops
-    * a row). When the result stays resident, the fresh stats are collected
-    * here (their only Spark jobs), so [[commit]] writes the next version
-    * from driver rows.
+    * a row). Each fresh file's footer is read once, on the driver: it gives
+    * the file's data schema and, for footer-exact files, its stats row
+    * ([[StatsCatalog.readFooter]]). Only the other files go through the
+    * Spark aggregate [[StatsCatalog.collectFiles]], collected here when the
+    * result stays resident, so [[commit]] writes the next version from
+    * driver rows.
     */
   private def withFreshStats(spark: SparkSession, current: Option[DataFrame],
                              fresh: Seq[String], statCols: Seq[String],
                              keep: DataFrame => DataFrame = identity,
-                             removed: Boolean = false): Option[DataFrame] =
-    if (fresh.isEmpty) Option.when(removed)(keep(current.get))
+                             removed: Boolean = false): Option[Change] =
+    if (fresh.isEmpty) Option.when(removed)(Change(keep(current.get)))
     else {
-      val stats = StatsCatalog.collectFiles(spark, fresh, statCols)
-      val base = current.map(c => residentOf(c).map(_.size.toLong))
+      val footers = fresh.map(StatsCatalog.readFooter(spark, _, statCols))
+      val exact = spark.createDataFrame(footers.flatMap(_.stats).asJava,
+        StatsCatalog.statsSchema(statCols))
+      val rest = footers.filter(_.stats.isEmpty).map(_.path)
       val freshStats =
-        if (base.forall(_.exists(n => holdable(n + fresh.size))))
-          spark.createDataFrame(stats.collect().toSeq.asJava, stats.schema)
-        else stats
-      Some(current.map(keep)
-        .fold(freshStats)(_.unionByName(freshStats, allowMissingColumns = true)))
+        if (rest.isEmpty) exact
+        else {
+          val stats = StatsCatalog.collectFiles(spark, rest, statCols)
+          val base = current.map(c => residentOf(c).map(_.size.toLong))
+          exact.unionByName(
+            if (base.forall(_.exists(n => holdable(n + fresh.size))))
+              spark.createDataFrame(stats.collect().toSeq.asJava, stats.schema)
+            else stats)
+        }
+      Some(Change(current.map(keep)
+        .fold(freshStats)(_.unionByName(freshStats, allowMissingColumns = true)),
+        footers.map(_.schema)))
     }
 
   /** Incremental stats refresh: compute [[StatsCatalog]] rows ONLY for data
     * files not yet in the catalog and append them as a new version — it
-    * diffs the file listing against the catalog and runs the stats job over
-    * just the new paths, O(new data), the only refresh economics that
-    * survive 100 TB. No new file, no new version. (Catalog paths are
-    * `file:`-scheme URIs, as `_metadata` emits.)
+    * diffs the file listing against the catalog and reads stats for just
+    * the new paths (their footers; see [[withFreshStats]]), O(new data),
+    * the only refresh economics that survive 100 TB. No new file, no new
+    * version. (Catalog paths are `file:`-scheme URIs, as `_metadata`
+    * emits.)
     */
   def appendNewFiles(spark: SparkSession, tableRoot: String, root: String,
                      statCols: Seq[String]): Long =
@@ -441,7 +507,7 @@ object TxnCatalog {
     * catalog doesn't know (backfill into old partitions included — the
     * case [[appendNewFilesWatermarked]] deliberately skips) AND drop rows
     * whose files are gone (retention, compaction, manual deletes). O(table
-    * listing) + a stats job over new files only — the occasional-repair
+    * listing) + stats for the new files only — the occasional-repair
     * path; the per-append hot path stays [[appendNewFilesWatermarked]].
     */
   def reconcile(spark: SparkSession, tableRoot: String, root: String,

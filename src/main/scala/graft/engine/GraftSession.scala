@@ -28,6 +28,11 @@ object GraftSession {
     // columnar batch default is 4096 — raise toward the reference's choice.
     "spark.sql.parquet.columnarReaderBatchSize" -> "16384",
     "spark.sql.session.timeZone" -> "UTC",
+    // Timestamps are written as INT64 micros, which carry column-chunk
+    // min/max in the footer (Spark's default INT96 carries none): the stats
+    // catalog builds a new file's row from its footer on the driver instead
+    // of a Spark aggregate over the file. Read-back type is unchanged.
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
     // The synthetic events table stores TIMESTAMP(NANOS) which Spark's
     // vectorized reader rejects; read as long and convert (see [[table]]).
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",

@@ -121,7 +121,7 @@ private[http] trait IngestRoutes { self: GraftHttpServer =>
             ingested match {
               case Left(msg) => err(ex, 400, msg)
               case Right(df) =>
-                val n = df.count()
+                val n = IngestPipeline.rowCount(df)
                 appendWithStats(df, cfg)
                 ingestCalls.incrementAndGet()
                 ingestedEvents.addAndGet(n)
@@ -200,7 +200,7 @@ private[http] trait IngestRoutes { self: GraftHttpServer =>
                 format = s"otel-$signal") match {
               case Left(msg) => err(ex, 400, msg)
               case Right(df) =>
-                val n = df.count()
+                val n = IngestPipeline.rowCount(df)
                 appendWithStats(df, cfg)
                 ingestCalls.incrementAndGet()
                 ingestedEvents.addAndGet(n)
@@ -236,11 +236,13 @@ private[http] trait IngestRoutes { self: GraftHttpServer =>
       // the catalog once it exists — on failure, drop it entirely so
       // readers fall back to full listing (correct, just slower); the next
       // successful sync rebuilds it. The hot path is the transaction log's
-      // watermarked append: O(new partitions) listed per ingest and stats
-      // computed for the new files only, then one atomic catalog version
+      // watermarked append: O(new partitions) listed per ingest, the new
+      // files' stats read from their parquet footers on the driver (no
+      // Spark job; only a file the footer cannot answer exactly goes
+      // through a stats aggregate), then one atomic catalog version
       // committed. That version is still a full snapshot rewrite
-      // (O(catalog) bytes), written from driver rows when the catalog is
-      // resident.
+      // (O(catalog) bytes, one write job), written from driver rows when
+      // the catalog is resident.
       try {
         // z-ordered streams record min/max for the clustered dims too —
         // that's what lets StatsFileIndex prune a user's box predicate

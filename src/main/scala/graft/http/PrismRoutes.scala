@@ -83,7 +83,7 @@ private[http] trait PrismRoutes { self: GraftHttpServer =>
                 events, "demo-data", "127.0.0.1") match {
               case Left(msg) => err(ex, 500, msg)
               case Right(df) =>
-                val n = df.count()
+                val n = IngestPipeline.rowCount(df)
                 appendWithStats(df, cfg)
                 ingestedEvents.addAndGet(n)
                 countStreamIngest(cfg.name, n,
@@ -150,7 +150,7 @@ private[http] trait PrismRoutes { self: GraftHttpServer =>
             GraftHttpServer.otelDemoBatch(batches, 5))
           IngestPipeline.ingestEvents(spark, registry, cfg, events,
               "otel-generator", "127.0.0.1")
-            .foreach { df => df.count(); appendWithStats(df, cfg) }
+            .foreach(appendWithStats(_, cfg))
           batches += 1
         } catch { case _: Exception => () } // never kill the loop
         Thread.sleep(intervalMillis)

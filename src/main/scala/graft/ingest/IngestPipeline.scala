@@ -5,7 +5,9 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** JSON → stream ingest: flatten, infer, conflict-rename, enrich, append as
@@ -33,8 +35,8 @@ object IngestPipeline {
     * the reference's time-only manifest pruning
     * (`src/query/stream_schema_provider.rs:1032-1137`) multi-dimensional.
     * `dims` must be numeric (or timestamp) columns; `k·bits ≤ 63`.
-    * `numFiles = 0` leaves the range-partition count to Spark (empty
-    * ranges write no files, so small batches stay small); compaction
+    * `numFiles = 0` ranges a batch over `spark.sql.shuffle.partitions`
+    * (empty ranges write no files, so small batches stay small); compaction
     * ([[graft.catalog.Compaction]]) re-clusters at the partition level for
     * the long-term layout.
     */
@@ -196,7 +198,8 @@ object IngestPipeline {
   }
 
   /** Ingest one JSON payload into the stream: returns the enriched
-    * DataFrame (with `p_*` columns) ready to append.
+    * DataFrame (with `p_*` columns) ready to append, evaluated once on the
+    * driver (see [[ingestEvents]]).
     */
   def ingest(
       spark: SparkSession,
@@ -215,6 +218,12 @@ object IngestPipeline {
   /** Ingest pre-flattened events (the OTel/Kinesis path — source-specific
     * flatteners run first, then the same rename/merge/enrich pipeline;
     * reference `flatten_and_push_logs`, ingest_utils.rs:196-282).
+    *
+    * The batch is evaluated once, on the driver, with no Spark job: the
+    * returned frame is local data holding the enriched rows, so the count
+    * ([[rowCount]]), the written rows and the live-tail fan-out all see
+    * the same rows — `p_timestamp` included (`current_timestamp()` would
+    * otherwise be re-evaluated by every action on the frame).
     */
   def ingestEvents(
       spark: SparkSession,
@@ -269,16 +278,32 @@ object IngestPipeline {
       // add_parseable_fields, utils/arrow/mod.rs:99-146): server-stamped
       // string columns in sorted key order; an event field of the same
       // name WINS (duplicates skipped, like the reference)
-      customFields.toSeq.sortBy(_._1).foldLeft(base) { case (d, (k, v)) =>
-        if (d.columns.contains(k)) d else d.withColumn(k, lit(v))
-      }
+      val enriched =
+        customFields.toSeq.sortBy(_._1).foldLeft(base) { case (d, (k, v)) =>
+          if (d.columns.contains(k)) d else d.withColumn(k, lit(v))
+        }
+      // a projection of local rows collects on the driver (no job)
+      spark.createDataFrame(enriched.collect().toSeq.asJava, enriched.schema)
     }
+  }
+
+  /** Rows of a batch from [[ingest]]/[[ingestEvents]], read from its local
+    * data on the driver (no job); any other frame is counted by Spark.
+    */
+  def rowCount(df: DataFrame): Long = ColumnBridge.logicalPlan(df) match {
+    case l: LocalRelation => l.data.size.toLong
+    case _                => df.count()
   }
 
   /** Append an enriched batch to the stream's parquet table, Hive-partitioned
     * by minute (reference prefix scheme `date=/hour=/minute=`,
     * `src/utils/time.rs:215-229`). Partition columns are derived, never
     * stored in the row payload.
+    *
+    * A batch whose plan is local data (every batch from [[ingestEvents]])
+    * is written by one task: one file per partition dir, as the reference
+    * writes one file per stream-minute. Spark would otherwise split it
+    * over min(rows, defaultParallelism) tasks, each writing its own file.
     */
   def append(df: DataFrame, root: String, cfg: StreamConfig): Unit = {
     val timeCol = cfg.timePartition.map(col).getOrElse(col("p_timestamp"))
@@ -295,14 +320,21 @@ object IngestPipeline {
       // z-range slices. A batch missing a dim (schema drift: events
       // written before the column existed) falls back to the time sort —
       // drift must not refuse ingest, the files are just unclustered
-      // until compaction re-lays them out.
+      // until compaction re-lays them out. The range count is always
+      // explicit: left to Spark, AQE coalesces a small batch's ranges into
+      // one, a single file whose stats span every dimension.
       case Some(p) if p.dims.forall(df.columns.contains) =>
-        graft.operators.ZOrder.zOrderBy(dated, p.dims, p.bits, p.numFiles)
+        graft.operators.ZOrder.zOrderBy(dated, p.dims, p.bits,
+          if (p.numFiles > 0) p.numFiles
+          else df.sparkSession.sessionState.conf.numShufflePartitions)
       // latest-first physical order inside every written file (reference
       // writes parquet sorted p_timestamp DESC, streams.rs:705-780) — raw
       // log listings then read newest rows first and row-group time stats
       // stay tight for pruning
-      case _ => dated.sortWithinPartitions(timeCol.desc)
+      case _ =>
+        val local = ColumnBridge.optimizedPlan(df).isInstanceOf[LocalRelation]
+        (if (local) dated.coalesce(1) else dated)
+          .sortWithinPartitions(timeCol.desc)
     }
     laid.write
       .mode("append")

@@ -172,13 +172,20 @@ object StatsFileIndex {
     */
   def footerSchema(spark: SparkSession, file: String): StructType = {
     import org.apache.parquet.format.converter.ParquetMetadataConverter
-    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
     val path = new Path(file)
-    val meta = ParquetFileReader.readFooter(spark.sessionState.newHadoopConf(),
-      path, ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    footerSchema(spark, path, ParquetFileReader.readFooter(
+      spark.sessionState.newHadoopConf(), path,
+      ParquetMetadataConverter.SKIP_ROW_GROUPS))
+  }
+
+  /** The data schema of an already-read footer. */
+  def footerSchema(spark: SparkSession, path: Path,
+                   meta: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
     ColumnBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
-      new Footer(path, meta),
+      new org.apache.parquet.hadoop.Footer(path, meta),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
   }
 
@@ -218,9 +225,9 @@ object StatsFileIndex {
     }
 
   /** A DataFrame over the cataloged files with stats-based file skipping
-    * wired into the scan. `schema` comes from the first cataloged file's
-    * footer, read on the driver and kept with a resident snapshot (or pass
-    * it explicitly for schema-evolved tables).
+    * wired into the scan. `schema` defaults to a resident snapshot's data
+    * schema (the merged footer schema of its files), else the first
+    * cataloged file's footer, read on the driver.
     *
     * `bucketBy = Some((n, cols))` declares the files as Spark-bucketed
     * (they must have been WRITTEN by Spark's bucketed writer — the bucket
@@ -271,9 +278,8 @@ object StatsFileIndex {
         }
     }
     val index = new StatsFileIndex(spark, cat)
-    // one file's footer is enough (streams share a write schema; pass
-    // `schema` explicitly for schema-evolved tables) — never list every
-    // cataloged path into one read. A resident snapshot keeps it.
+    // a resident snapshot carries its files' merged schema; otherwise one
+    // file's footer — never list every cataloged path into one read
     val dataSchema = schema
       .orElse(TxnCatalog.residentOf(cat).flatMap(_.dataSchema(spark)))
       .getOrElse {

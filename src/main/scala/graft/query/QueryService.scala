@@ -279,12 +279,18 @@ object QueryService {
       .flatMap(catalogPaths.get)
       .map(graft.catalog.StatsCatalog.countStar(spark, _))
 
-  /** Reader with the stream's persisted union schema applied (old files
-    * null-fill newer columns; no `mergeSchema` footer storm).
+  /** Reader with the stream's data schema applied: its persisted union
+    * schema, else the data schema its catalog's latest version holds (the
+    * schema a catalog scan reads with). Old files null-fill newer columns;
+    * no `mergeSchema` footer storm, no inference job.
     */
   private def plainReader(spark: SparkSession, name: String, s: Stream) =
     s.metaRoot
       .flatMap(graft.catalog.StreamMeta.unionSchema(_, name))
+      .orElse(s.catalogPath
+        .flatMap(graft.catalog.TxnCatalog.snapshot(spark, _))
+        .flatMap(graft.catalog.TxnCatalog.residentOf)
+        .flatMap(_.dataSchema(spark)))
       .foldLeft(spark.read)((r, schema) => r.schema(schema))
 
   /** Staging freshness window (reference: queries whose range touches the

@@ -163,4 +163,34 @@ class LivetailHttpSpec extends SparkSuite {
         "fromA", s"server A's tail delivered: $line")
     } finally { a.stop(); b.stop() }
   }
+  test("tailed rows equal the stored rows, p_timestamp included") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-tail3").toString
+    val srv = new GraftHttpServer(spark, tmp)
+    srv.start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}/api/v1"
+      def ingest(rows: String): Unit = {
+        val (s, b) = http("POST", s"$base/ingest",
+          Map("X-P-Stream" -> "stamped"), Some(rows))
+        assert(s == 200, b)
+      }
+      ingest("""{"m": "create"}""")
+      val (conn, reader) = openTail(
+        s"$base/livetail/stamped?maxEvents=2&timeoutMs=60000", Map.empty)
+      ingest("""[{"m": "one"}, {"m": "two"}]""")
+      val tailed = Seq(reader.readLine(), reader.readLine()).map { l =>
+        val r = mapper.readTree(l)
+        r.get("m").asText -> r.get("p_timestamp").asText
+      }.toSet
+      conn.disconnect()
+      val stored = spark.read.parquet(s"$tmp/stamped")
+        .where("m != 'create'").select("m", "p_timestamp").collect()
+        .map(r => r.getString(0) -> r.getTimestamp(1).toInstant.toString)
+        .toSet
+      assert(tailed.size == 2 && tailed == stored,
+        s"tailed $tailed, stored $stored")
+    } finally {
+      srv.stop(); LiveTail.clear(srv.liveTailKey("stamped"))
+    }
+  }
 }

@@ -22,6 +22,27 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `plan` run through the session's analyzer and checked: one analysis,
+    * no Dataset.
+    */
+  def analyze(spark: org.apache.spark.sql.SparkSession,
+              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.executePlan(plan).analyzed
+
+  /** DataFrame over a plan that is already analyzed but was rewritten
+    * since (e.g. a filter added over resolved attributes): the plan is
+    * only CHECKED — which marks it analyzed — so building the Dataset runs
+    * no analyzer rule.
+    */
+  def ofAnalyzed(spark: org.apache.spark.sql.SparkSession,
+                 plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame = {
+    spark.sessionState.analyzer.checkAnalysis(plan)
+    ofRows(spark, plan)
+  }
+
   /** The analyzed logical plan behind a DataFrame. */
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

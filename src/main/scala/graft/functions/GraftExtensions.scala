@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.ColumnBridge
 
-/** Engine extensions: native function registration.
+/** Engine extensions: native function registration and the top-k
+  * planner strategy.
   *
   * Two entry points:
   *   - `--conf spark.sql.extensions=graft.functions.GraftExtensions`
@@ -17,8 +18,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.registrations.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    ext.injectOptimizerRule(session =>
-      new graft.plans.TimeFilterInjectionRule(session))
   }
 }
 

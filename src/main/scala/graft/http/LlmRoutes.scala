@@ -2,7 +2,7 @@ package graft.http
 
 import com.sun.net.httpserver.HttpExchange
 
-import graft.query.Rbac
+import graft.query.{QueryService, Rbac}
 
 /** Prompt-to-SQL endpoint (reference `get_llm_webscope`,
   * `src/handlers/http/modal/server.rs:807-815`):
@@ -52,7 +52,7 @@ private[http] trait LlmRoutes { self: GraftHttpServer =>
             return
           }
           val schema = registry.get(tenantKey(tenant, stream))
-            .getOrElse(spark.read.parquet(s.path).schema)
+            .getOrElse(QueryService.catalogRead(spark, stream, s).schema)
           val aiPrompt =
             Llm.buildPrompt(stream, prompt, Llm.schemaJson(schema))
           val req = java.net.http.HttpRequest.newBuilder()

@@ -56,10 +56,12 @@ private[http] trait QueryRoutes { self: GraftHttpServer =>
             // stream names resolve strictly inside the caller's tenant —
             // another tenant's streams are absent from this map entirely
             val visible = streamsFor(tenantOf(user))
+            // the one parse: every check below and the execution read it
+            val plan = QueryService.parse(spark, q)
             // reference `handle_count_query`: a bare COUNT(*) over a
             // catalog-backed stream answers from manifest row counts for
             // the window (one-bin density) — no data scan
-            QueryService.bareCountStar(spark, q) match {
+            QueryService.bareCountStar(plan) match {
               case Some((table, outName))
                   if visible.get(table).exists(_.catalogPath.isDefined) &&
                     user.forall(Rbac.authorized(_, Rbac.QueryAction,
@@ -100,14 +102,14 @@ private[http] trait QueryRoutes { self: GraftHttpServer =>
             // a CTE named like a visible stream would make single-part
             // resolution ambiguous — 400 with an actionable message
             // (QueryService.query would refuse anyway; surface it cleanly)
-            val shadowing = QueryService.cteNames(spark, q)
+            val shadowing = QueryService.cteNames(plan)
               .filter(n => visible.keys.exists(_.equalsIgnoreCase(n)))
             if (shadowing.nonEmpty) {
               err(ex, 400, s"CTE name(s) ${shadowing.mkString(", ")} " +
                 "shadow stream names; rename the CTE")
               return
             }
-            val referenced = QueryService.referencedTables(spark, q)
+            val referenced = QueryService.referencedTables(plan)
             // every referenced relation must be a stream the caller can
             // see — silently dropping unknown names would let resolution
             // fall through to whatever the shared session catalog happens
@@ -126,11 +128,11 @@ private[http] trait QueryRoutes { self: GraftHttpServer =>
                     case Some(n) =>
                       Left(s"user '$u' lacks query access to stream '$n'")
                     case None =>
-                      Right(QueryService.query(spark, visible, q, range,
+                      Right(QueryService.query(spark, visible, plan, range,
                         scope = tenant))
                   }
                 case None =>
-                  Right(QueryService.query(spark, visible, q, range,
+                  Right(QueryService.query(spark, visible, plan, range,
                     scope = tenant))
               }
             result match {

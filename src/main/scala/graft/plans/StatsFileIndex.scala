@@ -3,8 +3,9 @@ package graft.plans
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, BoundReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.graft.PartitionBridge
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StructType
@@ -40,8 +41,15 @@ import graft.catalog.{StatsCatalog, TxnCatalog}
   * rows, and `sizeInBytes`/`rootPaths` come from tiny aggregates. A
   * 10M-file catalog thus never materializes on the driver; what comes back
   * is bounded by the query's own pruning (e.g. its time window).
+  *
+  * Given the table's root, the index also carries the table's Hive
+  * partitioning (`date=/hour=/minute=` plus custom partitions), parsed by
+  * Spark's own partition parser from the cataloged files' directories —
+  * the same columns, types and values a plain `spark.read.parquet(root)`
+  * infers — and prunes directories by the pushed partition filters.
   */
-final class StatsFileIndex(spark: SparkSession, cat: DataFrame)
+final class StatsFileIndex(spark: SparkSession, cat: DataFrame,
+                           tableRoot: Option[String] = None)
     extends FileIndex {
 
   /** The resident version's file entries; None → stay distributed. */
@@ -70,16 +78,50 @@ final class StatsFileIndex(spark: SparkSession, cat: DataFrame)
         .map(new Path(_))
   })
 
-  override def partitionSchema: StructType = new StructType()
+  /** Partition columns and per-directory values, relative to the table
+    * root (none without one); computed once per resident snapshot.
+    */
+  private lazy val partitionSpec: PartitionSpec = tableRoot match {
+    case None => PartitionSpec.emptySpec
+    case Some(root) =>
+      val base = new Path(root)
+      val qualified = base.getFileSystem(spark.sessionState.newHadoopConf())
+        .makeQualified(base)
+      def infer = PartitionBridge.partitionSpec(spark, rootPaths, qualified)
+      TxnCatalog.residentOf(cat)
+        .fold(infer)(_.derived(s"partitions:$qualified")(infer))
+  }
 
+  override def partitionSchema: StructType = partitionSpec.partitionColumns
+
+  /** Files surviving the stats prune (data filters), grouped by partition
+    * directory; directories whose values fail the partition filters are
+    * dropped HERE — the scan does not re-check partition filters.
+    */
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val survivors = StatsFileIndex.prunedRows(cat,
-      dataFilters.flatMap(StatsFileIndex.toPred))
-    Seq(PartitionDirectory(InternalRow.empty, survivors.map { f =>
+      dataFilters.flatMap(StatsFileIndex.toPred)).map { f =>
       FileStatusWithMetadata(new FileStatus(
         f.sizeBytes, false, 1, 128L * 1024 * 1024, 0L, new Path(f.path)))
-    }))
+    }
+    if (partitionSchema.isEmpty) Seq(PartitionDirectory(InternalRow.empty, survivors))
+    else {
+      val resolver = spark.sessionState.conf.resolver
+      val keep = partitionFilters.reduceOption(And).map { cond =>
+        Predicate.createInterpreted(cond.transform {
+          case a: AttributeReference =>
+            val i = partitionSchema.fieldNames.indexWhere(resolver(a.name, _))
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+        })
+      }
+      val values = partitionSpec.partitions.map(p => p.path -> p.values).toMap
+      val byDir = survivors.groupBy(_.getPath.getParent)
+      survivors.map(_.getPath.getParent).distinct.flatMap { dir =>
+        values.get(dir).filter(v => keep.forall(_.eval(v)))
+          .map(PartitionDirectory(_, byDir(dir)))
+      }
+    }
   }
 
   override def inputFiles: Array[String] = cached match {
@@ -247,10 +289,15 @@ object StatsFileIndex {
     * buckets are legal, so ids 0..7 under a declared 16 look identical to a
     * half-empty 16-bucket table). Declaring the exact count the files were
     * written with remains the caller's contract.
+    *
+    * `tableRoot` (the directory the cataloged files were written under)
+    * adds the table's Hive partition columns to the read, as a plain read
+    * of that directory would.
     */
   def read(spark: SparkSession, cat: DataFrame,
            schema: Option[StructType] = None,
-           bucketBy: Option[(Int, Seq[String])] = None): DataFrame = {
+           bucketBy: Option[(Int, Seq[String])] = None,
+           tableRoot: Option[String] = None): DataFrame = {
     bucketBy.foreach { case (n, cols) =>
       // same name shape Spark's bucketed writer produces and its reader
       // parses (BucketingUtils): ..._NNNNN[.ext] — validated with one
@@ -277,7 +324,7 @@ object StatsFileIndex {
               s"as such would yield wrong join/aggregate results")
         }
     }
-    val index = new StatsFileIndex(spark, cat)
+    val index = new StatsFileIndex(spark, cat, tableRoot)
     // a resident snapshot carries its files' merged schema; otherwise one
     // file's footer — never list every cataloged path into one read
     val dataSchema = schema
@@ -289,7 +336,7 @@ object StatsFileIndex {
       }
     val bs = bucketBy.map { case (n, cols) =>
       org.apache.spark.sql.catalyst.catalog.BucketSpec(n, cols, Nil) }
-    val relation = HadoopFsRelation(index, new StructType(), dataSchema,
+    val relation = HadoopFsRelation(index, index.partitionSchema, dataSchema,
       bucketSpec = bs, fileFormat = new ParquetFileFormat(),
       options = Map.empty)(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])

@@ -1,25 +1,27 @@
 package graft.query
 
-import java.time.Instant
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graft.ColumnBridge
+
+import graft.plans.TimeFilterInjection
 
 /** SQL entry point with automatic time-range injection.
   *
   * The reference rewrites every `TableScan` in the logical plan to add
   * `p_timestamp >= start AND p_timestamp < end` unless the query already
-  * constrains the time column (parseable `src/query/mod.rs:829-911`). The
-  * Spark-first equivalent: before executing user SQL, re-register each
-  * referenced stream view as `SELECT * FROM t WHERE time >= .. AND time < ..`
-  * — Catalyst folds the wrapper predicate into the scan (partition pruning +
-  * parquet row-group pruning), so injection costs nothing at plan time and
-  * prunes at both file and page level during execution.
+  * constrains the time column (parseable `src/query/mod.rs:829-911`). Here
+  * a query is parsed once; each referenced stream is registered once, as
+  * its one relation (the stats-catalog scan, or a plain read for a stream
+  * without a committed catalog version, unioned with the live-tail rows
+  * when the range is fresh); the SQL is analyzed once; and
+  * [[graft.plans.TimeFilterInjection.inject]] wraps every relation
+  * instance whose time column the query does not already compare in the
+  * window `Filter`. Catalyst pushes that filter into the scan — catalog
+  * file pruning, partition pruning and parquet row-group pruning.
   */
 object QueryService {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Stream registry entry: where the table lives, its time column, an
     * optional stats-catalog path for manifest-grade file pruning, and an
@@ -36,15 +38,20 @@ object QueryService {
                           metaRoot: Option[String] = None,
                           tailKey: String = "")
 
-  /** Table names referenced by a SQL query, resolved with Spark's own parser
-    * (reference uses sqlparser+PostgreSqlDialect, `src/query/mod.rs:747-759`).
-    * Names come back UNQUOTED (`tableName` would backtick-quote
-    * non-identifier names like `otel-demo-logs`, which then never match the
-    * stream registry).
+  /** `sql` parsed by Spark's own parser (reference: sqlparser with the
+    * PostgreSqlDialect, `src/query/mod.rs:747-759`) — the one parse a
+    * query gets; every check below reads this tree.
     */
-  def referencedTables(spark: SparkSession, sql: String): Seq[String] = {
+  def parse(spark: SparkSession, sql: String): LogicalPlan =
+    spark.sessionState.sqlParser.parsePlan(sql)
+
+  /** Table names referenced by a parsed query. Names come back UNQUOTED
+    * (`tableName` would backtick-quote non-identifier names like
+    * `otel-demo-logs`, which then never match the stream registry).
+    */
+  def referencedTables(plan: LogicalPlan): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+    import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
     // CTE names shadow streams (SQL resolution order), but ONLY inside the
     // scope that binds them: a reference in a CTE's own body (before the
     // name is bound — unless WITH RECURSIVE), or outside the WITH's
@@ -73,49 +80,42 @@ object QueryService {
             case sq: SubqueryExpression => refs(sq.plan, bound)
           }.flatten)
     }
-    refs(spark.sessionState.sqlParser.parsePlan(sql), Set.empty).distinct
+    refs(plan, Set.empty).distinct
   }
 
+  def referencedTables(spark: SparkSession, sql: String): Seq[String] =
+    referencedTables(parse(spark, sql))
+
   /** Every CTE name the query defines, in any scope (case preserved). */
-  def cteNames(spark: SparkSession, sql: String): Seq[String] =
-    spark.sessionState.sqlParser.parsePlan(sql).collectWithSubqueries {
+  def cteNames(plan: LogicalPlan): Seq[String] =
+    plan.collectWithSubqueries {
       case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
         w.cteRelations.map(_._1)
     }.flatten.distinct
 
-  /** Streams may carry names Spark's temp-view validator rejects (the
-    * reference allows e.g. `otel-demo-logs`). Such names register under a
-    * sanitized alias and the parsed plan is rewritten to reference it —
-    * wrapped back in a `SubqueryAlias` carrying the ORIGINAL name, so
-    * qualified column references (`` `otel-demo-logs`.body ``) and
-    * per-relation time-filter attribution keep working.
-    */
-  private val SafeIdent = "^[A-Za-z_][A-Za-z0-9_]*$".r
+  def cteNames(spark: SparkSession, sql: String): Seq[String] =
+    cteNames(parse(spark, sql))
 
-  /** Temp-view name for a stream. With an empty scope, safe names register
-    * as themselves (the historical shape). A non-empty scope — the tenant
-    * plus a per-query id — ALWAYS hashes into the view name, so two tenants
+  /** Temp-view name for a stream within a query. The scope — the tenant
+    * plus a per-query id — always hashes into the name, so two tenants
     * sharing a stream name, or two concurrent queries over the same stream,
-    * can never collide on (or leak through) a global view. Scoped views are
-    * also dropped after analysis, so no stale view survives for a later
-    * query's resolution to pick up.
+    * can never collide on (or leak through) a global view, and names
+    * Spark's temp-view validator rejects (the reference allows e.g.
+    * `otel-demo-logs`) register sanitized. The views are dropped after
+    * analysis, so no stale view survives for a later query to resolve.
     */
-  private[query] def viewName(name: String, scope: String = ""): String =
-    if (scope.isEmpty && SafeIdent.matches(name)) name
-    else "g_" + name.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
+  private def viewName(name: String, scope: String): String =
+    "g_" + name.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
       java.lang.Integer.toHexString((scope + "\u0000" + name).hashCode)
 
-  /** Parse `sql`, redirecting single-part relations of aliased streams to
-    * their registered view names (identity when every name is safe and
-    * unscoped). The redirect wraps back in a `SubqueryAlias` carrying the
-    * ORIGINAL name, so qualified column references keep resolving.
+  /** `parsed` with single-part relations of `names` redirected to their
+    * view names — wrapped back in a `SubqueryAlias` carrying the ORIGINAL
+    * name, so qualified column references (`` `otel-demo-logs`.body ``)
+    * keep resolving.
     */
-  private def rewrittenPlan(
-      spark: SparkSession, sql: String, names: Set[String],
-      scope: String = "")
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
-    val parsed = spark.sessionState.sqlParser.parsePlan(sql)
+  private def rewrittenPlan(parsed: LogicalPlan, names: Set[String],
+                            scope: String): LogicalPlan = {
+    import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, UnresolvedWith}
     // CTE definitions live in UnresolvedWith.cteRelations — a FIELD, not
     // children — so the plain tree transform never reaches a stream
     // reference inside a CTE body; recurse into them explicitly. (CTE
@@ -128,126 +128,21 @@ object QueryService {
             t.copy(_2 = rewrite(t._2).asInstanceOf[SubqueryAlias])))
         case r: UnresolvedRelation
             if r.multipartIdentifier.size == 1 &&
-              names.contains(r.multipartIdentifier.head) &&
-              viewName(r.multipartIdentifier.head, scope) !=
-                r.multipartIdentifier.head =>
+              names.contains(r.multipartIdentifier.head) =>
           SubqueryAlias(r.multipartIdentifier.head,
             UnresolvedRelation(
               Seq(viewName(r.multipartIdentifier.head, scope))))
       }
-    if (names.forall(n => viewName(n, scope) == n)) parsed
-    else rewrite(parsed)
+    rewrite(parsed)
   }
 
-  /** Whether the parsed query filters on `timeCol` ANYWHERE — the coarse
-    * textual check (reference `src/query/mod.rs:890-911`
-    * `table_contains_any_time_filters` is stricter: per TableScan). Kept as
-    * the fallback for SQL that cannot be analyzed; [[constrainedStreams]]
-    * is the per-relation version [[query]] actually uses.
-    */
-  def containsTimeFilter(spark: SparkSession, sql: String, timeCol: String): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, BinaryComparison}
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    val plan = spark.sessionState.sqlParser.parsePlan(sql)
-    plan.collectWithSubqueries { case f: Filter => f.condition }.exists { cond =>
-      cond.collect { case cmp: BinaryComparison => cmp }.exists(_.children.exists {
-        case a: Attribute => a.name.equalsIgnoreCase(timeCol)
-        case _            => false
-      })
-    }
-  }
-
-  /** Stream names whose time column the query ALREADY constrains, attributed
-    * per relation — the reference checks the filters of each TableScan
-    * (`src/query/mod.rs:890-911`), so `SELECT .. FROM a JOIN b WHERE
-    * a.p_timestamp >= X` must still get the window injected into `b` even
-    * though both streams share the time-column NAME.
-    *
-    * Resolution: the SQL is analyzed (not executed) against the registered
-    * views; each stream's relation instances surface as `SubqueryAlias`
-    * nodes whose output attributes carry unique `ExprId`s, so a comparison
-    * is attributed to exactly the relation whose attribute it references.
-    * Alias indirection (`SELECT ts AS t FROM s` ... `WHERE t > X`) is
-    * resolved through a transitive closure over `Alias` edges. Self-joins
-    * of one stream collapse to name granularity (injection here is
-    * per-view): if ANY instance is constrained the stream is skipped.
-    *
-    * Registers each stream as a PLAIN (unwindowed) temp view for the
-    * analysis — callers that need windowed views ([[query]]) re-register
-    * them afterwards. If analysis fails (e.g. a non-stream table is
-    * absent), falls back to the global [[containsTimeFilter]] check per
-    * time column — conservative in the same direction as the old behavior.
-    */
-  def constrainedStreams(
-      spark: SparkSession,
-      streams: Map[String, Stream],
-      sql: String,
-      scope: String = ""): Set[String] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BinaryComparison, ExprId}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, SubqueryAlias}
-    streams.foreach { case (name, s) =>
-      plainReader(spark, name, s).parquet(s.path)
-        .createOrReplaceTempView(viewName(name, scope))
-    }
-    val analyzed =
-      try org.apache.spark.sql.graft.ColumnBridge
-        .ofRows(spark, rewrittenPlan(spark, sql, streams.keySet, scope))
-        .queryExecution.analyzed
-      catch {
-        case e: Exception =>
-          // fall back to query-global time-filter detection — conservative
-          // (at worst injects a window the query already has), but a
-          // swallowed analysis error can also hide a real bug, so say so
-          log.warn(s"time-filter attribution fell back to query-global " +
-            s"detection: analysis of [$sql] failed: ${e.getMessage}")
-          return streams.filter { case (_, s) =>
-            containsTimeFilter(spark, sql, s.timeCol)
-          }.keySet
-      }
-    val aliasEdges: Map[ExprId, Set[ExprId]] =
-      analyzed.collectWithSubqueries { case p =>
-        p.expressions.flatMap(_.collect {
-          case a: Alias => a.exprId -> a.child.references.map(_.exprId).toSet
-        })
-      }.flatten.toMap
-    def close(ids: Set[ExprId]): Set[ExprId] = {
-      var cur = ids
-      var grown = true
-      while (grown) {
-        val next = cur ++ cur.flatMap(aliasEdges.getOrElse(_, Set.empty[ExprId]))
-        grown = next.size != cur.size
-        cur = next
-      }
-      cur
-    }
-    val compared: Set[ExprId] = close(
-      analyzed.collectWithSubqueries { case f: LFilter =>
-        f.condition.collect { case cmp: BinaryComparison =>
-          cmp.children.collect { case a: Attribute => a.exprId }
-        }.flatten
-      }.flatten.toSet)
-    streams.collect {
-      case (name, s) if analyzed.collectWithSubqueries {
-            case sa: SubqueryAlias if sa.alias.equalsIgnoreCase(name) =>
-              sa.output.filter(_.name.equalsIgnoreCase(s.timeCol)).map(_.exprId)
-          }.flatten.exists(compared) =>
-        name
-    }.toSet
-  }
-
-  /** Detect `SELECT COUNT(*) FROM t` (no filters, no grouping) — the shape
+  /** A bare `SELECT COUNT(*) FROM t` (no filters, no grouping) — the shape
     * answerable from catalog metadata without scanning data files
-    * (reference `src/query/mod.rs:427-462`). Returns the table name.
+    * (reference `src/query/mod.rs:427-462`): the table name and the output
+    * column name the executed query would carry (`count(1)` unless
+    * aliased), so a fast path can answer with the exact response shape.
     */
-  def detectBareCountStar(spark: SparkSession, sql: String): Option[String] =
-    bareCountStar(spark, sql).map(_._1)
-
-  /** As [[detectBareCountStar]], also yielding the output column name the
-    * executed query would carry (`count(1)` unless aliased) — so a fast
-    * path can answer with the exact response shape.
-    */
-  def bareCountStar(spark: SparkSession,
-                    sql: String): Option[(String, String)] = {
+  def bareCountStar(plan: LogicalPlan): Option[(String, String)] = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
     def isCountStar(exprs: Seq[Expression]): Boolean =
@@ -260,7 +155,7 @@ object QueryService {
       case a: Alias => a.name
       case _        => "count(1)"
     }
-    spark.sessionState.sqlParser.parsePlan(sql) match {
+    plan match {
       // COUNT(*) with no grouping parses as a bare Project until analysis
       case Project(list, r: UnresolvedRelation) if isCountStar(list) =>
         Some((r.multipartIdentifier.last, outName(list.head)))
@@ -270,28 +165,9 @@ object QueryService {
     }
   }
 
-  /** Answer a bare COUNT(*) from the stats catalog if the query has that
-    * shape and a catalog exists for the stream; None → execute normally.
-    */
-  def countStarFastPath(spark: SparkSession, sql: String,
-                        catalogPaths: Map[String, String]): Option[Long] =
-    detectBareCountStar(spark, sql)
-      .flatMap(catalogPaths.get)
-      .map(graft.catalog.StatsCatalog.countStar(spark, _))
-
-  /** Reader with the stream's data schema applied: its persisted union
-    * schema, else the data schema its catalog's latest version holds (the
-    * schema a catalog scan reads with). Old files null-fill newer columns;
-    * no `mergeSchema` footer storm, no inference job.
-    */
-  private def plainReader(spark: SparkSession, name: String, s: Stream) =
-    s.metaRoot
-      .flatMap(graft.catalog.StreamMeta.unionSchema(_, name))
-      .orElse(s.catalogPath
-        .flatMap(graft.catalog.TxnCatalog.snapshot(spark, _))
-        .flatMap(graft.catalog.TxnCatalog.residentOf)
-        .flatMap(_.dataSchema(spark)))
-      .foldLeft(spark.read)((r, schema) => r.schema(schema))
+  def bareCountStar(spark: SparkSession,
+                    sql: String): Option[(String, String)] =
+    bareCountStar(parse(spark, sql))
 
   /** Staging freshness window (reference: queries whose range touches the
     * last 5 minutes union in not-yet-synced staging data,
@@ -300,45 +176,35 @@ object QueryService {
   val StagingWindowMillis: Long = 5 * 60 * 1000L
 
   /** Time-windowed single-stream read for the non-SQL paths (alert
-    * evaluation, counts scans, log-context pages): the same scan shape
-    * [[query]] builds for SQL — stats-catalog `FileIndex` when the stream
-    * has one (pushed predicates prune FILES before any footer opens), the
-    * coarse Hive date-partition predicate (directory pruning), and the
-    * exact row-level window. No staging union — these paths answer from
-    * durable data.
+    * evaluation, counts scans, log-context pages): the stream's one
+    * relation ([[catalogRead]]) under the same window predicate [[query]]
+    * injects ([[graft.plans.TimeFilterInjection.window]]). No staging
+    * union — these paths answer from durable data.
     */
   def windowedRead(spark: SparkSession, name: String, s: Stream,
-                   range: TimeRange): DataFrame =
-    inWindow(catalogRead(spark, name, s), s, range)
+                   range: TimeRange): DataFrame = {
+    val df = catalogRead(spark, name, s)
+    df.filter(ColumnBridge.column(TimeFilterInjection.window(
+      ColumnBridge.logicalPlan(df).output, s.timeCol,
+      range.start.toEpochMilli, range.end.toEpochMilli)))
+  }
 
-  /** The stream's scan: through the stats-catalog `FileIndex` when it has a
-    * committed catalog version — every pushed predicate (the time window
-    * AND the user's own filters) prunes files inside the scan itself —
-    * else a plain read of the table.
+  /** The stream's one relation: the stats-catalog `FileIndex` scan, with
+    * the table's partition columns, when it has a committed catalog
+    * version — every pushed predicate (the time window AND the user's own
+    * filters) prunes files inside the scan itself — else a plain read of
+    * the table. Both read with the stream's persisted union schema when it
+    * has one (old files null-fill newer columns; no `mergeSchema` footer
+    * storm).
     */
-  private def catalogRead(spark: SparkSession, name: String,
-                          s: Stream): DataFrame =
+  private[graft] def catalogRead(spark: SparkSession, name: String,
+                                 s: Stream): DataFrame = {
+    val union = s.metaRoot.flatMap(graft.catalog.StreamMeta.unionSchema(_, name))
     s.catalogPath.flatMap(graft.catalog.TxnCatalog.snapshot(spark, _)) match {
-      case Some(cat) => graft.plans.StatsFileIndex.read(spark, cat,
-        s.metaRoot.flatMap(graft.catalog.StreamMeta.unionSchema(_, name)))
-      case None => plainReader(spark, name, s).parquet(s.path)
+      case Some(cat) => graft.plans.StatsFileIndex.read(spark, cat, union,
+        tableRoot = Some(s.path))
+      case None => union.foldLeft(spark.read)(_.schema(_)).parquet(s.path)
     }
-
-  /** `df` restricted to the range: the exact row-level window, plus — for
-    * streams written by IngestPipeline, Hive-partitioned by date/hour
-    * string dirs — a coarse date-range predicate on the partition column
-    * that turns the window into directory pruning.
-    */
-  private def inWindow(df: DataFrame, s: Stream, range: TimeRange): DataFrame = {
-    val timed = df.filter(
-      col(s.timeCol) >= lit(Instant.ofEpochMilli(range.start.toEpochMilli)) &&
-        col(s.timeCol) < lit(Instant.ofEpochMilli(range.end.toEpochMilli)))
-    if (df.columns.contains("date")) {
-      val fmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
-        .withZone(java.time.ZoneOffset.UTC)
-      timed.filter(col("date").between(
-        fmt.format(range.start), fmt.format(range.end)))
-    } else timed
   }
 
   /** [[query]] behind the RBAC gate (reference query flow step 5,
@@ -351,73 +217,81 @@ object QueryService {
       sql: String,
       range: TimeRange,
       user: String): Either[String, DataFrame] = {
-    val referenced = referencedTables(spark, sql).filter(streams.contains)
-    Rbac.authorizeQuery(user, referenced)
-      .map(_ => query(spark, streams, sql, range))
+    val plan = parse(spark, sql)
+    Rbac.authorizeQuery(user, referencedTables(plan).filter(streams.contains))
+      .map(_ => query(spark, streams, plan, range, scope = ""))
   }
 
-  /** Execute `sql` with the time window injected into every referenced
-    * stream. Non-stream tables (dims) pass through unfiltered. Queries
-    * whose range reaches into the staging window also see the in-memory
-    * recent batches ([[graft.streaming.LiveTail]]) unioned under the table
-    * view — the Spark shape of the reference's staging ∪ parquet scan.
+  /** Execute a parsed query with the time window injected into every
+    * relation instance of a referenced stream whose time column the query
+    * does not already compare. Non-stream tables (dims) pass through
+    * unfiltered. Queries whose range reaches into the staging window also
+    * see the in-memory recent batches ([[graft.streaming.LiveTail]])
+    * unioned under the stream's relation — the Spark shape of the
+    * reference's staging ∪ parquet scan.
+    *
+    * One analysis: the SQL resolves against one view per stream, and the
+    * window goes in on the analyzed plan. A query that cannot be analyzed
+    * fails with its own analysis error.
     */
   def query(
       spark: SparkSession,
       streams: Map[String, Stream],
-      sql: String,
+      plan: LogicalPlan,
       range: TimeRange,
-      scope: String = ""): DataFrame = {
-    // per-execution unique scope: stream views register under names no
-    // other query (any tenant, any concurrency) can observe or clobber,
-    // and are dropped right after analysis — so a later query can never
-    // resolve a stale view left by this one (cross-tenant data leak)
-    val qscope = scope + "#q" + queryIds.incrementAndGet()
-    val freshCutoff = System.currentTimeMillis() - StagingWindowMillis
+      scope: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.View
     // a CTE named like a registered stream would make the single-part
     // rewrite ambiguous (the CTE-bound reference must NOT redirect to the
     // stream view) — refuse rather than silently mis-resolve
-    val shadowing = cteNames(spark, sql)
+    val shadowing = cteNames(plan)
       .filter(n => streams.keys.exists(_.equalsIgnoreCase(n)))
     if (shadowing.nonEmpty)
       throw new IllegalArgumentException(
         s"CTE name(s) ${shadowing.mkString(", ")} shadow stream names; " +
           "rename the CTE")
-    val referenced = referencedTables(spark, sql)
+    // per-execution unique scope: stream views register under names no
+    // other query (any tenant, any concurrency) can observe or clobber,
+    // and are dropped right after analysis — so a later query can never
+    // resolve a stale view left by this one (cross-tenant data leak)
+    val qscope = scope + "#q" + queryIds.incrementAndGet()
+    val referenced = referencedTables(plan)
       .flatMap(n => streams.get(n).map(n -> _))
-    // pass 1 (inside constrainedStreams): plain views, so the SQL can be
-    // ANALYZED (no execution) and existing time filters attributed to
-    // individual relations; pass 2 below re-registers the real views
-    val constrained =
-      constrainedStreams(spark, referenced.toMap, sql, qscope)
-    referenced.foreach { case (name, s) =>
-        // a stream whose SQL already constrains time reads plain, as is;
-        // every other stream gets the window over its catalog-pruned scan
-        val skipInject = constrained.contains(name)
-        def windowed(df: DataFrame): DataFrame =
-          if (skipInject) df else inWindow(df, s, range)
-        val base =
-          if (skipInject) plainReader(spark, name, s).parquet(s.path)
-          else inWindow(catalogRead(spark, name, s), s, range)
-        val df =
-          if (range.end.toEpochMilli < freshCutoff) base
-          else
-            graft.streaming.LiveTail.recentFrame(spark,
-                if (s.tailKey.nonEmpty) s.tailKey else name) match {
-              case Some(recent) if recent.columns.contains(s.timeCol) =>
-                base.unionByName(windowed(recent), allowMissingColumns = true)
-              case _ => base
-            }
-        df.createOrReplaceTempView(viewName(name, qscope))
-    }
-    // ofRows analyzes eagerly — the returned DataFrame holds resolved
-    // relations, so the views can (and must) be dropped before returning
-    try org.apache.spark.sql.graft.ColumnBridge.ofRows(spark,
-      rewrittenPlan(spark, sql, referenced.map(_._1).toSet, qscope))
-    finally referenced.foreach { case (name, _) =>
-      spark.catalog.dropTempView(viewName(name, qscope))
-    }
+    val fresh = range.end.toEpochMilli >=
+      System.currentTimeMillis() - StagingWindowMillis
+    val timeColOf = referenced.map { case (name, s) =>
+      viewName(name, qscope).toLowerCase -> s.timeCol }.toMap
+    val analyzed =
+      try {
+        referenced.foreach { case (name, s) =>
+          val base = catalogRead(spark, name, s)
+          val recent = Option.when(fresh)(graft.streaming.LiveTail.recentFrame(
+              spark, if (s.tailKey.nonEmpty) s.tailKey else name)).flatten
+            .filter(_.columns.contains(s.timeCol))
+          recent.fold(base)(base.unionByName(_, allowMissingColumns = true))
+            .createOrReplaceTempView(viewName(name, qscope))
+        }
+        ColumnBridge.analyze(spark,
+          rewrittenPlan(plan, referenced.map(_._1).toSet, qscope))
+      } finally referenced.foreach { case (name, _) =>
+        spark.catalog.dropTempView(viewName(name, qscope))
+      }
+    // instances are found by their per-query view, never by alias
+    ColumnBridge.ofAnalyzed(spark, TimeFilterInjection.inject(analyzed,
+        range.start.toEpochMilli, range.end.toEpochMilli) {
+      case v: View if v.isTempView &&
+          timeColOf.contains(v.desc.identifier.table.toLowerCase) =>
+        timeColOf(v.desc.identifier.table.toLowerCase)
+    })
   }
+
+  def query(
+      spark: SparkSession,
+      streams: Map[String, Stream],
+      sql: String,
+      range: TimeRange,
+      scope: String = ""): DataFrame =
+    query(spark, streams, parse(spark, sql), range, scope)
 
   private val queryIds = new java.util.concurrent.atomic.AtomicLong(0)
 }

@@ -53,8 +53,8 @@ class ConcurrentIngestSpec extends SparkSuite {
       assert(codes.asScala.forall(_ == 200), codes.asScala.toSeq)
       // mergeSchema: plain parquet inference samples ONE file, and early
       // files legitimately predate late writers' private columns. (The
-      // engine's own read path applies the PERSISTED union schema —
-      // QueryService.plainReader — this merge is the test's equivalent.)
+      // engine's own stream read applies the merged data schema its
+      // catalog version records — this merge is the test's equivalent.)
       val df = spark.read.option("mergeSchema", "true").parquet(s"$tmp/conc")
       // every event landed exactly once
       assert(df.count() == writers * batches * 2L)

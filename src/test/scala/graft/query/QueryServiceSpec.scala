@@ -12,10 +12,20 @@ class QueryServiceSpec extends SparkSuite {
   import spark.implicits._
 
   test("time filter injected unless query already constrains the time col") {
-    assert(!QueryService.containsTimeFilter(spark,
-      "SELECT * FROM logs WHERE level = 'e'", "p_timestamp"))
-    assert(QueryService.containsTimeFilter(spark,
-      "SELECT * FROM logs WHERE p_timestamp > '2024-01-01'", "p_timestamp"))
+    val dir = Files.createTempDirectory("qsinj").toString
+    val base = 1700000000000L
+    Seq.tabulate(10)(i => (i.toLong, new Timestamp(base + i * 60_000L)))
+      .toDF("id", "p_timestamp").write.parquet(s"$dir/logs")
+    val streams = Map("logs" ->
+      QueryService.Stream(s"$dir/logs", "p_timestamp"))
+    val range = TimeRange(
+      java.time.Instant.ofEpochMilli(base),
+      java.time.Instant.ofEpochMilli(base + 3 * 60_000L))
+    assert(QueryService.query(spark, streams,
+      "SELECT * FROM logs WHERE id >= 0", range).count() == 3)
+    assert(QueryService.query(spark, streams,
+      "SELECT * FROM logs WHERE p_timestamp > " +
+        s"timestamp'${new Timestamp(base + 5 * 60_000L)}'", range).count() == 4)
     assert(QueryService.referencedTables(spark,
       "SELECT * FROM a JOIN b ON a.x = b.x") == Seq("a", "b"))
     // CTE names shadow streams: neither auth-checked nor window-injected
@@ -64,20 +74,25 @@ class QueryServiceSpec extends SparkSuite {
       .count() == 3)
   }
 
-  test("constrainedStreams falls back to query-global detection when " +
-       "analysis fails (unresolvable table)") {
+  test("an unresolvable table surfaces the analysis error naming it") {
     val dir = Files.createTempDirectory("qsfb").toString
     val base = 1700000000000L
     Seq.tabulate(3)(i => (i.toLong, new Timestamp(base + i * 1000L)))
       .toDF("id", "p_timestamp").write.parquet(s"$dir/fa")
     val streams = Map("fa" -> QueryService.Stream(s"$dir/fa", "p_timestamp"))
-    // zz_missing is not registered anywhere → analysis fails → the
-    // conservative query-global time-filter check decides
-    assert(QueryService.constrainedStreams(spark, streams,
-      "SELECT * FROM fa JOIN zz_missing ON 1=1 " +
-        "WHERE p_timestamp > '2024-01-01'") == Set("fa"))
-    assert(QueryService.constrainedStreams(spark, streams,
-      "SELECT * FROM fa JOIN zz_missing ON 1=1").isEmpty)
+    val range = TimeRange(
+      java.time.Instant.ofEpochMilli(base - 1000),
+      java.time.Instant.ofEpochMilli(base + 60_000L))
+    // zz_missing is not registered anywhere: one analysis, its own error
+    for (sql <- Seq("SELECT * FROM fa JOIN zz_missing ON 1=1 " +
+                      "WHERE p_timestamp > '2024-01-01'",
+                    "SELECT * FROM fa JOIN zz_missing ON 1=1")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        QueryService.query(spark, streams, sql, range)
+      }
+      assert(e.getCondition == "TABLE_OR_VIEW_NOT_FOUND", e.getMessage)
+      assert(e.getMessage.contains("zz_missing"), e.getMessage)
+    }
   }
 
   test("query drops its scoped temp views; stale views cannot be resolved " +
@@ -183,12 +198,36 @@ class QueryServiceSpec extends SparkSuite {
     val sql = s"""SELECT sa.id FROM sa JOIN sb ON sa.id = sb.id
                   WHERE sa.p_timestamp >= timestamp'${new Timestamp(base)}'"""
     assert(QueryService.query(spark, streams, sql, range).count() == 5)
-    assert(QueryService.constrainedStreams(spark, streams, sql) == Set("sa"))
     // alias indirection resolves to the base column: a subquery renaming
-    // sb's time column still counts as constraining sb
+    // sb's time column still counts as constraining sb (all 10 rows, not
+    // the window's 5)
     val aliased = s"""SELECT x.id FROM (SELECT id, p_timestamp AS t FROM sb) x
                       WHERE x.t >= timestamp'${new Timestamp(base)}'"""
-    assert(QueryService.constrainedStreams(spark, streams, aliased) == Set("sb"))
+    assert(QueryService.query(spark, streams, aliased, range).count() == 10)
+  }
+
+  test("a user alias spelled like another stream does not drop that " +
+       "stream's window") {
+    val dir = Files.createTempDirectory("qsalias").toString
+    val base = 1700000000000L
+    Seq.tabulate(10)(i => (i.toLong, new Timestamp(base + i * 60_000L)))
+      .toDF("id", "p_timestamp").write.parquet(s"$dir/a")
+    Seq.tabulate(10)(i => (i.toLong, new Timestamp(base + i * 60_000L)))
+      .toDF("id", "p_timestamp").write.parquet(s"$dir/b")
+    val streams = Map(
+      "sa" -> QueryService.Stream(s"$dir/a", "p_timestamp"),
+      "sb" -> QueryService.Stream(s"$dir/b", "p_timestamp"))
+    val range = TimeRange(
+      java.time.Instant.ofEpochMilli(base),
+      java.time.Instant.ofEpochMilli(base + 5 * 60_000L))
+    // the user constrains sb (aliased `sa`); stream sa (aliased `x`) is
+    // unconstrained and keeps its window: ids 0..4 join sb's 10 → 5 rows.
+    // Attribution by alias name would skip sa's window too (10 rows).
+    val ts = s"timestamp'${new Timestamp(base)}'"
+    for (sql <- Seq(
+        s"SELECT x.id FROM sa x JOIN sb AS sa ON x.id = sa.id WHERE sa.p_timestamp >= $ts",
+        s"SELECT x.id FROM sa x JOIN sb y ON x.id = y.id WHERE y.p_timestamp >= $ts"))
+      assert(QueryService.query(spark, streams, sql, range).count() == 5, sql)
   }
 
   test("query unions staging rows when the range touches the fresh window") {
@@ -253,5 +292,102 @@ class QueryServiceSpec extends SparkSuite {
     assert(IngestStream.readTable(spark, root, cfg, new SchemaRegistry)
       .columns.contains("level"))
     LiveTail.clear("logs")
+  }
+
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    df.collect() // execute THIS queryExecution so metrics populate
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    plan.collectLeaves()
+      .collect { case s: FileSourceScanExec => s.metrics("numFiles").value }
+      .sum
+  }
+
+  test("a user time filter prunes catalog files: 1 of 2 files scanned") {
+    import graft.catalog.TxnCatalog
+    val dir = Files.createTempDirectory("qsuserprune").toString
+    val base = 1700000000000L
+    // two files in disjoint hour ranges
+    Seq.tabulate(2) { i =>
+      Seq.tabulate(10)(j =>
+        (i * 10 + j.toLong, new Timestamp(base + i * 3600_000L + j * 1000L)))
+        .toDF("id", "p_timestamp")
+        .coalesce(1).write.mode("append").parquet(s"$dir/logs")
+    }
+    TxnCatalog.reconcile(spark, s"$dir/logs", s"$dir/cat", Seq("p_timestamp"))
+    val streams = Map("logs" -> QueryService.Stream(s"$dir/logs", "p_timestamp",
+      catalogPath = Some(s"$dir/cat")))
+    val range = TimeRange(
+      java.time.Instant.ofEpochMilli(base - 1000),
+      java.time.Instant.ofEpochMilli(base + 7200_000L))
+    val df = QueryService.query(spark, streams, "SELECT id FROM logs WHERE " +
+      s"p_timestamp >= timestamp'${new Timestamp(base + 3600_000L)}'", range)
+    assert(scannedFiles(df) == 1)
+    assert(df.count() == 10)
+  }
+
+  test("analysis over a resident catalog with 40 minute partitions runs " +
+       "no Spark job, windowed or user-filtered") {
+    import graft.catalog.TxnCatalog
+    val dir = Files.createTempDirectory("qsjobs").toString
+    val base = 1700000000000L - 1700000000000L % 3600_000L
+    // one file in each of 40 minute dirs (the ingest layout)
+    Seq.tabulate(40)(i => (i.toLong, new Timestamp(base + i * 60_000L)))
+      .toDF("id", "p_timestamp")
+      .withColumn("date", date_format(col("p_timestamp"), "yyyy-MM-dd"))
+      .withColumn("hour", date_format(col("p_timestamp"), "HH"))
+      .withColumn("minute", date_format(col("p_timestamp"), "mm"))
+      .write.partitionBy("date", "hour", "minute").parquet(s"$dir/logs")
+    TxnCatalog.reconcile(spark, s"$dir/logs", s"$dir/cat", Seq("p_timestamp"))
+    assert(TxnCatalog.snapshot(spark, s"$dir/cat")
+      .flatMap(TxnCatalog.residentOf).exists(_.size == 40))
+    val streams = Map("logs" -> QueryService.Stream(s"$dir/logs", "p_timestamp",
+      catalogPath = Some(s"$dir/cat")))
+    val range = TimeRange(
+      java.time.Instant.ofEpochMilli(base),
+      java.time.Instant.ofEpochMilli(base + 10 * 60_000L))
+    for ((sql, rows) <- Seq(
+        "SELECT id FROM logs" -> 10L,
+        ("SELECT id FROM logs WHERE " +
+          s"p_timestamp >= timestamp'${new Timestamp(base + 30 * 60_000L)}'") -> 10L)) {
+      val (df, jobs) = jobsDuring(QueryService.query(spark, streams, sql, range))
+      assert(jobs == 0, s"$sql: analysis ran $jobs Spark jobs")
+      assert(df.count() == rows, sql)
+    }
+  }
+
+  test("metaRoot: a custom partition also declared as a data column reads " +
+       "its partition value") {
+    import graft.ingest.IngestPipeline.{SchemaRegistry, StreamConfig}
+    import graft.streaming.IngestStream
+    val root = Files.createTempDirectory("qspart").toString
+    val cfg = StreamConfig("plogs", customPartitions = Seq("level"))
+    val registry = new SchemaRegistry
+    val now = System.currentTimeMillis()
+    assert(IngestStream.processBatch(spark.createDataset(Seq(
+        """{"id": 1, "level": "info"}""", """{"id": 2, "level": "warn"}"""))(
+        org.apache.spark.sql.Encoders.STRING), cfg, registry, root,
+      txnCatalog = Some((s"$root/cat", Seq("p_timestamp")))).isRight)
+    // the persisted union schema declares `level` as a data column; the
+    // files carry it only in their partition directory
+    assert(graft.catalog.StreamMeta.unionSchema(root, "plogs")
+      .exists(_.fieldNames.contains("level")))
+    val streams = Map("plogs" -> QueryService.Stream(s"$root/plogs",
+      "p_timestamp", catalogPath = Some(s"$root/cat"), metaRoot = Some(root)))
+    val range = TimeRange(
+      java.time.Instant.ofEpochMilli(now - 60_000L),
+      java.time.Instant.ofEpochMilli(now + 3600 * 1000))
+    for (sql <- Seq("SELECT id, level FROM plogs ORDER BY id",
+                    "SELECT id, level FROM plogs WHERE p_timestamp > " +
+                      "'2000-01-01T00:00:00Z' ORDER BY id")) {
+      val rows = QueryService.query(spark, streams, sql, range).collect()
+        .map(r => (r.getAs[Number](0).longValue, r.getString(1))).toSeq
+      assert(rows == Seq((1L, "info"), (2L, "warn")), sql)
+    }
+    LiveTail.clear("plogs")
   }
 }

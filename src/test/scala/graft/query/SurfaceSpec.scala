@@ -105,15 +105,15 @@ class SurfaceSpec extends SparkSuite {
     assert(files.length == 1)
     assert(spark.read.parquet(files: _*).count() == 100) // file-level may-contain
 
-    // count(*) fast path: detector + metadata answer
-    assert(QueryService.detectBareCountStar(spark,
-      "SELECT COUNT(*) FROM events_t") == Some("events_t"))
-    assert(QueryService.detectBareCountStar(spark,
+    // count(*) fast path: the shape detector + the metadata answer
+    assert(QueryService.bareCountStar(spark,
+      "SELECT COUNT(*) FROM events_t").map(_._1) == Some("events_t"))
+    assert(QueryService.bareCountStar(spark,
       "SELECT COUNT(*) FROM events_t WHERE x > 1").isEmpty)
-    assert(QueryService.detectBareCountStar(spark,
+    assert(QueryService.bareCountStar(spark,
       "SELECT x, COUNT(*) FROM events_t GROUP BY x").isEmpty)
-    val fast = QueryService.countStarFastPath(spark,
-      "SELECT count(*) FROM events_t", Map("events_t" -> s"$root/cat"))
-    assert(fast == Some(300L))
+    assert(QueryService.bareCountStar(spark,
+      "SELECT count(*) FROM events_t") == Some(("events_t", "count(1)")))
+    assert(StatsCatalog.countStar(spark, s"$root/cat") == 300L)
   }
 }

@@ -232,6 +232,13 @@ object TxnCatalog {
         .asInstanceOf[StructType])
   }
 
+  /** The merged data schema the latest version persisted, read from that
+    * one file on the driver: None when there is no version or it recorded
+    * none.
+    */
+  def latestDataSchema(root: String): Option[StructType] =
+    latestVersion(root).flatMap(snapshotDir(root, _)).flatMap(persistedSchema)
+
   /** `base` plus the top-level fields of `more` it lacks (names compared
     * case-insensitively, as Spark resolves them): the first type seen for
     * a name wins, new names append in arrival order.

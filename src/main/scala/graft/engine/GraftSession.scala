@@ -177,8 +177,4 @@ object GraftSession {
       }
     }
   }
-
-  /** Register every test table as a temp view (for spark.sql queries). */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    tables.foreach(t => table(spark, sfDir, t).createOrReplaceTempView(t))
 }

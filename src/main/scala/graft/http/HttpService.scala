@@ -290,14 +290,28 @@ final class GraftHttpServer(
     }.toMap
   }
 
-  /** Pre-register a stream (e.g. one written by a previous process) so
-    * queries can see it without a prior ingest through this server.
+  /** The config of a (tenant-scoped) stream key. A key this process has
+    * not seen is rehydrated from its persisted `stream.json` (partitions,
+    * z-order, limit), and its schema registry is seeded with the data
+    * schema already stored for it (the latest catalog version's, else
+    * the one in `stream.json`, minus the `p_*` enrichment columns), so the
+    * first batch after a restart lays out and renames conflicting fields
+    * as the batches before it did. The key is advertised in the shared
+    * metastore so the cluster's querier nodes can resolve it.
     */
-  def registerStream(name: String,
-                     cfg: IngestPipeline.StreamConfig,
-                     tenant: String = DefaultTenant): Unit = {
-    configs.put(tenantKey(tenant, name), cfg); ()
-  }
+  private[http] def streamConfig(key: String): IngestPipeline.StreamConfig =
+    configs.computeIfAbsent(key, k => {
+      metaStore.putStream(k)
+      val meta = graft.catalog.StreamMeta.load(root, k)
+      val enrichment = graft.catalog.StreamMeta
+        .enriched(new org.apache.spark.sql.types.StructType()).fieldNames.toSet
+      graft.catalog.TxnCatalog.latestDataSchema(statsPath(k))
+        .orElse(meta.flatMap(_.schema))
+        .foreach(s => registry.commit(k, org.apache.spark.sql.types.StructType(
+          s.fields.filterNot(f => enrichment(f.name)))))
+      meta.map(graft.catalog.StreamMeta.toConfig)
+        .getOrElse(IngestPipeline.StreamConfig(k))
+    })
 
   // ------------------------------------------------------------- plumbing
 

@@ -52,13 +52,7 @@ private[http] trait IngestRoutes { self: GraftHttpServer =>
             val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
             // storage path and registry are tenant-scoped: the same stream
             // NAME in two tenants is two disjoint tables
-            val cfg = configs.computeIfAbsent(tenantKey(tenant, stream),
-              key => {
-                // advertise new streams in the shared metastore so the
-                // cluster's querier nodes can resolve them
-                metaStore.putStream(key)
-                IngestPipeline.StreamConfig(key)
-              })
+            val cfg = streamConfig(tenantKey(tenant, stream))
             val ua =
               Option(ex.getRequestHeaders.getFirst("User-Agent")).getOrElse("")
             val ip = ex.getRemoteAddress.getAddress.getHostAddress
@@ -190,9 +184,7 @@ private[http] trait IngestRoutes { self: GraftHttpServer =>
                     String.valueOf(e.getMessage))
                   return
               }
-            val cfg = configs.computeIfAbsent(tenantKey(tenant, stream),
-              key => { metaStore.putStream(key)
-                IngestPipeline.StreamConfig(key) })
+            val cfg = streamConfig(tenantKey(tenant, stream))
             val ua =
               Option(ex.getRequestHeaders.getFirst("User-Agent")).getOrElse("")
             val ip = ex.getRemoteAddress.getAddress.getHostAddress
@@ -250,8 +242,14 @@ private[http] trait IngestRoutes { self: GraftHttpServer =>
         // them visible to the planner)
         val statCols = Seq(timeCol) ++
           cfg.zOrder.map(_.dims).getOrElse(Nil).filterNot(_ == timeCol)
-        graft.catalog.TxnCatalog.appendNewFilesWatermarked(spark,
-          s"$root/${cfg.name}", statsPath(cfg.name), statCols)
+        // a time-partitioned stream writes back-dated events into date
+        // dirs below the watermark, which the watermarked listing skips:
+        // it takes the full diff
+        val append =
+          if (cfg.timePartition.isEmpty)
+            graft.catalog.TxnCatalog.appendNewFilesWatermarked _
+          else graft.catalog.TxnCatalog.appendNewFiles _
+        append(spark, s"$root/${cfg.name}", statsPath(cfg.name), statCols)
         graft.catalog.TxnCatalog.vacuum(statsPath(cfg.name), keep = 3)
       } catch {
         case _: Exception =>

@@ -160,13 +160,10 @@ private[http] trait LogstreamRoutes { self: GraftHttpServer =>
             if (!exists(name)) {
               err(ex, 404, s"stream '$name' not found"); return
             }
-            // a restarted process has an empty config map — rehydrate
-            // from persisted stream.json so HTTP-set facets (custom
-            // partitions, z-order, time-partition limit) survive restarts
-            val cfg = Option(configs.get(key(name)))
-              .orElse(graft.catalog.StreamMeta.load(root, key(name))
-                .map(graft.catalog.StreamMeta.toConfig))
-              .getOrElse(IngestPipeline.StreamConfig(key(name)))
+            // a restarted process rehydrates from persisted stream.json,
+            // so HTTP-set facets (custom partitions, z-order,
+            // time-partition limit) survive restarts
+            val cfg = streamConfig(key(name))
             val o = mapper.createObjectNode().put("stream", name)
             o.put("stream_type", "UserDefined")
             cfg.timePartition match {
@@ -432,6 +429,9 @@ private[http] trait LogstreamRoutes { self: GraftHttpServer =>
         err(ex, 400, "X-P-Z-Order-Bits requires X-P-Z-Order")
         return
       }
+      // the update applies to the stored config, loaded first when this
+      // process has not seen the stream yet (a restart)
+      streamConfig(streamKey)
       limitHdr match {
         case Some(l) => parseLimit(l) match {
           case Left(m) => err(ex, 400, m)

@@ -77,8 +77,7 @@ private[http] trait PrismRoutes { self: GraftHttpServer =>
           case None => err(ex, 400, "missing query parameter 'action'")
           case Some("ingest") =>
             val events = GraftHttpServer.demoEvents(200)
-            val cfg = configs.computeIfAbsent(tenantKey(tenant, "demodata"),
-              key => { metaStore.putStream(key); IngestPipeline.StreamConfig(key) })
+            val cfg = streamConfig(tenantKey(tenant, "demodata"))
             IngestPipeline.ingest(spark, registry, cfg,
                 events, "demo-data", "127.0.0.1") match {
               case Left(msg) => err(ex, 500, msg)
@@ -142,8 +141,7 @@ private[http] trait PrismRoutes { self: GraftHttpServer =>
     @volatile private var stopRequested = false
     private val thread = new Thread(() => {
       val deadline = startedAtMs + durationSecs * 1000L
-      val cfg = configs.computeIfAbsent(tenantKey(tenant, "otel-demo-logs"),
-        key => { metaStore.putStream(key); IngestPipeline.StreamConfig(key) })
+      val cfg = streamConfig(tenantKey(tenant, "otel-demo-logs"))
       while (!stopRequested && System.currentTimeMillis() < deadline) {
         try {
           val events = graft.ingest.OtelFlatten.flattenLogs(

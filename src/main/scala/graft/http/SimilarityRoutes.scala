@@ -440,12 +440,11 @@ private[http] trait SimilarityRoutes { self: GraftHttpServer =>
       }
     }
 
-  /** `POST /api/v1/similarity/compact`: `{"datasetName", "vectorField",
-    * "localitySort"?}`. Rewrites the persisted index without tombstoned
-    * rows ([[Similarity.compactAnnIndex]] — atomic generation flip, so
-    * concurrent searches keep serving); `localitySort` opts into the
-    * measured-neutral-here similarity-locality layout for clustered
-    * corpora. No idField: compaction never touches vector rows.
+  /** `POST /api/v1/similarity/compact`: `{"datasetName", "vectorField"}`.
+    * Rewrites the persisted index without tombstoned rows
+    * ([[Similarity.compactAnnIndex]] — atomic generation flip, so
+    * concurrent searches keep serving). No idField: compaction never
+    * touches vector rows.
     */
   private[http] def handleSimCompact(ex: HttpExchange): Unit =
     withSimRequest(ex, action = Rbac.IngestAction,
@@ -459,8 +458,7 @@ private[http] trait SimilarityRoutes { self: GraftHttpServer =>
         return
       }
       withSqlTimeout(ex) {
-        Similarity.compactAnnIndex(spark, indexDir(key, vecField),
-          localitySort = b.path("localitySort").asBoolean(false))
+        Similarity.compactAnnIndex(spark, indexDir(key, vecField))
         respond(ex, 200, mapper.writeValueAsString(mapper.createObjectNode()
           .put("status", "compacted")))
       }

@@ -189,8 +189,8 @@ object Dedup {
     val b = ex.select(col("shingle"), col("id").as("id_b"), col("sz").as("sz_b"))
     // shuffled-hash beats sort-merge here: both sides are the same exploded
     // frame, per-shingle groups are small (bounded by maxShingleFreq at
-    // scale), and skipping the two full sorts is a ~35% win measured in
-    // ProfileDedup; AQE would otherwise default to SMJ
+    // scale), and skipping the two full sorts is a ~35% win (stage timing
+    // of this pipeline, sf0.1); AQE would otherwise default to SMJ
     a.hint("shuffle_hash").join(b.hint("shuffle_hash"), Seq("shingle"))
       .filter(col("id_a") < col("id_b"))
       .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
@@ -496,7 +496,7 @@ object Dedup {
     * scale. Verification joins the (small) candidate set back to the full
     * shingle arrays.
     *
-    * Measured crossover (ProfileDedup, sf0.1, local[32]): at small corpus
+    * Measured crossover (stage timing, sf0.1, local[32]): at small corpus
     * the plain [[jaccardPairs]] groupBy-count is faster (1.3 s vs 2.3 s
     * warm) because the per-shingle groups are tiny and the prefix path pays
     * two extra verification joins; prefer this variant when shingle
@@ -609,14 +609,6 @@ object Dedup {
         (0 until bandRows).map(r =>
           element_at(sig, bi * bandRows + r + 1)): _*).cast("binary"))
     }: _*)
-
-  /** (id, band, key) — the LSH bucket assignment, one row per band. */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-                 n: Int = 3): DataFrame =
-    shingleHashFrame(df, idCol, textCol, n)
-      .withColumn("sig", minhashSignature(col("sh")))
-      .select(col("id"), col("sz"), col("sh"),
-        posexplode(bandKeys(col("sig"))).as(Seq("band", "key")))
 
   /** LSH candidate pairs (≥1 band collision), verified with the exact
     * Jaccard over the shingle-hash sets. The shuffle key is (band, key):

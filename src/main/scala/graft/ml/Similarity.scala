@@ -1505,8 +1505,7 @@ object Similarity {
     * the compaction's read could land in the old generation and be lost.
     */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String, keepPrevious: Boolean = false,
-                      localitySort: Boolean = false): Unit = {
+                      path: String, keepPrevious: Boolean = false): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val curDir = activeIndexDir(spark, path)
@@ -1526,32 +1525,13 @@ object Similarity {
     // resurrect-or-overhide window.
     val cleaned = applyDeletes(spark, path, spark.read.parquet(curDir))
       .repartition(partDirs.length, col(partCol))
-    // `localitySort` additionally lays each rewritten list out by a
-    // similarity-locality key so adjacent rows share byte patterns —
-    // the column compressor's window then actually compresses the list:
-    // PQ-coded lists sort by their code arrays (identical code prefixes
-    // become runs), raw-vector lists by a Morton interleave of the
-    // leading dims on a coarse clamp grid. A LAYOUT key only — search
-    // semantics are order-free (spec-pinned). MEASURED (ivf_layout.json,
-    // tools/IvfLayoutProbe, 20k-vector sf1 sweep corpus): bytes on disk
-    // and bytes read by the probed search unchanged to 0.02% for both
-    // index types — near-iid float vectors carry no local byte
-    // redundancy, and PQ code pages compress order-free at this list
-    // size. Default stays OFF; the lever exists for clustered
-    // production corpora where identical code prefixes dominate lists.
-    val localityKey: Option[Column] =
-      if (!localitySort) None
-      else if (cleaned.columns.contains("codes")) Some(col("codes"))
-      else if (cleaned.columns.contains("v_vec"))
-        Some(graft.operators.ZOrder.zValue(
-          (1 to 4).map(d => floor(element_at(col("v_vec"), d)
-            .cast("double") * 16d).cast("long") + lit(128L)), bits = 8))
-      else None
-    val laidOut = localityKey match {
-      case None => cleaned
-      case Some(key) => cleaned.sortWithinPartitions(col(partCol), key)
-    }
-    laidOut
+    // Lists keep arrival order: sorting a list by a similarity-locality
+    // key (its PQ code arrays, or a Morton key of the leading dims) does
+    // not pay (ivf_layout.json, 20k-vector sf1 sweep corpus: bytes on
+    // disk and bytes read by the probed search within 0.02% for both
+    // index types) — near-iid float vectors carry no local byte
+    // redundancy, and PQ code pages compress order-free at this size.
+    cleaned
       .write.mode("overwrite").partitionBy(partCol)
       .parquet(s"$path/$nextName")
     // purge the raw sidecar in the SAME generation step: the tombstone

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Threshold alerts: rolling-window scheduled queries whose grouped aggregate
@@ -149,14 +149,6 @@ object Alerts {
     case EqualTo => r.aggregate == cfg.threshold
   }
 
-  /** The alert's filter+aggregate as a DataFrame (for oracle-checked tests). */
-  def alertFrame(df: DataFrame, cfg: AlertConfig): DataFrame = {
-    val filtered = cfg.where.map(w => df.filter(Conditions.toColumn(w))).getOrElse(df)
-    val aggCol = aggregate(cfg.agg, cfg.aggColumn).as("agg_value")
-    if (cfg.groupBy.isEmpty) filtered.agg(aggCol)
-    else filtered.groupBy(cfg.groupBy.map(col): _*).agg(aggCol)
-  }
-
   /** Anomaly alert: instead of a fixed threshold, flag rows whose
     * quantized measure deviates more than `zThreshold` standard deviations
     * from its group's mean ([[TimeSeries.zscore]] — exact integer moments,
@@ -302,47 +294,6 @@ object Alerts {
         } else NotTriggered
       states.put(alertId, next)
       next
-    }
-  }
-
-  /** [[schedule]] driven through the state machine: each round's grouped
-    * evaluation feeds [[StateMachine.observe]], whose Triggered/resolved
-    * transitions reach the configured notification targets when the
-    * machine's `notify` is an [[AlertTargets.Dispatcher]] — the reference's
-    * evaluation→`Target::call` chain (`src/sync.rs` loop,
-    * `src/alerts/target.rs:275-340`).
-    */
-  def scheduleWithTargets(
-      spark: SparkSession,
-      stream: QueryService.Stream,
-      alertId: String,
-      cfg: AlertConfig,
-      window: java.time.Duration,
-      rounds: Int,
-      machine: StateMachine): Unit =
-    schedule(spark, stream, cfg, window, rounds,
-      results => { machine.observe(alertId, cfg, results.map(_._1)); () })
-
-  /** Rolling-window scheduler loop (reference `src/sync.rs:372+`): evaluate
-    * every `frequency` until `rounds` exhausted — driver-facing utility; in
-    * production this is a Structured Streaming Trigger.ProcessingTime job.
-    */
-  def schedule(
-      spark: SparkSession,
-      stream: QueryService.Stream,
-      cfg: AlertConfig,
-      window: java.time.Duration,
-      rounds: Int,
-      onResult: Seq[(GroupResult, Boolean)] => Unit): Unit = {
-    (0 until rounds).foreach { _ =>
-      val now = java.time.Instant.now()
-      val range = TimeRange(now.minus(window), now)
-      val df = spark.read
-        .parquet(stream.path)
-        .filter(col(stream.timeCol) >= lit(java.sql.Timestamp.from(range.start)) &&
-          col(stream.timeCol) < lit(java.sql.Timestamp.from(range.end)))
-      val results = evaluate(df, cfg).map(r => r -> triggered(r, cfg))
-      onResult(results)
     }
   }
 }

@@ -81,16 +81,12 @@ object Traces {
     * row per trace: (trace_id, leaf_span, path_len, path_dur), leaf with
     * the max path duration, ties broken by smallest leaf span id.
     *
-    * With `eagerCheck` (default) each level is counted as it materializes
-    * and the loop stops at the first empty frontier — right when depth is
-    * unknown. When the caller KNOWS a depth bound (e.g. a balanced
-    * hierarchy), `eagerCheck = false` skips every per-level job: the plan
-    * is built lazily across all levels and executes as ONE Spark job over
-    * the cached base — no sequential barriers, full cluster parallelism.
+    * Each level is counted as it materializes and the loop stops at the
+    * first empty frontier, so the depth need not be known up front.
     */
   def criticalPath(spans: DataFrame, traceCol: String, spanCol: String,
                    parentCol: String, durCol: String,
-                   maxDepth: Int = 20, eagerCheck: Boolean = true): DataFrame = {
+                   maxDepth: Int = 20): DataFrame = {
     // one up-front hash partition on the trace id: HashPartitioning(t_id)
     // satisfies the ClusteredDistribution of every (t_id, parent) level
     // join AND the final per-trace window/anti-join, so the whole BFS runs
@@ -114,7 +110,7 @@ object Traces {
     persisted += frontier
     var acc = frontier
     var depth = 0
-    var frontierRows = if (eagerCheck) frontier.count() else 1L
+    var frontierRows = frontier.count()
     while (depth < maxDepth && frontierRows > 0) {
       val next = base.as("c")
         .join(frontier.as("p"),
@@ -124,7 +120,7 @@ object Traces {
           (col("p.path_len") + lit(1L)).as("path_len"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       persisted += next
-      if (eagerCheck) frontierRows = next.count()
+      frontierRows = next.count()
       acc = acc.unionByName(next)
       frontier = next
       depth += 1

@@ -105,6 +105,10 @@ object IngestStream {
 
   /** Process one micro-batch: infer → commit schema → build rows → enrich →
     * append partitioned parquet. Also feeds [[LiveTail]] subscribers.
+    *
+    * The batch's `p_timestamp` is one driver-side literal: the frame is
+    * evaluated by the write, the count and the tail fan-out, and a
+    * `current_timestamp()` would stamp each of them differently.
     */
   def processBatch(raw: Dataset[String], cfg: StreamConfig,
                    registry: SchemaRegistry, root: String,
@@ -117,7 +121,8 @@ object IngestStream {
       merged <- registry.commit(cfg.name, batchSchema)
     } yield {
       val df = toRowsDistributed(raw, cfg, merged)
-        .withColumn("p_timestamp", current_timestamp())
+        .withColumn("p_timestamp",
+          lit(java.sql.Timestamp.from(java.time.Instant.now())))
         .withColumn("p_user_agent", lit(""))
         .withColumn("p_src_ip", lit(""))
         .withColumn("p_format", lit(format))
@@ -140,8 +145,10 @@ object IngestStream {
       }
       val written = df.count()
       // the batch is already flushed to parquet above — subscribers get the
-      // push, but the staging union must not re-count it
-      LiveTail.publish(cfg.name, df, persisted = true)
+      // push, but the staging union must not re-count it; with nobody
+      // tailing there is nothing to collect
+      if (LiveTail.subscriberCount(cfg.name) > 0)
+        LiveTail.publish(cfg.name, df, persisted = true)
       written
     }
   }
@@ -175,12 +182,6 @@ object IngestStream {
       }
       .start()
 
-  /** File-drop ingest source: newline-delimited JSON under `dir`. */
-  def fromJsonFiles(spark: SparkSession, dir: String): Dataset[String] = {
-    import spark.implicits._
-    spark.readStream.option("maxFilesPerTrigger", 64).text(dir).as[String]
-  }
-
   /** Whether the Kafka structured-streaming connector
     * (`spark-sql-kafka-0-10`, a separate artifact not bundled with Spark)
     * is on the classpath.
@@ -194,8 +195,8 @@ object IngestStream {
   /** Kafka ingest source — the production ingestion path (reference
     * `src/connectors/kafka/processor.rs:44-200`: consumer → deserialize →
     * the same `flatten_and_push_logs` pipeline). Returns the record
-    * `value` as a `Dataset[String]` of JSON events — the identical
-    * contract as [[fromJsonFiles]], so [[start]] runs the same
+    * `value` as a `Dataset[String]` of JSON events — the contract
+    * [[start]] takes, so it runs the same
     * infer→rename→append pipeline on micro-batches of Kafka records, with
     * offsets tracked in the streaming checkpoint. Delivery into the
     * parquet table is AT-LEAST-ONCE: a batch retried after a mid-append

@@ -21,7 +21,7 @@ class PlanAuditSpec extends SparkSuite {
     // _deleted/_filtered: same ≤8-row centroid cross join as the
     // persisted base; their tombstone anti-join is a BroadcastHashJoin
     // LeftAnti (equi on id, residual del_seq > seq) — verified via
-    // ExplainDump, not BNLJ
+    // PlanDumpAll, not BNLJ
     "q_sim_ivf_deleted", "q_sim_ivf_diverse", "q_sim_ivf_filtered",
     // auto-probe filtered search: same ≤8-row centroid cross join as
     // q_sim_ivf_filtered; the selectivity count is a scan + aggregate
@@ -38,7 +38,7 @@ class PlanAuditSpec extends SparkSuite {
     "q_text_lmscore", "q_text_tfidf", "q_vocab_topk",
     // radius search: `corpus.crossJoin(broadcast(q))` with a single
     // query row — same tiny-query-side contract as q_sim_knn. Verified
-    // via ExplainDump (r13): BNLJ Cross BuildRight, build = the 1-row
+    // via the formatted plan (r13): BNLJ Cross BuildRight, build = the 1-row
     // query frame (persisted variant adds the ≤8-row centroid cross
     // join of the probe subquery, same as q_sim_ivf_persisted).
     "q_sim_radius", "q_sim_radius_persisted",
@@ -52,7 +52,7 @@ class PlanAuditSpec extends SparkSuite {
     // hybrid RRF: the BNLJs are inside the LEGS (knnBruteForce's 1-row
     // broadcast query / ivfSearchPersisted's ≤8-row centroid table);
     // the RRF fusion full-outer itself plans SortMergeJoin FullOuter on
-    // the id equi-key over ≤(kLex+kVec) rows — verified via ExplainDump
+    // the id equi-key over ≤(kLex+kVec) rows — verified via PlanDumpAll
     // (r13), not BNLJ.
     "q_hybrid_rrf", "q_hybrid_persisted",
     // calibration curve: the ≤8-row centroid table cross-joins into both

@@ -105,30 +105,6 @@ class AnnDeleteSpec extends SparkSuite {
     assert(after == before)
   }
 
-  test("compaction with localitySort preserves answers on IVF and " +
-      "IVF-PQ — the layout key reorders rows, never results") {
-    // IVF: raw-vector lists sort by the leading-dims Morton key
-    val a = java.nio.file.Files.createTempDirectory("loc-ivf").toString
-    Similarity.saveIvfIndex(corpus, "vec_id", "embedding",
-      numCentroids = 8, a)
-    val before = asPairs(Similarity.ivfSearchPersisted(spark, a, queries,
-      "vec_id", "embedding", k = 5, nProbe = 8))
-    Similarity.compactAnnIndex(spark, a, localitySort = true)
-    val after = asPairs(Similarity.ivfSearchPersisted(spark, a, queries,
-      "vec_id", "embedding", k = 5, nProbe = 8))
-    assert(after == before)
-    // IVF-PQ: coded lists sort by the code arrays
-    val b = java.nio.file.Files.createTempDirectory("loc-pq").toString
-    Similarity.saveIvfPqIndex(corpus, "vec_id", "embedding",
-      numCentroids = 8, b, numSubspaces = 2, pqCentroids = 16, dim = 4)
-    val pqBefore = asPairs(Similarity.ivfPqSearchPersisted(spark, b,
-      queries, "vec_id", "embedding", k = 5, nProbe = 8, rerank = 0))
-    Similarity.compactAnnIndex(spark, b, localitySort = true)
-    val pqAfter = asPairs(Similarity.ivfPqSearchPersisted(spark, b,
-      queries, "vec_id", "embedding", k = 5, nProbe = 8, rerank = 0))
-    assert(pqAfter == pqBefore)
-  }
-
   test("IVF: epoch stays monotone across compaction (post-compaction deletes work)") {
     val dir = java.nio.file.Files.createTempDirectory("del-epoch").toString
     Similarity.saveIvfIndex(corpus, "vec_id", "embedding",

@@ -48,23 +48,6 @@ class TracesSpec extends SparkSuite {
     assert(r.toSeq == Seq((1L, 4L, 3L, 35L), (2L, 0L, 1L, 7L)))
   }
 
-  test("criticalPath with eagerCheck=false matches the eager result") {
-    val spans = Seq(
-      (1L, 0L, Option.empty[Long], 10L),
-      (1L, 1L, Some(0L), 5L), (1L, 2L, Some(0L), 1L),
-      (1L, 3L, Some(1L), 2L), (1L, 4L, Some(1L), 20L),
-      (2L, 0L, Option.empty[Long], 7L))
-      .toDF("t_id", "s_id", "p_id", "dur")
-    val eager = Traces.criticalPath(spans, "t_id", "s_id", "p_id", "dur")
-      .orderBy("trace_id").collect().toSeq
-    // depth bound larger than the real depth: extra lazy levels are empty
-    // joins and must not change the answer
-    val lazyR = Traces.criticalPath(spans, "t_id", "s_id", "p_id", "dur",
-      maxDepth = 6, eagerCheck = false)
-      .orderBy("trace_id").collect().toSeq
-    assert(eager == lazyR)
-  }
-
   test("criticalPath tiebreaks equal-duration paths by smallest leaf id") {
     val spans = Seq(
       (1L, 0L, Option.empty[Long], 1L),

@@ -170,6 +170,27 @@ class IngestStreamSpec extends SparkSuite {
     LiveTail.clear("tail")
   }
 
+  test("tailed rows equal the stored rows, p_timestamp included") {
+    val root = tmp()
+    val cfg = StreamConfig("stamped")
+    LiveTail.clear("stamped")
+    val tailed = scala.collection.mutable.ArrayBuffer[(String, java.sql.Timestamp)]()
+    val unsub = LiveTail.subscribe("stamped") { b =>
+      val (m, ts) = (b.schema.fieldIndex("m"), b.schema.fieldIndex("p_timestamp"))
+      b.rows.foreach(r => tailed += (r.getString(m) -> r.getTimestamp(ts)))
+    }
+    try {
+      IngestStream.processBatch(
+        Seq("""{"m":"one"}""", """{"m":"two"}""").toDS(), cfg,
+        new SchemaRegistry, root)
+      val stored = spark.read.parquet(s"$root/stamped")
+        .select("m", "p_timestamp").collect()
+        .map(r => r.getString(0) -> r.getTimestamp(1)).toSet
+      assert(tailed.size == 2 && tailed.toSet == stored,
+        s"tailed $tailed, stored $stored")
+    } finally { unsub(); LiveTail.clear("stamped") }
+  }
+
   test("each micro-batch commits an incremental catalog version") {
     val root = tmp()
     val cat = tmp()

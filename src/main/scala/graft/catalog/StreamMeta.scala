@@ -36,7 +36,10 @@ object StreamMeta {
       zOrder: Option[(Seq[String], Int)] = None,
       // reference X-P-Time-Partition-Limit ("90d") — durable so a limit
       // set over HTTP survives a restart (GET .../info reports it)
-      timePartitionLimitDays: Option[Int] = None)
+      timePartitionLimitDays: Option[Int] = None,
+      // reference static_schema_flag: `schema` is the declared schema
+      // every event must fit, and it stays fixed across restarts
+      staticSchemaFlag: Boolean = false)
 
   private val mapper = new ObjectMapper()
 
@@ -60,12 +63,13 @@ object StreamMeta {
 
   /** Save `meta`, preserving any HTTP-writable facet the caller's value
     * does not carry (keep-if-absent): zOrder, customPartitions,
-    * timePartitionLimitDays and retention all survive a save from a
-    * writer that never knew about them. This is the streaming ingest
-    * path's per-batch save — a job whose captured config HAS a facet is
-    * actively laying batches out with it, so its value wins truthfully;
-    * a job without one must not clobber a policy set over HTTP between
-    * batches. Atomic against concurrent HTTP updates via [[locked]].
+    * timePartitionLimitDays, retention and the static-schema flag all
+    * survive a save from a writer that never knew about them. This is
+    * the streaming ingest path's per-batch save — a job whose captured
+    * config HAS a facet is actively laying batches out with it, so its
+    * value wins truthfully; a job without one must not clobber a policy
+    * set over HTTP between batches. Atomic against concurrent HTTP
+    * updates via [[locked]].
     */
   def mergeSave(root: String, meta: Meta): Unit =
     locked(root, meta.stream) {
@@ -79,7 +83,9 @@ object StreamMeta {
           else existing.map(_.customPartitions).getOrElse(Nil),
         timePartitionLimitDays =
           keep(meta.timePartitionLimitDays, _.timePartitionLimitDays),
-        retention = keep(meta.retention, _.retention)))
+        retention = keep(meta.retention, _.retention),
+        staticSchemaFlag =
+          meta.staticSchemaFlag || existing.exists(_.staticSchemaFlag)))
     }
 
   def save(root: String, meta: Meta): Unit = {
@@ -103,6 +109,7 @@ object StreamMeta {
     }
     meta.timePartitionLimitDays.foreach(
       o.put("time_partition_limit_days", _))
+    if (meta.staticSchemaFlag) o.put("static_schema_flag", true)
     meta.schema.foreach(s => o.put("schema", s.json))
     val p = metaPath(root, meta.stream)
     Files.createDirectories(p.getParent)
@@ -156,20 +163,24 @@ object StreamMeta {
             z.get("bits").asInt)
         },
         timePartitionLimitDays =
-          Option(o.get("time_partition_limit_days")).map(_.asInt)))
+          Option(o.get("time_partition_limit_days")).map(_.asInt),
+        staticSchemaFlag =
+          Option(o.get("static_schema_flag")).exists(_.asBoolean)))
     }
   }
 
   /** Rehydrate a [[StreamConfig]] from persisted metadata — the restart
     * path for surfaces (GET .../info) whose in-memory config map is
-    * empty in a fresh process. The static schema is not carried (the
-    * queryable schema comes from [[unionSchema]]).
+    * empty in a fresh process. A static stream gets its stored schema
+    * back as the static schema, so ingest keeps refusing what does not
+    * fit it.
     */
   def toConfig(meta: Meta): StreamConfig =
     StreamConfig(meta.stream,
       timePartition = meta.timePartition,
       customPartitions = meta.customPartitions,
       timePartitionLimitDays = meta.timePartitionLimitDays,
+      staticSchema = meta.schema.filter(_ => meta.staticSchemaFlag),
       zOrder = meta.zOrder.map { case (dims, bits) =>
         graft.ingest.IngestPipeline.ZOrderPolicy(dims, bits) })
 
@@ -177,5 +188,5 @@ object StreamMeta {
                  retention: Option[Retention] = None): Meta =
     Meta(Version, cfg.name, "v1", cfg.timePartition, cfg.customPartitions,
       retention, schema, cfg.zOrder.map(p => (p.dims, p.bits)),
-      cfg.timePartitionLimitDays)
+      cfg.timePartitionLimitDays, cfg.staticSchema.isDefined)
 }

@@ -172,8 +172,8 @@ object IngestPipeline {
     * coerce a mistyped value to 0 instead of refusing the event.
     * Returns the first violation, if any.
     */
-  private def validateAgainstStatic(ev: ObjectNode,
-                                    fixed: StructType): Option[String] = {
+  private[graft] def validateAgainstStatic(ev: ObjectNode,
+      fixed: StructType): Option[String] = {
     def kindOk(v: JsonNode, dt: DataType): Boolean = dt match {
       case LongType => v.isIntegralNumber
       case DoubleType => v.isNumber

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -60,54 +58,82 @@ object IngestStream {
     err.toLeft(StructType(acc.values.toArray))
   }
 
-  /** Pass 1: infer the batch schema distributively. Each partition folds
-    * its records into a partial schema; partials merge on the driver.
+  /** Pass 1: the batch schema and event count, computed distributively —
+    * only per-partition `(schema, count, violation)` triples cross to the
+    * driver. A dynamic stream folds each partition's records into a
+    * partial schema and the partials merge with renames on the driver. A
+    * static stream infers nothing: every event must fit the declared
+    * schema ([[IngestPipeline.validateAgainstStatic]], the HTTP path's
+    * check), and the first violation refuses the batch. The count is the
+    * number of events pass 2 writes: both passes drop the same payloads
+    * (those [[IngestPipeline.prepare]] refuses).
     */
   def inferBatchSchema(raw: Dataset[String], cfg: StreamConfig,
-                       base: StructType): Either[String, StructType] = {
-    val partials: Array[StructType] = raw.mapPartitions { it =>
-      val mapper = new ObjectMapper()
+                       base: StructType): Either[String, (StructType, Long)] = {
+    val partials = raw.mapPartitions { it =>
       var acc = new StructType()
-      it.foreach { json =>
-        IngestPipeline.prepare(json, cfg).foreach { events =>
+      var n = 0L
+      var err: Option[String] = None
+      while (err.isEmpty && it.hasNext)
+        IngestPipeline.prepare(it.next(), cfg).foreach { events =>
+          n += events.size
           events.foreach { ev =>
-            val renamed = SchemaInference.renameConflicts(ev, base)
-            mergeWithRenames(acc, SchemaInference.inferSchema(renamed))
-              .foreach(acc = _)
+            cfg.staticSchema match {
+              case Some(fixed) => err = err.orElse(
+                IngestPipeline.validateAgainstStatic(ev, fixed))
+              case None =>
+                val renamed = SchemaInference.renameConflicts(ev, base)
+                mergeWithRenames(acc, SchemaInference.inferSchema(renamed))
+                  .foreach(acc = _)
+            }
           }
         }
+      Iterator.single((acc, n, err))
+    }(org.apache.spark.sql.Encoders
+      .kryo[(StructType, Long, Option[String])]).collect()
+    val n = partials.map(_._2).sum
+    partials.collectFirst { case (_, _, Some(e)) => e } match {
+      case Some(e) => Left(e)
+      case None => cfg.staticSchema match {
+        case Some(fixed) => Right((fixed, n))
+        case None =>
+          partials.foldLeft(Right(base): Either[String, StructType]) {
+            case (Left(e), _)            => Left(e)
+            case (Right(b), (inc, _, _)) => mergeWithRenames(b, inc)
+          }.map((_, n))
       }
-      Iterator.single(acc)
-    }(org.apache.spark.sql.Encoders.kryo[StructType]).collect()
-    partials.foldLeft(Right(base): Either[String, StructType]) {
-      case (Left(e), _)    => Left(e)
-      case (Right(b), inc) => mergeWithRenames(b, inc)
     }
   }
 
-  /** Pass 2: flatten+rename+cast to Rows against the broadcast merged
-    * schema, entirely executor-side.
+  /** Pass 2: flatten (+ rename, on a dynamic stream) and cast to Rows
+    * against the broadcast merged schema, entirely executor-side. A static
+    * stream's events were validated against its schema in pass 1 and are
+    * built as they are.
     */
   def toRowsDistributed(raw: Dataset[String], cfg: StreamConfig,
                         merged: StructType): DataFrame = {
     val spark = raw.sparkSession
     val bc = spark.sparkContext.broadcast(merged)
+    val rename = cfg.staticSchema.isEmpty
     val rdd = raw.rdd.mapPartitions { it =>
       it.flatMap { json =>
         IngestPipeline.prepare(json, cfg).getOrElse(Nil).map { ev =>
-          val renamed = SchemaInference.renameConflicts(ev, bc.value)
-          IngestPipeline.toRows(Seq(renamed), bc.value).head
+          val r =
+            if (rename) SchemaInference.renameConflicts(ev, bc.value) else ev
+          IngestPipeline.toRows(Seq(r), bc.value).head
         }
       }
     }
     spark.createDataFrame(rdd, merged)
   }
 
-  /** Process one micro-batch: infer → commit schema → build rows → enrich →
-    * append partitioned parquet. Also feeds [[LiveTail]] subscribers.
+  /** Process one micro-batch: infer (or validate) → commit schema → build
+    * rows → enrich → append partitioned parquet. Also feeds [[LiveTail]]
+    * subscribers. Returns the event count pass 1 took, so the written
+    * frame is never counted by a job of its own.
     *
     * The batch's `p_timestamp` is one driver-side literal: the frame is
-    * evaluated by the write, the count and the tail fan-out, and a
+    * evaluated by the write and the tail fan-out, and a
     * `current_timestamp()` would stamp each of them differently.
     */
   def processBatch(raw: Dataset[String], cfg: StreamConfig,
@@ -117,7 +143,8 @@ object IngestStream {
       : Either[String, Long] = {
     val base = registry.get(cfg.name).getOrElse(new StructType())
     for {
-      batchSchema <- inferBatchSchema(raw, cfg, base)
+      scanned <- inferBatchSchema(raw, cfg, base)
+      (batchSchema, written) = scanned
       merged <- registry.commit(cfg.name, batchSchema)
     } yield {
       val df = toRowsDistributed(raw, cfg, merged)
@@ -132,9 +159,9 @@ object IngestStream {
       // stream.json has a SECOND writer (the HTTP create/update handlers
       // persist layout changes durably) — mergeSave keeps every
       // HTTP-writable facet (z-order, custom partitions, limit,
-      // retention) this job's captured config doesn't carry, atomically
-      // against concurrent HTTP updates; a facet the job HAS wins
-      // truthfully (it is laying batches out with it).
+      // retention, static flag) this job's captured config doesn't
+      // carry, atomically against concurrent HTTP updates; a facet the
+      // job HAS wins truthfully (it is laying batches out with it).
       graft.catalog.StreamMeta.mergeSave(root,
         graft.catalog.StreamMeta.fromConfig(cfg, Some(merged)))
       // incremental catalog commit: stats for JUST this batch's new files
@@ -143,7 +170,6 @@ object IngestStream {
         graft.catalog.TxnCatalog.appendNewFiles(
           raw.sparkSession, s"$root/${cfg.name}", catRoot, statCols)
       }
-      val written = df.count()
       // the batch is already flushed to parquet above — subscribers get the
       // push, but the staging union must not re-count it; with nobody
       // tailing there is nothing to collect

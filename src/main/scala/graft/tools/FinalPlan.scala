@@ -13,12 +13,8 @@ object FinalPlan {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val spark = GraftSession.local(cores = cpus, appName = "graft-finalplan")
-    val prep = SparkEntry.prepared
     args.foreach { n =>
-      val df = prep.get(n) match {
-        case Some(p) => p.search(spark, sfDir, p.build(spark, sfDir))
-        case None => SparkEntry.queries(n)(spark, sfDir)
-      }
+      val df = SparkEntry.queries(n)(spark, sfDir)
       Bench.materialize(df)
       println(s"\n===== $n (final) =====")
       println(df.queryExecution.executedPlan.toString)

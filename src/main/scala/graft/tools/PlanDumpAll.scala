@@ -18,16 +18,12 @@ object PlanDumpAll {
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = GraftSession.local(cores = 8, appName = "graft-plandump")
-    val prep = SparkEntry.prepared
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       try {
-        val df = prep.get(n) match {
-          case Some(p) => p.search(spark, sfDir, p.build(spark, sfDir))
-          case None => SparkEntry.queries(n)(spark, sfDir)
-        }
+        val df = SparkEntry.queries(n)(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
         Files.write(outDir.resolve(s"${n}_$suffix.txt"),

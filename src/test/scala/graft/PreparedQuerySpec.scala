@@ -1,12 +1,14 @@
 package graft
 
-/** The bench's build/search split ([[SparkEntry.prepared]]) must return
-  * EXACTLY what the fused gated-query body returns — the correctness gate
-  * runs the fused body, the bench times the split, and any drift between
-  * them would silently decouple the benchmark from the thing the oracle
-  * verified.
+/** A gate with a build/search split ([[SparkEntry.prepared]]) has one body:
+  * the oracle checks the split the bench times. The three IVF-PQ gates are
+  * the exception on purpose — their fused body runs the ad-hoc
+  * `Similarity.ivfPqSearch` while their split runs the persisted index, so
+  * holding the two equal is a real cross-path check.
   */
 class PreparedQuerySpec extends SparkSuite {
+
+  private val crossChecked = Seq("q_sim_ivfpq", "q_sim_ivfpq_residual", "q_sim_pq")
 
   test("every prepared key is a gated query") {
     val unknown = SparkEntry.prepared.keySet -- SparkEntry.queries.keySet
@@ -20,11 +22,17 @@ class PreparedQuerySpec extends SparkSuite {
     assert(o -- q == Set.empty, s"oracle SQL with no gated query: ${o -- q}")
   }
 
-  for ((name, p) <- SparkEntry.prepared.toSeq.sortBy(_._1)) {
+  test("a split gate has no second, fused body (IVF-PQ cross-checks aside)") {
+    val both = SparkEntry.prepared.keySet & SparkEntry.fused.keySet
+    assert(both == crossChecked.toSet,
+      s"split gates that also carry a fused body: $both")
+  }
+
+  for (name <- crossChecked) {
     test(s"$name: build+search rows == fused query rows") {
-      val fused = SparkEntry.queries(name)(spark, sfDir)
-      val artifact = p.build(spark, sfDir)
-      val split = p.search(spark, sfDir, artifact)
+      val p = SparkEntry.prepared(name)
+      val fused = SparkEntry.fused(name)(spark, sfDir)
+      val split = p.search(spark, sfDir, p.build(spark, sfDir))
       assert(split.schema.fieldNames.toSeq == fused.schema.fieldNames.toSeq)
       val f = fused.collect().map(_.toSeq).toSeq
       val s = split.collect().map(_.toSeq).toSeq

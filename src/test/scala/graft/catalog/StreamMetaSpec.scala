@@ -17,7 +17,7 @@ class StreamMetaSpec extends SparkSuite {
       StructField("msg", StringType), StructField("n", LongType)))
     val meta = StreamMeta.fromConfig(
       StreamConfig("logs", timePartition = Some("ts"),
-        customPartitions = Seq("tenant"),
+        customPartitions = Seq("tenant"), staticSchema = Some(schema),
         zOrder = Some(graft.ingest.IngestPipeline.ZOrderPolicy(
           Seq("x", "y"), bits = 8))),
       Some(schema), Some(StreamMeta.Retention("delete", 30)))
@@ -25,6 +25,9 @@ class StreamMetaSpec extends SparkSuite {
     val back = StreamMeta.load(root, "logs").get
     assert(back == meta)
     assert(back.zOrder.contains((Seq("x", "y"), 8)))
+    // a static stream rehydrates its stored schema as the static schema
+    assert(back.staticSchemaFlag)
+    assert(StreamMeta.toConfig(back).staticSchema.contains(schema))
     assert(StreamMeta.load(root, "absent").isEmpty)
   }
 
@@ -47,9 +50,10 @@ class StreamMetaSpec extends SparkSuite {
   test("mergeSave keeps every HTTP-writable facet the caller's meta " +
       "does not carry; a facet the caller HAS wins") {
     val root = Files.createTempDirectory("metamerge").toString
-    // persisted state: the HTTP lifecycle set all four facets
+    // persisted state: the HTTP lifecycle set all five facets
     StreamMeta.save(root, StreamMeta.fromConfig(
       StreamConfig("logs", customPartitions = Seq("tenant"),
+        staticSchema = Some(StructType(Seq(StructField("msg", StringType)))),
         timePartitionLimitDays = Some(30),
         zOrder = Some(graft.ingest.IngestPipeline.ZOrderPolicy(Seq("x"), 8))),
       None, Some(StreamMeta.Retention("delete", 7))))
@@ -61,6 +65,7 @@ class StreamMetaSpec extends SparkSuite {
     assert(kept.timePartitionLimitDays.contains(30))
     assert(kept.zOrder.contains((Seq("x"), 8)))
     assert(kept.retention.contains(StreamMeta.Retention("delete", 7)))
+    assert(kept.staticSchemaFlag)
     assert(kept.schema.isDefined) // the save's own payload still lands
     // ...but a caller that carries a facet overwrites truthfully
     StreamMeta.mergeSave(root, StreamMeta.fromConfig(

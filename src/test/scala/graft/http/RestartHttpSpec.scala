@@ -124,6 +124,29 @@ class RestartHttpSpec extends SparkSuite {
     }
   }
 
+  test("a static-schema stream keeps refusing unknown fields after a " +
+       "restart") {
+    def rogue(base: String): (Int, String) = http("POST", s"$base/ingest",
+      Map("X-P-Stream" -> "fixed"), Some("""{"level":"info","rogue":1}"""))
+    acrossRestart { (_, base) =>
+      val (s, b) = http("PUT", s"$base/logstream/fixed",
+        Map("X-P-Static-Schema-Flag" -> "true"),
+        Some("""{"fields":[{"name":"level","data_type":"string"}]}"""))
+      assert(s == 200, b)
+      ingest(base, "fixed", """{"level":"info"}""")
+      val (rs, rb) = rogue(base)
+      assert(rs == 400 && rb.contains("field rogue not in static schema"), rb)
+    } { base =>
+      val (rs, rb) = rogue(base)
+      assert(rs == 400 && rb.contains("field rogue not in static schema"), rb)
+      val (_, info) = http("GET", s"$base/logstream/fixed/info")
+      assert(mapper.readTree(info).get("static_schema_flag").asBoolean, info)
+      ingest(base, "fixed", """{"level":"warn"}""")
+      assert(query(base, "SELECT level FROM fixed") ==
+        Set(Map("level" -> "info"), Map("level" -> "warn")))
+    }
+  }
+
   test("a stream update after a restart is applied to the stored config") {
     acrossRestart { (_, base) =>
       assert(http("PUT", s"$base/logstream/upd",

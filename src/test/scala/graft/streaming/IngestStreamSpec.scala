@@ -77,6 +77,50 @@ class IngestStreamSpec extends SparkSuite {
     assert(back.schema.fieldNames.contains("date"))
   }
 
+  test("processBatch returns pass 1's event count: no job re-reads the " +
+      "batch to count it") {
+    val root = tmp()
+    val cfg = StreamConfig("counted")
+    LiveTail.clear("counted")
+    // an array payload is one record holding two events
+    val raw = Seq("""{"x":1}""", """[{"x":2},{"x":3,"y":"z"}]""").toDS()
+    val (n, jobs) = jobsDuring(
+      IngestStream.processBatch(raw, cfg, new SchemaRegistry, root))
+    assert(n == Right(spark.read.parquet(s"$root/counted").count()))
+    assert(n == Right(3L))
+    // pass 1 (schema + count) and the write: the count is not a third
+    assert(jobs == 2, s"processBatch ran $jobs jobs")
+  }
+
+  test("a static stream builds rows against its schema and refuses a " +
+      "batch with an event that does not fit it") {
+    val root = tmp()
+    val fixed = StructType(Seq(StructField("level", StringType),
+      StructField("code", LongType)))
+    val cfg = StreamConfig("fixed", staticSchema = Some(fixed))
+    val registry = new SchemaRegistry
+    LiveTail.clear("fixed")
+    val rogue = IngestStream.processBatch(Seq("""{"level":"info","code":1}""",
+      """{"level":"warn","rogue":1}""").toDS(), cfg, registry, root)
+    assert(rogue.left.exists(_.contains("field rogue not in static schema")),
+      rogue)
+    val mistyped = IngestStream.processBatch(
+      Seq("""{"level":"info","code":"seven"}""").toDS(), cfg, registry, root)
+    assert(mistyped.left.exists(_.contains("does not match")), mistyped)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "fixed")),
+      "a refused batch wrote files")
+    // a fitting batch lands in the declared columns: an integral `code`
+    // is not renamed to a typed sibling (inference would call it a double)
+    assert(IngestStream.processBatch(Seq("""{"level":"info","code":7}""")
+      .toDS(), cfg, registry, root) == Right(1L))
+    val back = spark.read.parquet(s"$root/fixed")
+    assert(back.schema("code").dataType == LongType)
+    assert(!back.columns.exists(_.startsWith("code_")), back.columns.toSeq)
+    assert(back.select("level", "code").collect().map(r =>
+      (r.getString(0), r.getLong(1))).toSeq == Seq(("info", 7L)))
+    assert(registry.get("fixed").contains(fixed))
+  }
+
   test("cross-partition type conflicts land as typed sibling columns") {
     val root = tmp()
     val registry = new SchemaRegistry

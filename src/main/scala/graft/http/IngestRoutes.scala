@@ -93,25 +93,19 @@ private[http] trait IngestRoutes { self: GraftHttpServer =>
                 .toSeq.sortBy(_._1).take(7).toMap
             }
             val builtin = Set("json", "pmeta", "kinesis")
-            // any parse/shape failure in the payload is the CLIENT's error:
-            // surface 400, never let a Jackson exception escape to a 500
-            // (HttpFuzzSpec drives this with binary junk/truncated JSON)
+            // a payload that is not JSON is a 400 from prepare (HttpFuzzSpec
+            // drives this with binary junk/truncated JSON)
             val ingested =
-              try {
-                if (builtin(logSource))
-                  IngestPipeline.ingest(spark, registry, cfg, body, ua, ip,
-                    format = logSource, customFields = customFields)
-                else
-                  IngestPipeline.prepare(body, cfg).flatMap(evs =>
-                    graft.ingest.KnownFormats
-                      .applyInline(evs, logSource, extractLog)
-                      .flatMap(evs2 => IngestPipeline.ingestEvents(spark,
-                        registry, cfg, evs2, ua, ip, format = logSource,
-                        customFields = customFields)))
-              } catch {
-                case e: com.fasterxml.jackson.core.JacksonException =>
-                  Left(s"malformed JSON body: ${e.getOriginalMessage}")
-              }
+              if (builtin(logSource))
+                IngestPipeline.ingest(spark, registry, cfg, body, ua, ip,
+                  format = logSource, customFields = customFields)
+              else
+                IngestPipeline.prepare(body, cfg).flatMap(evs =>
+                  graft.ingest.KnownFormats
+                    .applyInline(evs, logSource, extractLog)
+                    .flatMap(evs2 => IngestPipeline.ingestEvents(spark,
+                      registry, cfg, evs2, ua, ip, format = logSource,
+                      customFields = customFields)))
             ingested match {
               case Left(msg) => err(ex, 400, msg)
               case Right(df) =>

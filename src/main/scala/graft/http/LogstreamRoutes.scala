@@ -113,12 +113,8 @@ private[http] trait LogstreamRoutes { self: GraftHttpServer =>
             // reference detect_schema: infer the flattened schema a JSON
             // payload WOULD get, without creating anything
             val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-            (try IngestPipeline.prepare(body,
-              IngestPipeline.StreamConfig("__detect"))
-            catch {
-              case e: com.fasterxml.jackson.core.JacksonException =>
-                Left(s"malformed JSON body: ${e.getOriginalMessage}")
-            }) match {
+            IngestPipeline.prepare(body,
+              IngestPipeline.StreamConfig("__detect")) match {
               case Left(msg) => err(ex, 400, msg)
               case Right(events) =>
                 val schema = events

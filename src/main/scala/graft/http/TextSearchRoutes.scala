@@ -23,9 +23,10 @@ import GraftHttpServer._
   *     stopword cap). Write-privileged.
   *   - `/api/v1/text/search` — BM25 top-k for a query string, tokenized
   *     exactly as the index tokenized documents (0x20 split). Persisted
-  *     index when present (bucket-pruned postings probe, `where`
-  *     filtered search, `after` keyset pagination); otherwise the
-  *     ad-hoc corpus-scan scorer.
+  *     index when present ([[graft.ml.TextIndex.bm25TopK]]: scored on the
+  *     driver, with no Spark job, when the index is driver-resident, else
+  *     a bucket-pruned postings probe; `where` filtered search, `after`
+  *     keyset pagination); otherwise the ad-hoc corpus-scan scorer.
   *   - `/api/v1/text/delete` / `/api/v1/text/compact` — tombstone doc
   *     ids / rewrite the index without them (generation flip). Both
   *     write-privileged.
@@ -192,9 +193,10 @@ private[http] trait TextSearchRoutes { self: GraftHttpServer =>
     }
 
   /** `POST /api/v1/text/search`: `{"datasetName", "textField", "idField",
-    * "query", "k"?, "where"?, "after": {"score_micro", "doc_id"}?}`.
-    * Persisted path: bucket-pruned BM25 with filtered search and keyset
-    * pagination; ad-hoc path: the corpus-scan scorer (no `after` — build
+    * "query", "k"?, "where"?, "after": {"score_micro", "doc_id"}?}`
+    * (`after` absent or null: the first page).
+    * Persisted path ([[TextIndex.bm25TopK]]): BM25 with filtered search
+    * and keyset pagination; ad-hoc path: the corpus-scan scorer (no `after` — build
     * the index for pagination). Response rows are
     * `{"doc_id", "rank", "score_micro"}` plus a `next_after` cursor when
     * a full page came back from the persisted path.
@@ -216,19 +218,25 @@ private[http] trait TextSearchRoutes { self: GraftHttpServer =>
         case Left(m) => err(ex, 400, m); return
         case Right(w) => w
       }
+      // absent or null: the first page; otherwise both keys, integral
       val after: Option[(Long, Long)] =
-        Option(b.get("after")).map { a =>
-          (a.path("score_micro").asLong, a.path("doc_id").asLong)
+        Option(b.get("after")).filterNot(_.isNull).map { a =>
+          val (s, d) = (a.path("score_micro"), a.path("doc_id"))
+          if (!Seq(s, d).forall(v => v.isIntegralNumber && v.canConvertToLong)) {
+            err(ex, 400, "after must be an object with integral " +
+              "score_micro and doc_id")
+            return
+          }
+          (s.asLong, d.asLong)
         }
       val key = tenantKey(tenant, dataset)
       withSqlTimeout(ex) {
         try {
           val persisted = textIndexExists(key, textField)
-          val ranked: DataFrame =
+          val rows: Seq[(Long, Int, Long)] =
             if (persisted)
-              TextIndex.bm25SearchPersisted(spark,
-                textIndexDir(key, textField), terms, k,
-                where = whereCol, after = after)
+              TextIndex.bm25TopK(spark, textIndexDir(key, textField), terms,
+                k, where = whereCol, after = after)
             else {
               if (after.isDefined) {
                 err(ex, 400, "after-pagination requires a persisted " +
@@ -243,29 +251,25 @@ private[http] trait TextSearchRoutes { self: GraftHttpServer =>
               textScan(dataset, b, idField, textField, tenant) match {
                 case Left(m) => err(ex, 400, m); return
                 case Right(scan) =>
-                  graft.operators.TopK.rankedLimit(
+                  TextIndex.rankedRows(graft.operators.TopK.rankedLimit(
                     TextRank.bm25Scores(scan, idField, textField, terms),
-                    Seq(col("score_micro").desc, col("doc_id").asc), k)
+                    Seq(col("score_micro").desc, col("doc_id").asc), k))
               }
             }
-          val rows = ranked
-            .select(col("doc_id"), col("rk").cast("int").as("rk"),
-              col("score_micro"))
-            .orderBy(col("rk")).collect()
           val o = mapper.createObjectNode()
             .put("served_from", if (persisted) "persisted_index" else "ad_hoc")
           val arr = o.putArray("results")
-          rows.foreach { r =>
-            arr.addObject().put("doc_id", r.getLong(0))
-              .put("rank", r.getInt(1)).put("score_micro", r.getLong(2))
+          rows.foreach { case (doc, rank, score) =>
+            arr.addObject().put("doc_id", doc)
+              .put("rank", rank).put("score_micro", score)
           }
           // keyset cursor (reference search_after): a full page means
           // there may be more — resume strictly after the last row
           if (persisted && rows.length == k) {
-            val last = rows.last
+            val (doc, _, score) = rows.last
             val na = o.putObject("next_after")
-            na.put("score_micro", last.getLong(2))
-            na.put("doc_id", last.getLong(0))
+            na.put("score_micro", score)
+            na.put("doc_id", doc)
             ()
           }
           respond(ex, 200, mapper.writeValueAsString(o))

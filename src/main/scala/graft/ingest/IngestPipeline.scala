@@ -84,9 +84,16 @@ object IngestPipeline {
   /** Parse, flatten and normalize a JSON payload (object or array of
     * objects) into per-event flat objects (no conflict renaming yet — that
     * happens per record against the accumulated schema in [[ingest]]).
+    * Text that is not JSON is refused like any other bad payload, so a
+    * streaming micro-batch skips the record instead of failing.
     */
   def prepare(json: String, cfg: StreamConfig): Either[String, Seq[ObjectNode]] = {
-    val root = mapper.readTree(json)
+    val root =
+      try mapper.readTree(json)
+      catch {
+        case e: com.fasterxml.jackson.core.JacksonException =>
+          return Left(s"malformed JSON body: ${e.getOriginalMessage}")
+      }
     val events: Either[String, Seq[ObjectNode]] = root match {
       case a if a.isArray =>
         Right(a.elements().asScala.toSeq.collect { case o: ObjectNode => o })

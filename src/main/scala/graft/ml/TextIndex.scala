@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,12 +26,23 @@ import org.apache.spark.sql.functions._
   *     (deletes look up the departing docs' lengths bucket-pruned;
   *     compaction recomputes exact stats from the live rows). Searches
   *     never touch it.
-  *   - `_text_stats` — one line `"nDocs sumDl numBuckets"`, maintained
-  *     incrementally (build/append add, delete subtracts) and recomputed
-  *     exactly at compaction. numBuckets lives HERE, not in call
-  *     signatures: an append or search with a mismatched bucket count
-  *     would route postings to (or prune reads from) the wrong
-  *     directories silently.
+  *   - `_text_stats` — one line
+  *     `"nDocs sumDl numBuckets maybeDup layoutVersion token attrs"`:
+  *     corpus stats maintained incrementally (build/append add, delete
+  *     subtracts) and recomputed exactly at compaction; the maybe-dup
+  *     flag ([[readStatsFull]]); the postings layout version and the
+  *     comma-joined build-time attr columns (the layout a resident load
+  *     checks every postings footer against); and a writer-unique token.
+  *     numBuckets lives HERE, not in call signatures: an append or search
+  *     with a mismatched bucket count would route postings to (or prune
+  *     reads from) the wrong directories silently. Every mutator (save,
+  *     merge, append, delete, compact) rewrites this file, with a fresh
+  *     token, as its LAST step — after the data, the tombstone log, the
+  *     pointer and any generation-dir deletes — so a reader that read a
+  *     token sees every write of the mutation that wrote it. Lines of
+  *     indexes written before the layout (3 or 4 fields, attrs in
+  *     `_text_attrs`) still parse; they carry no token, and append and
+  *     delete keep them token-less.
   *   - `data.current` / `data.genN` — generation pointer + versioned
   *     directories (same object-store-correct pointer-swap publication
   *     as `Dedup.compactShingleIndex`).
@@ -50,6 +61,14 @@ import org.apache.spark.sql.functions._
   * (same formulas, same fixed left-to-right pivot sum, same 10⁻⁶ floor
   * grid — parity is spec-pinned in `TextIndexSpec`), so the persisted
   * path shares its DuckDB oracle.
+  *
+  * Residency ([[bm25TopK]], the serving path of `/text/search`): the
+  * active generation of a tokened index whose postings hold at most
+  * [[graft.plans.StatsFileIndex.DefaultMaxDriverRows]] rows (counted
+  * from the parquet footers, on the driver) is held on the driver as an
+  * immutable [[Generation]] and scored there with no Spark job; larger
+  * and token-less indexes keep the Spark plan of [[bm25SearchPersisted]].
+  * The two residency classes mirror the catalog's (`TxnCatalog`).
   *
   * Reference behavior anchor: full-text search over log streams
   * (/root/reference/src/prism/logstream/mod.rs text-filter queries);
@@ -162,20 +181,72 @@ object TextIndex {
   private def termsFrame(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(TermsSchema).parquet(s"$dir/terms")
 
-  /** Atomic small-file publish: write aside, FileContext-rename over
-    * (single-file rename is atomic on posix/HDFS; conditional put on S3).
+  /** Atomic small-file publish: write aside, rename over. Hadoop renames
+    * over an existing file by deleting it first on a local filesystem (a
+    * search in between found no generation pointer and read the
+    * compacted-away `data` dir, or no stats file), so a local file moves
+    * with one rename(2) and carries no `.crc` sidecar (a stale one would
+    * fail the new content's checksum); elsewhere FileContext's OVERWRITE
+    * rename (atomic on HDFS; conditional put on S3).
     */
   private def atomicWrite(spark: SparkSession, path: String,
                           name: String, content: String): Unit = {
     val fs = fsOf(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(s"$path/$name")
-    org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, fs.getConf)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val dst = fs.makeQualified(new org.apache.hadoop.fs.Path(s"$path/$name"))
+    if (fs.getUri.getScheme == "file") {
+      val local = java.nio.file.Paths.get(dst.toUri)
+      val tmp = local.resolveSibling(s"$name.tmp")
+      java.nio.file.Files.write(tmp, bytes)
+      java.nio.file.Files.deleteIfExists(local.resolveSibling(s".$name.crc"))
+      java.nio.file.Files.move(tmp, local,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } else {
+      val tmp = new org.apache.hadoop.fs.Path(s"$path/$name.tmp")
+      val out = fs.create(tmp, true)
+      try out.write(bytes) finally out.close()
+      org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, fs.getConf)
+        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
+    ()
   }
+
+  /** Postings layout a tokened `_text_stats` line names: columns
+    * (term, doc_id, dl, tf, positions, seq) plus the build-time `attrs`.
+    */
+  private val LayoutVersion = 1
+
+  /** What a tokened stats line adds: the layout's attr columns and the
+    * writer-unique token of the mutation that wrote the line.
+    */
+  private final case class Layout(attrs: Seq[String], token: String)
+
+  private final case class Stats(nDocs: Long, sumDl: Long, numBuckets: Int,
+                                 maybeDup: Boolean, layout: Option[Layout])
+
+  /** The stats line of an index root, None when the file is absent. */
+  private def statsOpt(spark: SparkSession, path: String): Option[Stats] =
+    IndexTombstones.readSmallFile(fsOf(spark, path),
+        new org.apache.hadoop.fs.Path(path, StatsFile)).map { line =>
+      line.split("\\s+") match {
+        case Array(n, s, b) => Stats(n.toLong, s.toLong, b.toInt, true, None)
+        case Array(n, s, b, d) =>
+          Stats(n.toLong, s.toLong, b.toInt, d == "1", None)
+        case Array(n, s, b, d, v, tok, attrs @ _*) if attrs.size <= 1 =>
+          if (v.toIntOption.forall(_ != LayoutVersion))
+            throw new IllegalStateException(s"$StatsFile under $path names " +
+              s"postings layout $v, not $LayoutVersion; rebuild with saveTextIndex")
+          Stats(n.toLong, s.toLong, b.toInt, d == "1", Some(Layout(
+            attrs.flatMap(_.split(",")).filter(_.nonEmpty), tok)))
+        case _ => throw new IllegalStateException(s"malformed $StatsFile " +
+          s"under $path: '$line'; rebuild with saveTextIndex")
+      }
+    }
+
+  private def stats(spark: SparkSession, path: String): Stats =
+    statsOpt(spark, path).getOrElse(throw new IllegalStateException(
+      s"missing $StatsFile under $path — not a saveTextIndex layout " +
+        "(or an interrupted build); rebuild with saveTextIndex"))
 
   /** Corpus stats of an index root: (nDocs, sumDl, numBuckets).
     * Incremental between compactions (a crash between a delete's
@@ -185,8 +256,8 @@ object TextIndex {
     * deletion-exact.
     */
   def readStats(spark: SparkSession, path: String): (Long, Long, Int) = {
-    val (n, s, b, _) = readStatsFull(spark, path)
-    (n, s, b)
+    val st = stats(spark, path)
+    (st.nDocs, st.sumDl, st.numBuckets)
   }
 
   /** [[readStats]] plus the MAYBE-DUP flag (4th stats field): false iff
@@ -200,41 +271,37 @@ object TextIndex {
     */
   def readStatsFull(spark: SparkSession,
                     path: String): (Long, Long, Int, Boolean) = {
-    val p = new org.apache.hadoop.fs.Path(path, StatsFile)
-    val line = IndexTombstones.readSmallFile(fsOf(spark, path), p)
-      .getOrElse(throw new IllegalStateException(
-        s"missing $StatsFile under $path — not a saveTextIndex layout " +
-          "(or an interrupted build); rebuild with saveTextIndex"))
-    line.split("\\s+") match {
-      case Array(n, s, b) => (n.toLong, s.toLong, b.toInt, true)
-      case Array(n, s, b, d) => (n.toLong, s.toLong, b.toInt, d == "1")
-      case _ => throw new IllegalStateException(
-        s"malformed $StatsFile under $path: '$line'; rebuild with saveTextIndex")
-    }
+    val st = stats(spark, path)
+    (st.nDocs, st.sumDl, st.numBuckets, st.maybeDup)
   }
 
+  /** Rewrite the stats line — every mutator's LAST step. `attrs` Some
+    * writes the layout and a fresh token; None keeps a token-less index
+    * token-less (its files predate the layout a resident load checks).
+    */
   private def writeStats(spark: SparkSession, path: String,
                          nDocs: Long, sumDl: Long, numBuckets: Int,
-                         maybeDup: Boolean): Unit =
+                         maybeDup: Boolean, attrs: Option[Seq[String]]): Unit =
     atomicWrite(spark, path, StatsFile,
-      s"$nDocs $sumDl $numBuckets ${if (maybeDup) 1 else 0}")
+      s"$nDocs $sumDl $numBuckets ${if (maybeDup) 1 else 0}" +
+        attrs.fold("")(a => s" $LayoutVersion ${java.util.UUID.randomUUID()} " +
+          a.mkString(",")))
 
   /** Attribute columns persisted INSIDE the postings rows (the storage
     * half of filtered lexical search and facet counting — same
     * denormalization choice as `Similarity.saveIvfIndex`'s `attrCols`:
     * predicates and facet aggregations evaluate on the pruned postings
     * reads themselves, never via a search-time join against a metadata
-    * table). The layout is recorded in `_text_attrs` so appends write
-    * the same schema.
+    * table). The layout is recorded in `_text_stats` (`_text_attrs` for
+    * indexes written before it) so appends write the same schema.
     */
   def readAttrs(spark: SparkSession, path: String): Seq[String] =
-    IndexTombstones.readSmallFile(fsOf(spark, path),
-        new org.apache.hadoop.fs.Path(path, AttrsFile))
-      .map(_.split(",").filter(_.nonEmpty).toSeq).getOrElse(Nil)
-
-  private def writeAttrs(spark: SparkSession, path: String,
-                         attrCols: Seq[String]): Unit =
-    atomicWrite(spark, path, AttrsFile, attrCols.mkString(","))
+    statsOpt(spark, path).flatMap(_.layout) match {
+      case Some(l) => l.attrs
+      case None => IndexTombstones.readSmallFile(fsOf(spark, path),
+          new org.apache.hadoop.fs.Path(path, AttrsFile))
+        .map(_.split(",").filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    }
 
   /** Resolve the ACTIVE data directory (generation the pointer names, or
     * the original `data` dir before any compaction). Retrying read: a
@@ -303,13 +370,17 @@ object TextIndex {
     * A rebuild must become visible and forget deletion state: clear
     * tombstones first (crash in between un-hides rows of the superseded
     * generation only), then the generation pointer and stale gen dirs —
-    * the same reset contract as `Similarity.resetIndexGenerations`.
+    * the same reset contract as `Similarity.resetIndexGenerations` —
+    * and only then the stats line with its fresh token.
     */
   def saveTextIndex(docs: DataFrame, idCol: String, textCol: String,
                     path: String, numBuckets: Int = 64,
                     maxDocFreq: Option[Long] = None,
                     attrCols: Seq[String] = Nil): Unit = {
     val spark = docs.sparkSession
+    require(attrCols.forall(a => a.nonEmpty && !a.exists(c =>
+      c == ',' || c.isWhitespace)),
+      s"attrCols must be non-empty names without ',' or whitespace: $attrCols")
     val posts = postingsOf(docs, idCol, textCol, attrCols)
     val kept = maxDocFreq match {
       case None => posts
@@ -324,10 +395,6 @@ object TextIndex {
       lit(0L), "overwrite")
     val st = doclensOf(docs, idCol, textCol)
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    // fresh build: postings are one groupBy(term, doc) pass — unique
-    writeStats(spark, path, st.getLong(0), st.getLong(1), numBuckets,
-      maybeDup = false)
-    writeAttrs(spark, path, attrCols)
     IndexTombstones.reset(spark, path)
     val fs = fsOf(spark, path)
     fs.delete(new org.apache.hadoop.fs.Path(path, Pointer), false)
@@ -337,6 +404,9 @@ object TextIndex {
         if (g.getPath.getName.startsWith("data.gen"))
           fs.delete(g.getPath, true)
       }
+    // fresh build: postings are one groupBy(term, doc) pass — unique
+    writeStats(spark, path, st.getLong(0), st.getLong(1), numBuckets,
+      maybeDup = false, Some(attrCols))
   }
 
   /** MERGE two indexes into a third — the segment/tenant consolidation
@@ -368,16 +438,14 @@ object TextIndex {
     writeDoclens(lens, s"$outPath/data", numBuckets, lit(0L), "overwrite")
     val st = spark.read.parquet(s"$outPath/data/doclens")
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
+    IndexTombstones.reset(spark, outPath)
+    val fs = fsOf(spark, outPath)
+    fs.delete(new org.apache.hadoop.fs.Path(outPath, Pointer), false)
     // doc-disjoint halves (caller contract) can't create cross-side
     // duplicates: the merge is clean iff both inputs are
     writeStats(spark, outPath, st.getLong(0), st.getLong(1), numBuckets,
       maybeDup = readStatsFull(spark, aPath)._4 ||
-        readStatsFull(spark, bPath)._4)
-    writeAttrs(spark, outPath, aAttrs)
-    IndexTombstones.reset(spark, outPath)
-    val fs = fsOf(spark, outPath)
-    fs.delete(new org.apache.hadoop.fs.Path(outPath, Pointer), false)
-    ()
+        readStatsFull(spark, bPath)._4, Some(aAttrs))
   }
 
   /** Append a batch: postings + doclens rows stamped with the CURRENT
@@ -394,20 +462,22 @@ object TextIndex {
   def appendToTextIndex(docs: DataFrame, idCol: String, textCol: String,
                         path: String): Unit = {
     val spark = docs.sparkSession
-    val (n, s, nb) = readStats(spark, path)
+    val st0 = stats(spark, path)
     val dir = activeDataDir(spark, path)
     val seq = lit(IndexTombstones.readEpoch(spark, path))
     val attrCols = readAttrs(spark, path)
-    writePostings(postingsOf(docs, idCol, textCol, attrCols), dir, nb, seq,
-      "append", attrCols)
-    writeDoclens(doclensOf(docs, idCol, textCol), dir, nb, seq, "append")
+    writePostings(postingsOf(docs, idCol, textCol, attrCols), dir,
+      st0.numBuckets, seq, "append", attrCols)
+    writeDoclens(doclensOf(docs, idCol, textCol), dir, st0.numBuckets, seq,
+      "append")
     val st = doclensOf(docs, idCol, textCol)
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
     // any append flips maybe-dup: an at-least-once replay of THIS batch
     // (crash between the postings write and the caller's idempotence
     // marker) can't be ruled out from here on — compaction repairs
-    writeStats(spark, path, n + st.getLong(0), s + st.getLong(1), nb,
-      maybeDup = true)
+    writeStats(spark, path, st0.nDocs + st.getLong(0),
+      st0.sumDl + st.getLong(1), st0.numBuckets, maybeDup = true,
+      st0.layout.map(_.attrs))
   }
 
   /** Delete documents (takedown / data-removal). Tombstones via the
@@ -425,7 +495,8 @@ object TextIndex {
     */
   def deleteFromTextIndex(spark: SparkSession, path: String,
                           ids: DataFrame, idCol: String): Unit = {
-    val (n, s, nb) = readStats(spark, path)
+    val st0 = stats(spark, path)
+    val nb = st0.numBuckets
     val dir = activeDataDir(spark, path)
     val idsL = ids.select(col(idCol).cast("long").as("doc_id"))
     // touched doc-buckets: bounded by numBuckets ints by construction
@@ -437,17 +508,20 @@ object TextIndex {
     val going = live.join(idsL.distinct(), Seq("doc_id"))
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
     IndexTombstones.logDeletes(spark, path, idsL, "doc_id", "doc_id")
-    writeStats(spark, path, n - going.getLong(0), s - going.getLong(1), nb,
-      maybeDup = readStatsFull(spark, path)._4)
+    writeStats(spark, path, st0.nDocs - going.getLong(0),
+      st0.sumDl - going.getLong(1), nb, st0.maybeDup, st0.layout.map(_.attrs))
   }
 
   /** Compact: purge tombstoned rows physically, re-apply the corpus-wide
     * `maxDocFreq` stop-term guard over LIVE document frequencies, rewrite
     * one file per bucket, recompute stats exactly from the live doclens,
     * then publish via atomic pointer swap (versioned dir — see
-    * `Dedup.compactShingleIndex` for the object-store rationale) and
-    * clear the tombstone log. The delete epoch is untouched (must stay
-    * monotone so post-compaction deletes outrank pre-compaction appends).
+    * `Dedup.compactShingleIndex` for the object-store rationale), clear
+    * the tombstone log and drop the superseded generation; the exact
+    * stats (fresh token) land last. A crash before them leaves the
+    * incremental stats, stale-high until the next compaction. The delete
+    * epoch is untouched (must stay monotone so post-compaction deletes
+    * outrank pre-compaction appends).
     *
     * `numBuckets` re-buckets the index when passed (bucket columns are
     * recomputed from term/doc_id either way — never trusted from the
@@ -498,11 +572,11 @@ object TextIndex {
     // exact stats from what actually landed (read-back, not plan re-run)
     val st = spark.read.parquet(s"$path/$nextName/doclens")
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    writeStats(spark, path, st.getLong(0), st.getLong(1), nb,
-      maybeDup = false)
     atomicWrite(spark, path, Pointer, nextName)
     IndexTombstones.clearLog(spark, path)
     if (!keepPrevious) { fs.delete(new org.apache.hadoop.fs.Path(curDir), true); () }
+    writeStats(spark, path, st.getLong(0), st.getLong(1), nb,
+      maybeDup = false, Some(attrCols))
   }
 
   /** Collapse DUPLICATED (doc_id, term) posting rows — the
@@ -613,6 +687,201 @@ object TextIndex {
     // (TopK.rankedLimit — same rows/ranks, no WindowExec log spray)
     graft.operators.TopK.rankedLimit(paged,
       Seq(col("score_micro").desc, col("doc_id").asc), k)
+  }
+
+  /** Ranked BM25 top-k `(doc_id, rk, score_micro)` of a persisted index,
+    * in rank order: the rows of [[bm25SearchPersisted]] with the same
+    * arguments. A tokened index whose postings fit
+    * [[graft.plans.StatsFileIndex.DefaultMaxDriverRows]] is scored on the
+    * driver from its resident [[Generation]] and runs no Spark job (a
+    * `where` over the candidate rows folds into local data); every other
+    * index collects the Spark plan.
+    */
+  def bm25TopK(spark: SparkSession, path: String, queryTerms: Seq[String],
+               k: Int, k1: Double = 1.2, b: Double = 0.75,
+               where: Option[Column] = None,
+               after: Option[(Long, Long)] = None): Seq[(Long, Int, Long)] = {
+    require(queryTerms.nonEmpty && queryTerms == queryTerms.distinct,
+      "queryTerms must be non-empty and distinct")
+    residentGeneration(spark, path) match {
+      case Some(g) => g.topK(spark, queryTerms, k, k1, b, where, after)
+      case None => rankedRows(
+        bm25SearchPersisted(spark, path, queryTerms, k, k1, b, where, after))
+    }
+  }
+
+  /** The `(doc_id, rk, score_micro)` rows of a ranked BM25 frame, in rank
+    * order.
+    */
+  def rankedRows(ranked: DataFrame): Seq[(Long, Int, Long)] =
+    ranked.select(col("doc_id"), col("rk").cast("int"), col("score_micro"))
+      .orderBy(col("rk")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+
+  /** One generation of a tokened index held on the driver: per term, its
+    * LIVE postings rows `(term, doc_id, dl, tf, seq, attrs…)` (`positions`
+    * and `bucket` are left out, so a `where` may name only these), and
+    * the corpus stats of the stats line whose token keyed the load.
+    * Immutable.
+    */
+  private final class Generation(
+      nDocs: Long, sumDl: Long,
+      schema: org.apache.spark.sql.types.StructType,
+      postings: Map[String, Array[Row]]) {
+
+    /** [[bm25SearchPersisted]]'s operations in its order: distinct-doc df
+      * over the live postings (before `where`: a filter restricts
+      * candidates, never statistics), `StrictMath.log` (Spark's `Log`),
+      * the max contribution per (doc, term), a left-to-right sum of the
+      * per-term maxima (0 for a missing term) floored to the 10⁻⁶ grid,
+      * the `after` keyset filter, then (score desc, doc_id asc).
+      */
+    def topK(spark: SparkSession, queryTerms: Seq[String], k: Int, k1: Double,
+             b: Double, where: Option[Column],
+             after: Option[(Long, Long)]): Seq[(Long, Int, Long)] = {
+      val all = queryTerms.map(postings.getOrElse(_, Array.empty[Row]))
+      val n = nDocs.toDouble
+      val avgdl = sumDl.toDouble / n
+      val idf = all.map { rows =>
+        val df = rows.iterator.map(_.getLong(1)).toSet.size.toDouble
+        StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5))
+      }
+      val live = where match {
+        case None => all.iterator.flatten
+        case Some(w) =>
+          import scala.jdk.CollectionConverters._
+          spark.createDataFrame(all.flatten.asJava, schema).filter(w)
+            .collect().iterator
+      }
+      val termIdx = queryTerms.zipWithIndex.toMap
+      val maxima = scala.collection.mutable.LongMap.empty[Array[Option[Double]]]
+      live.foreach { r =>
+        val i = termIdx(r.getString(0))
+        val tf = r.getLong(3).toDouble
+        val denom = tf + k1 * ((1.0 - b) + b * (r.getLong(2).toDouble / avgdl))
+        val c = idf(i) * (tf * (k1 + 1.0)) / denom
+        val cs = maxima.getOrElseUpdate(r.getLong(1),
+          Array.fill[Option[Double]](queryTerms.size)(None))
+        // Spark's max orders NaN above every number, as Double.compare does
+        cs(i) = Some(cs(i).fold(c)(m =>
+          if (java.lang.Double.compare(c, m) > 0) c else m))
+      }
+      val scored = maxima.iterator.map { case (doc, cs) =>
+        val total = cs.tail.foldLeft(cs.head.getOrElse(0.0))(_ + _.getOrElse(0.0))
+        (doc, math.floor(total * 1000000.0).toLong)
+      }
+      val paged = after.fold(scored) { case (s0, d0) =>
+        scored.filter { case (d, s) => s < s0 || (s == s0 && d > d0) } }
+      paged.toSeq
+        .sortWith { case ((d1, s1), (d2, s2)) => s1 > s2 || (s1 == s2 && d1 < d2) }
+        .take(k).zipWithIndex.map { case ((d, s), i) => (d, i + 1, s) }
+    }
+  }
+
+  /** Residency key of a tokened index: the generation dir the pointer
+    * names and the token of the stats line. The token tells a rebuild
+    * into the same dir, an append and a delete apart; the dir tells a
+    * compaction's pointer flip apart before its token lands.
+    */
+  private final case class GenKey(dir: String, token: String)
+
+  /** A path's entry: its key and the generation loaded under it, None
+    * when the postings exceed the driver bound (the Spark plan serves).
+    */
+  private final case class Held(key: GenKey, gen: Option[Generation])
+
+  private val held = new java.util.concurrent.ConcurrentHashMap[String, Held]()
+
+  /** Columns every layout-[[LayoutVersion]] postings file carries, with the
+    * types [[writePostings]] writes (`positions` aside: residency leaves
+    * it out).
+    */
+  private val ResidentCore: Seq[(String, org.apache.spark.sql.types.DataType)] =
+    Seq("term" -> org.apache.spark.sql.types.StringType) ++
+      Seq("doc_id", "dl", "tf", "seq").map(_ -> org.apache.spark.sql.types.LongType)
+
+  /** The resident generation serving `path`: loaded once per key, the
+    * path's entry replaced when the key changes and dropped when the
+    * stats file is gone. None for a token-less index, a missing one, one
+    * above the bound, and one whose key kept moving through three loads.
+    *
+    * The token is read before the pointer and every mutator writes it
+    * last, so a load under a token holds every write of the mutation
+    * that wrote it. A load is kept only if the key still holds after it:
+    * a compaction deletes the generation it replaced only after flipping
+    * the pointer, so a load torn (or failed) by that delete sees the key
+    * move and is retried under the new one. Two racing first searches
+    * may both load; they load the same generation.
+    */
+  private def residentGeneration(spark: SparkSession,
+                                 path: String): Option[Generation] = {
+    def keyNow(): Option[(Stats, GenKey)] = statsOpt(spark, path).flatMap(st =>
+      st.layout.map(l => (st, GenKey(activeDataDir(spark, path), l.token))))
+    @annotation.tailrec
+    def attempt(n: Int): Option[Generation] = keyNow() match {
+      case None => held.remove(path); None
+      case Some((st, key)) =>
+        Option(held.get(path)).filter(_.key == key) match {
+          case Some(h) => h.gen
+          case None =>
+            val loaded =
+              try Right(loadGeneration(spark, path, key, st))
+              catch { case e: Exception => Left(e) }
+            if (keyNow().map(_._2).contains(key)) loaded match {
+              case Right(h) => held.put(path, h); h.gen
+              case Left(e) => throw e
+            }
+            else if (n < 2) attempt(n + 1)
+            else None
+        }
+    }
+    attempt(0)
+  }
+
+  /** Load the generation `key` names: the postings files' footers, read
+    * on the driver, give the row count (above the bound: no rows are
+    * read) and are checked against the recorded layout; then ONE collect
+    * of the live rows (tombstoned rows, `del_seq > seq`, dropped).
+    */
+  private def loadGeneration(spark: SparkSession, path: String, key: GenKey,
+                             st: Stats): Held = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.{NullType, StructField, StructType}
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(s"${key.dir}/postings")
+    val fs = root.getFileSystem(conf)
+    fs.getFileStatus(root) // no postings dir fails, as the Spark plan's read does
+    val footers = fs.globStatus(new org.apache.hadoop.fs.Path(root,
+        "bucket=*/part-*.parquet")).toSeq.map { f =>
+      f.getPath -> org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf,
+        f.getPath,
+        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    }
+    val rows = footers.map(_._2.getBlocks.asScala.map(_.getRowCount).sum).sum
+    if (rows > graft.plans.StatsFileIndex.DefaultMaxDriverRows)
+      return Held(key, None)
+    val types = footers.map { case (f, meta) =>
+      f -> graft.plans.StatsFileIndex.footerSchema(spark, f, meta).fields
+        .map(x => x.name -> x.dataType).toMap }
+    // attr types are not recorded: the first file's, held by every file
+    val firstTypes = types.headOption
+      .fold(Map.empty[String, org.apache.spark.sql.types.DataType])(_._2)
+    val expected = ResidentCore ++ st.layout.get.attrs.map(a =>
+      a -> firstTypes.getOrElse(a, NullType))
+    types.foreach { case (f, ts) =>
+      val off = expected.collect { case (c, t) if !ts.get(c).contains(t) => c }
+      if (off.nonEmpty) throw new IllegalStateException(s"postings file $f " +
+        s"of the text index at $path does not match its recorded layout " +
+        s"$LayoutVersion: ${off.mkString(", ")} missing or of another " +
+        "type; rebuild with saveTextIndex")
+    }
+    val schema = StructType(expected.map { case (c, t) => StructField(c, t) })
+    val postings =
+      if (footers.isEmpty) Map.empty[String, Array[Row]]
+      else IndexTombstones.applyDeletes(spark, path, spark.read.schema(schema)
+          .parquet(footers.map(_._1.toString): _*), "doc_id")
+        .collect().groupBy(_.getString(0))
+    Held(key, Some(new Generation(st.nDocs, st.sumDl, schema, postings)))
   }
 
   /** Batched BM25 against the persisted index: score a whole QUERY SET —

@@ -44,6 +44,41 @@ class TextSearchHttpSpec extends SparkSuite {
     Map("Authorization" -> ("Basic " + Base64.getEncoder
       .encodeToString(s"$user:$pass".getBytes(UTF_8))))
 
+  test("a search on a resident index runs 0 Spark jobs; an `after` that " +
+      "is null means page 1, a half-filled or non-integral one is a 400") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-text-res").toString
+    val srv = new GraftHttpServer(spark, tmp)
+    srv.start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}/api/v1"
+      assert(http("PUT", s"$base/logstream/rdocs")._1 == 200)
+      val events = (1 to 12).map(id =>
+        s"""{"did":$id,"body":"token$id ${if (id % 2 == 0) "even" else "odd"} common"}""")
+      assert(http("POST", s"$base/ingest", Map("X-P-Stream" -> "rdocs"),
+        Some(events.mkString("[", ",", "]")))._1 == 200)
+      val end = java.time.Instant.now().plusSeconds(60).toString
+      val fields = s""""datasetName":"rdocs","textField":"body","idField":"did""""
+      assert(http("POST", s"$base/text/index", body = Some(
+        s"""{$fields,"startTime":"10m","endTime":"$end"}"""))._1 == 200)
+      def search(extra: String): (Int, String) =
+        http("POST", s"$base/text/search",
+          body = Some(s"""{$fields,"query":"even common","k":4$extra}"""))
+      val (s1, b1) = search("")
+      assert(s1 == 200, b1)
+      val ((s2, b2), jobs) = jobsDuring(search(""), anyThread = true)
+      assert(s2 == 200 && b2 == b1, b2)
+      assert(jobs == 0, s"a resident search ran $jobs Spark jobs")
+      val (s3, b3) = search(""","after":null""")
+      assert(s3 == 200 && b3 == b1, b3)
+      for (bad <- Seq("""{"score_micro":1}""", """{"doc_id":1}""",
+                      """{"score_micro":1.5,"doc_id":1}""",
+                      """{"score_micro":"1","doc_id":1}""", "7")) {
+        val (st, bt) = search(s""","after":$bad""")
+        assert(st == 400 && bt.contains("after"), s"$bad: $st $bt")
+      }
+    } finally srv.stop()
+  }
+
   test("BM25 over the wire: ad-hoc and persisted search, filtered " +
       "search, keyset pagination, delete/compact, and RRF hybrid with " +
       "the vector index — maintenance write-privileged") {

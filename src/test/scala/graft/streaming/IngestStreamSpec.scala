@@ -56,6 +56,18 @@ class IngestStreamSpec extends SparkSuite {
     assert(kept.timePartitionLimitDays.contains(45))
   }
 
+  test("processBatch skips a record that is not JSON, in both passes") {
+    val root = tmp()
+    val cfg = StreamConfig("badjson")
+    LiveTail.clear("badjson")
+    val n = IngestStream.processBatch(
+      Seq("""{"x":"kept"}""", "not json").toDS(), cfg, new SchemaRegistry,
+      root)
+    assert(n == Right(1L))
+    val back = spark.read.parquet(s"$root/badjson")
+    assert(back.select("x").collect().map(_.getString(0)).toSeq == Seq("kept"))
+  }
+
   test("processBatch: distributed infer + write, minute partitioned") {
     val root = tmp()
     val registry = new SchemaRegistry

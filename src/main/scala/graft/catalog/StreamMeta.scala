@@ -6,6 +6,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.engine.SmallFiles
 import graft.ingest.IngestPipeline.StreamConfig
 
 /** Per-stream persisted metadata — the engine's `.stream.json` (reference
@@ -111,11 +112,10 @@ object StreamMeta {
       o.put("time_partition_limit_days", _))
     if (meta.staticSchemaFlag) o.put("static_schema_flag", true)
     meta.schema.foreach(s => o.put("schema", s.json))
-    val p = metaPath(root, meta.stream)
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsString(o))
-    ()
+    // replaced atomically: every `/query` reads this file while the
+    // ingest job rewrites it per micro-batch
+    SmallFiles.publishLocal(metaPath(root, meta.stream),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o))
   }
 
   /** The queryable union schema: the persisted merged ingest schema plus the

@@ -9,6 +9,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.SmallFiles
 import graft.query.{Alerts, AlertTargets, QueryService}
 
 /** Persisted alert + notification-target definitions behind the HTTP
@@ -120,12 +121,9 @@ final class AlertStore(root: String) extends AutoCloseable {
   }
 
   private def write(tenant: String, kind: String, id: String,
-                    node: ObjectNode): Unit = {
-    val f = file(tenant, kind, id)
-    Files.createDirectories(f.getParent)
-    Files.write(f, mapper.writeValueAsBytes(node))
-    ()
-  }
+                    node: ObjectNode): Unit =
+    SmallFiles.publishLocal(file(tenant, kind, id),
+      mapper.writeValueAsString(node))
 
   // ---------------------------------------------------------------- targets
 

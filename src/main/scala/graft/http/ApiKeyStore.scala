@@ -10,6 +10,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
+import graft.engine.SmallFiles
 import graft.query.Rbac
 
 /** Dynamic API keys (reference `src/handlers/http/apikeys.rs`): each key
@@ -52,7 +53,6 @@ final class ApiKeyStore(root: String) {
     }
 
   private def save(m: Map[String, Key]): Unit = {
-    Files.createDirectories(file.getParent)
     val o = mapper.createObjectNode()
     m.foreach { case (id, k) =>
       val e = o.putObject(id)
@@ -61,8 +61,7 @@ final class ApiKeyStore(root: String) {
         .put("createdAt", k.createdAt).put("modifiedAt", k.modifiedAt)
       val arr = e.putArray("roles"); k.roles.foreach(arr.add)
     }
-    Files.writeString(file, mapper.writeValueAsString(o))
-    ()
+    SmallFiles.publishLocal(file, mapper.writeValueAsString(o))
   }
 
   /** Time-sortable unique id (the reference uses a ULID). */

@@ -3,11 +3,13 @@ package graft.http
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest => JRequest, HttpResponse => JResponse}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+
+import graft.engine.SmallFiles
 
 /** Distributed-mode plumbing for the HTTP shell — the Spark-side analog of
   * the reference's ingestor/querier split (`src/handlers/http/cluster/
@@ -57,21 +59,11 @@ object Cluster {
     private val nodesDir = Paths.get(root, "_cluster", "nodes")
     private val streamsDir = Paths.get(root, "_cluster", "streams")
 
-    private def writeAtomic(dir: Path, name: String, json: String): Unit = {
-      Files.createDirectories(dir)
-      val tmp = Files.createTempFile(dir, s".$name", ".tmp")
-      Files.write(tmp, json.getBytes(UTF_8))
-      Files.move(tmp, dir.resolve(name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    }
-
     def register(meta: NodeMetadata): Unit = {
       val o = mapper.createObjectNode()
         .put("node_id", meta.nodeId).put("url", meta.url)
         .put("role", meta.role).put("started_at_ms", meta.startedAtMs)
-      writeAtomic(nodesDir, s"${meta.nodeId}.json",
+      SmallFiles.publishLocal(nodesDir.resolve(s"${meta.nodeId}.json"),
         mapper.writeValueAsString(o))
     }
 
@@ -98,7 +90,7 @@ object Cluster {
     def putStream(key: String): Unit = {
       // stream keys may contain '/' (tenant scoping) — encode for a filename
       val name = java.net.URLEncoder.encode(key, UTF_8) + ".json"
-      writeAtomic(streamsDir, name,
+      SmallFiles.publishLocal(streamsDir.resolve(name),
         mapper.writeValueAsString(mapper.createObjectNode().put("key", key)))
     }
 

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.functions.{col, count, floor, lit, unix_millis}
 
+import graft.engine.SmallFiles
 import graft.ingest.IngestPipeline
 import graft.query.{Alerts, Counts, QueryService, Rbac, ResponseWriter, TimeRange}
 
@@ -238,12 +239,7 @@ private[http] trait LogstreamRoutes { self: GraftHttpServer =>
           case ("GET", Some(Seq(name, "retention"))) =>
             if (!canQuery(name)) { err(ex, 403, "forbidden"); return }
             val p = retentionPath(name)
-            val fs = hadoopFs(p)
-            if (!fs.exists(p)) { respond(ex, 200, "[]"); return }
-            val in = fs.open(p)
-            val json =
-              try new String(in.readAllBytes(), UTF_8) finally in.close()
-            respond(ex, 200, json)
+            respond(ex, 200, SmallFiles.read(hadoopFs(p), p).getOrElse("[]"))
           case ("PUT", Some(Seq(name, "retention"))) =>
             if (!isAdminUser) {
               err(ex, 403, "retention config requires admin privileges")
@@ -257,10 +253,8 @@ private[http] trait LogstreamRoutes { self: GraftHttpServer =>
               case Left(msg) => err(ex, 400, msg)
               case Right(tasks) =>
                 val p = retentionPath(name)
-                val out = hadoopFs(p).create(p, true)
-                try out.write(
-                  graft.catalog.Retention.render(tasks).getBytes(UTF_8))
-                finally out.close()
+                SmallFiles.publish(hadoopFs(p), p,
+                  graft.catalog.Retention.render(tasks))
                 respond(ex, 200, """{"status":"ok"}""")
             }
           case ("POST", Some(Seq(name, "retention/cleanup"))) =>
@@ -530,23 +524,17 @@ private[http] trait LogstreamRoutes { self: GraftHttpServer =>
                        tenant: String = DefaultTenant): Seq[String] = {
     val dir = s"$root/${tenantKey(tenant, name)}"
     val p = new org.apache.hadoop.fs.Path(dir, "_retention.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val json =
-        try new String(in.readAllBytes(), UTF_8) finally in.close()
-      graft.catalog.Retention.parse(json) match {
-        case Left(_) => Seq.empty
-        case Right(tasks) => tasks.flatMap(t =>
-          // metadata before data (the reference's ordering): enforce drops
-          // the stream's catalog rows first, then the partitions — a crash
-          // between the two leaves only unreferenced files, never a
-          // catalog pointing at deleted data
-          graft.catalog.Retention.enforce(spark, dir, t.days,
-            java.time.LocalDate.now(),
-            catalogPath = Some(statsPath(tenantKey(tenant, name)))))
-      }
+    SmallFiles.read(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+      .map(graft.catalog.Retention.parse) match {
+      case Some(Right(tasks)) => tasks.flatMap(t =>
+        // metadata before data (the reference's ordering): enforce drops
+        // the stream's catalog rows first, then the partitions — a crash
+        // between the two leaves only unreferenced files, never a
+        // catalog pointing at deleted data
+        graft.catalog.Retention.enforce(spark, dir, t.days,
+          java.time.LocalDate.now(),
+          catalogPath = Some(statsPath(tenantKey(tenant, name)))))
+      case _ => Seq.empty
     }
   }
 }

@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
+import graft.engine.SmallFiles
+
 /** Outbound-HTTP policy for alert targets — the reference's SSRF guard
   * (`src/alerts/outbound_http_policy.rs`): an admin-set, per-tenant config
   * of allowed/denied domains and CIDRs that alert-target endpoints are
@@ -218,9 +220,6 @@ object OutboundPolicy {
   }
 
   def store(root: String, tenant: String, c: Config): Unit = {
-    val p = policyPath(root, tenant)
-    Files.createDirectories(p.getParent)
-    Files.writeString(p, toJson(c))
-    ()
+    SmallFiles.publishLocal(policyPath(root, tenant), toJson(c))
   }
 }

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.functions.{col, count, floor, lit, unix_millis}
 
+import graft.engine.SmallFiles
 import graft.ingest.IngestPipeline
 import graft.query.{Alerts, Counts, QueryService, Rbac, ResponseWriter, TimeRange}
 
@@ -613,11 +614,7 @@ private[http] trait PrismRoutes { self: GraftHttpServer =>
           catch { case _: Exception => 0L }))
     } else { stats.put("size", 0L); stats.put("count", 0L) }
     val rp = new org.apache.hadoop.fs.Path(dir, "_retention.json")
-    val retention =
-      if (fs.exists(rp)) {
-        val in = fs.open(rp)
-        try new String(in.readAllBytes(), UTF_8) finally in.close()
-      } else "[]"
+    val retention = SmallFiles.read(fs, rp).getOrElse("[]")
     o.set[com.fasterxml.jackson.databind.node.ObjectNode](
       "retention", mapper.readTree(retention))
     o

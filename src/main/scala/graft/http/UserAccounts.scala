@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import graft.engine.SmallFiles
 import graft.query.Rbac
 
 /** Dynamic native-user accounts (reference `src/handlers/http/rbac.rs` +
@@ -42,13 +43,11 @@ final class UserAccounts(root: String) {
     }
 
   private def save(m: Map[String, Account]): Unit = {
-    Files.createDirectories(file.getParent)
     val o = mapper.createObjectNode()
     m.foreach { case (u, a) =>
       o.putObject(u).put("tenant", a.tenant).put("hash", a.hash)
     }
-    Files.writeString(file, mapper.writeValueAsString(o))
-    ()
+    SmallFiles.publishLocal(file, mapper.writeValueAsString(o))
   }
 
   // ----------------------------------------------------------- passwords

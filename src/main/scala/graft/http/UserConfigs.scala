@@ -9,6 +9,8 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import graft.engine.SmallFiles
+
 /** Per-user persisted console objects — saved filters and dashboards
   * (reference `src/users/filters.rs:38-116`, `src/users/dashboards.rs:59-181`).
   *
@@ -46,9 +48,8 @@ final class UserConfigs(root: String) {
              body: ObjectNode): JsonNode = {
     val id = java.util.UUID.randomUUID().toString
     val stamped = stamp(kind, body, user, id, created = true)
-    val f = file(tenant, user, kind, id)
-    Files.createDirectories(f.getParent)
-    Files.write(f, mapper.writeValueAsBytes(stamped))
+    SmallFiles.publishLocal(file(tenant, user, kind, id),
+      mapper.writeValueAsString(stamped))
     stamped
   }
 
@@ -106,8 +107,8 @@ final class UserConfigs(root: String) {
       val stamped = stamp(kind, body, user, id, created = false)
       Option(existing.get("created"))
         .foreach(c => stamped.set[ObjectNode]("created", c))
-      Files.write(file(tenant, user, kind, id),
-        mapper.writeValueAsBytes(stamped))
+      SmallFiles.publishLocal(file(tenant, user, kind, id),
+        mapper.writeValueAsString(stamped))
       stamped
     }
 

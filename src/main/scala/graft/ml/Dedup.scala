@@ -267,19 +267,10 @@ object Dedup {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/shingles")
     // a REBUILD must become visible and forget deletion state: clear
-    // tombstones first (crash in between un-hides rows of the superseded
-    // generation only), then the generation pointer and stale gen dirs —
-    // the same reset contract as Similarity.resetIndexGenerations
+    // tombstones first, then the generation pointer and stale gen dirs
     val spark = refDocs.sparkSession
     IndexTombstones.reset(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path, ShinglePointer), false)
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { st =>
-        if (st.getPath.getName.startsWith("shingles.gen"))
-          fs.delete(st.getPath, true)
-      }
+    Generations.Shingles.reset(IndexTombstones.fsOf(spark, path), path)
   }
 
   /** Delete documents from a persisted [[saveShingleIndex]] — the
@@ -319,28 +310,13 @@ object Dedup {
       .parquet(activeShingleDir(docs.sparkSession, path))
   }
 
-  /** Name of the pointer file that selects the ACTIVE shingle data
-    * directory inside an index root. Versioned-dir + pointer-swap is the
-    * object-store-correct publication protocol: S3-style stores have no
-    * atomic directory rename (a "rename" is a copy), but a single small
-    * file can be replaced atomically — readers resolve the pointer once
-    * and then scan an immutable directory.
-    */
-  private val ShinglePointer = "shingles.current"
-
   /** Resolve the active shingle data directory of an index root: the
-    * generation the pointer names, or the original `shingles` dir when no
-    * compaction has happened yet.
+    * generation `shingles.current` names, or the original `shingles` dir
+    * when no compaction has happened yet ([[Generations]]).
     */
   def activeShingleDir(
-      spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val ptr = new org.apache.hadoop.fs.Path(s"$path/$ShinglePointer")
-    val fs = ptr.getFileSystem(spark.sessionState.newHadoopConf())
-    // retrying read: a probe racing a compaction's pointer flip can open
-    // between ChecksumFs's data/.crc rename halves (IndexTombstones doc)
-    IndexTombstones.readSmallFile(fs, ptr)
-      .map(name => s"$path/$name").getOrElse(s"$path/shingles")
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): String =
+    Generations.Shingles.active(IndexTombstones.fsOf(spark, path), path)
 
   /** Compact a [[saveShingleIndex]] layout: rewrite every bucket partition
     * to one file and (optionally) re-apply the corpus-wide
@@ -351,7 +327,7 @@ object Dedup {
     * bound.
     *
     * Publication = versioned directory + atomic pointer swap (NOT a
-    * directory rename — see [[ShinglePointer]]): the new generation lands
+    * directory rename — see [[Generations]]): the new generation lands
     * in `shingles.gen<k+1>`, then a one-file pointer write flips readers
     * over. A concurrent probe resolves either the old or the new
     * generation, never a half-written one; the superseded directory is
@@ -363,14 +339,10 @@ object Dedup {
                           path: String, numBuckets: Int = 64,
                           maxShingleFreq: Option[Long] = None,
                           keepPrevious: Boolean = false): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val curDir = activeShingleDir(spark, path)
-    val curName = curDir.substring(curDir.lastIndexOf('/') + 1)
-    val gen =
-      if (curName == "shingles") 0
-      else curName.stripPrefix("shingles.gen").toInt
-    val nextName = s"shingles.gen${gen + 1}"
+    val fs = IndexTombstones.fsOf(spark, path)
+    val curName = Generations.Shingles.activeName(fs, path)
+    val curDir = s"$path/${curName.get}"
+    val nextName = Generations.Shingles.next(curName)
     // purge tombstoned docs first ([[deleteFromShingleIndex]]) so the
     // stop-shingle frequency guard below counts only LIVE rows; survivors
     // keep their seq stamp and the epoch file is untouched — same
@@ -389,19 +361,8 @@ object Dedup {
       .repartition(numBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/$nextName")
-    // atomic pointer flip: write aside, rename over (single-file rename is
-    // atomic on posix/HDFS; on S3 use a conditional put of the same key)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/$ShinglePointer.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(nextName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val ptr = new org.apache.hadoop.fs.Path(s"$path/$ShinglePointer")
-    // FileContext rename(OVERWRITE) replaces atomically on posix/HDFS —
-    // no pointer-absent window like a delete-then-rename fallback has
-    org.apache.hadoop.fs.FileContext.getFileContext(ptr.toUri, fs.getConf)
-      .rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    Generations.Shingles.flip(fs, path, nextName, curName, keepPrevious)
     IndexTombstones.clearLog(spark, path)
-    if (!keepPrevious) { fs.delete(new org.apache.hadoop.fs.Path(curDir), true); () }
   }
 
   /** [[jaccardAgainstReference]] against a persisted [[saveShingleIndex]]:

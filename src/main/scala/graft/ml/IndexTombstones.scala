@@ -3,8 +3,11 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.engine.SmallFiles
+
 /** Shared tombstone-deletion machinery for the persisted index families
-  * (the ANN indexes in [[Similarity]] and the shingle index in [[Dedup]]).
+  * (the ANN indexes in [[Similarity]], the shingle index in [[Dedup]] and
+  * the text index in [[TextIndex]]).
   *
   * The contract (documented in full on [[Similarity.deleteFromAnnIndex]]):
   *
@@ -28,59 +31,15 @@ private[graft] object IndexTombstones {
   val DeleteDir = "deletes"
   val EpochFile = "_del_epoch"
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, path: String) =
+  private[graft] def fsOf(spark: org.apache.spark.sql.SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
 
   def readEpoch(spark: org.apache.spark.sql.SparkSession,
                 path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path, EpochFile)
-    readSmallFile(fsOf(spark, path), p)
+    SmallFiles.read(fsOf(spark, path), p)
       .flatMap(_.toLongOption).getOrElse(0L)
-  }
-
-  /** Read a small pointer/marker file, retrying TRANSIENT IO races: all
-    * pointer/epoch flips in the index lifecycle are create-aside +
-    * atomic rename, but Hadoop's local ChecksumFs renames the data file
-    * and its `.crc` sidecar in two steps — a reader that opens in
-    * between sees a ChecksumException for a few microseconds (caught
-    * live by DedupIndexSpec's concurrent compaction test). Bounded
-    * backoff retry; `None` for an absent file; a PERSISTENT IO error
-    * rethrows rather than silently defaulting (a wrong default here
-    * reads a deleted generation or mis-stamps an append's epoch).
-    */
-  def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                    p: org.apache.hadoop.fs.Path,
-                    retries: Int = 5): Option[String] = {
-    var attempt = 0
-    while (true) {
-      if (!fs.exists(p)) return None
-      try {
-        val in = fs.open(p)
-        return Some(try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        finally in.close())
-      } catch {
-        case e: java.io.IOException =>
-          attempt += 1
-          if (attempt > retries) throw e
-          Thread.sleep(5L * attempt)
-      }
-    }
-    None // unreachable
-  }
-
-  private def writeEpoch(spark: org.apache.spark.sql.SparkSession,
-                         path: String, epoch: Long): Unit = {
-    val fs = fsOf(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/$EpochFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(epoch.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(s"$path/$EpochFile")
-    org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, fs.getConf)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Log one delete event: bump the epoch FIRST (a crash in between
@@ -92,7 +51,8 @@ private[graft] object IndexTombstones {
                  ids: DataFrame, srcIdCol: String,
                  listIdCol: String): Unit = {
     val epoch = readEpoch(spark, path) + 1
-    writeEpoch(spark, path, epoch)
+    SmallFiles.publish(fsOf(spark, path),
+      new org.apache.hadoop.fs.Path(path, EpochFile), epoch.toString)
     ids.select(col(srcIdCol).cast("long").as(listIdCol),
         lit(epoch).as("del_seq"))
       .write.mode("append").parquet(s"$path/$DeleteDir")
@@ -136,8 +96,10 @@ private[graft] object IndexTombstones {
   }
 
   /** Full reset (rebuild path): tombstones AND epoch. Callers order this
-    * before their generation-pointer reset — see the crash-window note
-    * on `Similarity.resetIndexGenerations`.
+    * BEFORE their [[Generations.reset]]: a crash in between un-hides rows
+    * of the superseded generation only (about to vanish anyway), while
+    * the reverse order would leave stale tombstones hiding seq=0 rows of
+    * the fresh rebuild.
     */
   def reset(spark: org.apache.spark.sql.SparkSession,
             path: String): Unit = {

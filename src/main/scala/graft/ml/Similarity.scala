@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.SmallFiles
+import graft.ml.IndexTombstones.fsOf
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Two paths:
@@ -750,32 +753,21 @@ object Similarity {
     */
   private def indexAttrCols(spark: org.apache.spark.sql.SparkSession,
                             path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(path, AttrsFile)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-      if (s.isEmpty) Nil else s.split(",").toSeq
-    } else {
-      val core = Set("v_id", "v_vec", "centroid_id", "bucket", "seq", "codes")
-      spark.read.parquet(activeIndexDir(spark, path))
-        .columns.toSeq.filterNot(core.contains)
+    SmallFiles.read(fsOf(spark, path),
+        new org.apache.hadoop.fs.Path(path, AttrsFile)) match {
+      case Some(s) => if (s.isEmpty) Nil else s.split(",").toSeq
+      case None =>
+        val core = Set("v_id", "v_vec", "centroid_id", "bucket", "seq", "codes")
+        spark.read.parquet(activeIndexDir(spark, path))
+          .columns.toSeq.filterNot(core.contains)
     }
   }
 
   private val AttrsFile = "_attrs"
 
   private def writeAttrsFile(spark: org.apache.spark.sql.SparkSession,
-                             path: String, attrCols: Seq[String]): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, AttrsFile), true)
-    try out.write(attrCols.mkString(",")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+                             path: String, attrCols: Seq[String]): Unit =
+    writeMarker(spark, path, AttrsFile, attrCols.mkString(","))
 
   private val SpillFile = "_spill"
 
@@ -784,13 +776,9 @@ object Similarity {
   // copy-pasted reader is how one of them misses a reset
   private def writeMarker(spark: org.apache.spark.sql.SparkSession,
                           path: String, name: String,
-                          value: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, name)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+                          value: String): Unit =
+    SmallFiles.publish(fsOf(spark, path),
+      new org.apache.hadoop.fs.Path(path, name), value)
 
   private def clearMarker(spark: org.apache.spark.sql.SparkSession,
                           path: String, name: String): Unit = {
@@ -800,18 +788,9 @@ object Similarity {
   }
 
   private def readIntMarker(spark: org.apache.spark.sql.SparkSession,
-                            path: String, name: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(path, name)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-      s.toIntOption.filter(_ >= 1)
-    }
-  }
+                            path: String, name: String): Option[Int] =
+    SmallFiles.read(fsOf(spark, path), new org.apache.hadoop.fs.Path(path, name))
+      .flatMap(_.toIntOption).filter(_ >= 1)
 
   /** Persist (spill > 1) or clear (spill == 1, rebuild semantics — like
     * the raw-vector sidecar) the index's multi-assignment factor.
@@ -1280,8 +1259,6 @@ object Similarity {
 
   // ------------------------------------- index generations & compaction
 
-  private val IndexPointer = "_index_gen"
-
   /** Raw-vector SIDECAR dir aligned with a generation's list dir:
     * `index` ↔ `raw`, `index.genN` ↔ `raw.genN` — one `_index_gen`
     * pointer flips both atomically. The sidecar is MERGE FUEL, not a
@@ -1291,14 +1268,10 @@ object Similarity {
     * rows), and [[mergeIvfPqIndexes]] reads it to re-encode under the
     * surviving codebook.
     */
-  private def rawDirOfGen(indexDirName: String): String =
-    if (indexDirName == "index") "raw"
-    else "raw.gen" + indexDirName.stripPrefix("index.gen")
-
   private def activeRawDir(spark: org.apache.spark.sql.SparkSession,
                            path: String): String = {
-    val idx = activeIndexDir(spark, path)
-    s"$path/${rawDirOfGen(idx.substring(idx.lastIndexOf('/') + 1))}"
+    val idx = Generations.AnnLists.activeName(fsOf(spark, path), path).get
+    s"$path/${Generations.AnnLists.sidecar(idx, "raw")}"
   }
 
   private def hasRawSidecar(spark: org.apache.spark.sql.SparkSession,
@@ -1309,21 +1282,11 @@ object Similarity {
 
   /** The active inverted-list directory of a persisted index: `_index_gen`
     * names it after a [[compactAnnIndex]] flip; absent (every
-    * freshly-built index) means the original `index`. Same
-    * generation-pointer contract as `Dedup.activeShingleDir`.
+    * freshly-built index) means the original `index` ([[Generations]]).
     */
   private[graft] def activeIndexDir(
-      spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val ptr = new org.apache.hadoop.fs.Path(path, IndexPointer)
-    // retrying read (IndexTombstones doc): a search racing a compaction's
-    // pointer flip must retry the transient window, and a PERSISTENT
-    // read failure must throw — the old silent fall-back to "index"
-    // would read a generation the compaction already deleted
-    IndexTombstones.readSmallFile(fs, ptr)
-      .map(name => s"$path/$name").getOrElse(s"$path/index")
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): String =
+    Generations.AnnLists.active(fsOf(spark, path), path)
 
   /** MERGE two raw-vector IVF indexes under A's coarse quantizer — the
     * shared-quantizer segment merge (FAISS's merge convention): A's
@@ -1506,14 +1469,11 @@ object Similarity {
     */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String, keepPrevious: Boolean = false): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val curDir = activeIndexDir(spark, path)
-    val curName = curDir.substring(curDir.lastIndexOf('/') + 1)
-    val gen =
-      if (curName == "index") 0
-      else curName.stripPrefix("index.gen").toInt
-    val nextName = s"index.gen${gen + 1}"
+    val fs = fsOf(spark, path)
+    val gens = Generations.AnnLists
+    val curName = gens.activeName(fs, path)
+    val curDir = s"$path/${curName.get}"
+    val nextName = gens.next(curName)
     val partDirs = fs.listStatus(new org.apache.hadoop.fs.Path(curDir))
       .map(_.getPath.getName).filter(_.contains("="))
     require(partDirs.nonEmpty, s"no partition dirs under $curDir")
@@ -1537,24 +1497,13 @@ object Similarity {
     // purge the raw sidecar in the SAME generation step: the tombstone
     // log clears below, and an unpurged sidecar would resurrect deleted
     // vectors at the next merge. The pointer flip publishes both dirs.
-    val curRaw = new org.apache.hadoop.fs.Path(s"$path/${rawDirOfGen(curName)}")
-    val hadRaw = fs.exists(curRaw)
-    if (hadRaw)
-      applyDeletes(spark, path, spark.read.parquet(curRaw.toString))
+    val curRaw = s"$path/${gens.sidecar(curName.get, "raw")}"
+    if (fs.exists(new org.apache.hadoop.fs.Path(curRaw)))
+      applyDeletes(spark, path, spark.read.parquet(curRaw))
         .write.mode("overwrite")
-        .parquet(s"$path/raw.gen${gen + 1}")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/$IndexPointer.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(nextName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val ptr = new org.apache.hadoop.fs.Path(s"$path/$IndexPointer")
-    org.apache.hadoop.fs.FileContext.getFileContext(ptr.toUri, fs.getConf)
-      .rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        .parquet(s"$path/${gens.sidecar(nextName, "raw")}")
+    gens.flip(fs, path, nextName, curName, keepPrevious)
     IndexTombstones.clearLog(spark, path)
-    if (!keepPrevious) {
-      fs.delete(new org.apache.hadoop.fs.Path(curDir), true)
-      if (hadRaw) { fs.delete(curRaw, true); () }
-    }
   }
 
   /** A rebuild ([[saveIvfIndex]]/[[saveIvfPqIndex]]) always writes the
@@ -1566,20 +1515,8 @@ object Similarity {
     */
   private def resetIndexGenerations(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // tombstones BEFORE the pointer: a crash in between un-hides rows of
-    // the superseded generation (about to vanish anyway) — the reverse
-    // order would leave stale tombstones hiding seq=0 rows of the fresh
-    // rebuild until someone noticed
-    IndexTombstones.reset(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(path, IndexPointer), false)
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { st =>
-        if (st.getPath.getName.startsWith("index.gen") ||
-            st.getPath.getName.startsWith("raw.gen"))
-          fs.delete(st.getPath, true)
-      }
+    IndexTombstones.reset(spark, path) // tombstones BEFORE the pointer
+    Generations.AnnLists.reset(fsOf(spark, path), path)
   }
 
   // ------------------------------------------------- index deletions

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.SmallFiles
+import graft.ml.IndexTombstones.fsOf
+
 /** Persisted INVERTED LEXICAL INDEX with BM25 search — the lexical twin of
   * the persisted ANN indexes in [[Similarity]] and the shingle index in
   * [[Dedup]], sharing their full lifecycle contract:
@@ -77,7 +80,6 @@ import org.apache.spark.sql.functions._
   */
 object TextIndex {
 
-  private val Pointer = "data.current"
   private val StatsFile = "_text_stats"
   private val AttrsFile = "_text_attrs"
 
@@ -107,10 +109,6 @@ object TextIndex {
 
   private def docBucket(docId: Column, numBuckets: Int): Column =
     pmod(docId.cast("long"), lit(numBuckets.toLong)).cast("int")
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Read schemas of the layouts this object itself writes, supplied
     * explicitly on every search-path read: schema inference costs a
@@ -181,36 +179,6 @@ object TextIndex {
   private def termsFrame(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(TermsSchema).parquet(s"$dir/terms")
 
-  /** Atomic small-file publish: write aside, rename over. Hadoop renames
-    * over an existing file by deleting it first on a local filesystem (a
-    * search in between found no generation pointer and read the
-    * compacted-away `data` dir, or no stats file), so a local file moves
-    * with one rename(2) and carries no `.crc` sidecar (a stale one would
-    * fail the new content's checksum); elsewhere FileContext's OVERWRITE
-    * rename (atomic on HDFS; conditional put on S3).
-    */
-  private def atomicWrite(spark: SparkSession, path: String,
-                          name: String, content: String): Unit = {
-    val fs = fsOf(spark, path)
-    val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val dst = fs.makeQualified(new org.apache.hadoop.fs.Path(s"$path/$name"))
-    if (fs.getUri.getScheme == "file") {
-      val local = java.nio.file.Paths.get(dst.toUri)
-      val tmp = local.resolveSibling(s"$name.tmp")
-      java.nio.file.Files.write(tmp, bytes)
-      java.nio.file.Files.deleteIfExists(local.resolveSibling(s".$name.crc"))
-      java.nio.file.Files.move(tmp, local,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      val tmp = new org.apache.hadoop.fs.Path(s"$path/$name.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(dst.toUri, fs.getConf)
-        .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-    ()
-  }
-
   /** Postings layout a tokened `_text_stats` line names: columns
     * (term, doc_id, dl, tf, positions, seq) plus the build-time `attrs`.
     */
@@ -226,7 +194,7 @@ object TextIndex {
 
   /** The stats line of an index root, None when the file is absent. */
   private def statsOpt(spark: SparkSession, path: String): Option[Stats] =
-    IndexTombstones.readSmallFile(fsOf(spark, path),
+    SmallFiles.read(fsOf(spark, path),
         new org.apache.hadoop.fs.Path(path, StatsFile)).map { line =>
       line.split("\\s+") match {
         case Array(n, s, b) => Stats(n.toLong, s.toLong, b.toInt, true, None)
@@ -282,7 +250,8 @@ object TextIndex {
   private def writeStats(spark: SparkSession, path: String,
                          nDocs: Long, sumDl: Long, numBuckets: Int,
                          maybeDup: Boolean, attrs: Option[Seq[String]]): Unit =
-    atomicWrite(spark, path, StatsFile,
+    SmallFiles.publish(fsOf(spark, path),
+      new org.apache.hadoop.fs.Path(path, StatsFile),
       s"$nDocs $sumDl $numBuckets ${if (maybeDup) 1 else 0}" +
         attrs.fold("")(a => s" $LayoutVersion ${java.util.UUID.randomUUID()} " +
           a.mkString(",")))
@@ -298,21 +267,16 @@ object TextIndex {
   def readAttrs(spark: SparkSession, path: String): Seq[String] =
     statsOpt(spark, path).flatMap(_.layout) match {
       case Some(l) => l.attrs
-      case None => IndexTombstones.readSmallFile(fsOf(spark, path),
+      case None => SmallFiles.read(fsOf(spark, path),
           new org.apache.hadoop.fs.Path(path, AttrsFile))
         .map(_.split(",").filter(_.nonEmpty).toSeq).getOrElse(Nil)
     }
 
   /** Resolve the ACTIVE data directory (generation the pointer names, or
-    * the original `data` dir before any compaction). Retrying read: a
-    * search racing a compaction's pointer flip can open between
-    * ChecksumFs's data/.crc rename halves (see [[IndexTombstones.readSmallFile]]).
+    * the original `data` dir before any compaction).
     */
-  def activeDataDir(spark: SparkSession, path: String): String = {
-    val ptr = new org.apache.hadoop.fs.Path(s"$path/$Pointer")
-    IndexTombstones.readSmallFile(fsOf(spark, path), ptr)
-      .map(name => s"$path/$name").getOrElse(s"$path/data")
-  }
+  def activeDataDir(spark: SparkSession, path: String): String =
+    Generations.TextData.active(fsOf(spark, path), path)
 
   /** (doc_id, dl, term, tf, positions) rows of a batch — dl computed
     * EXACTLY as [[TextRank.bm25Scores]] does (`size(tokens(text))`), the
@@ -396,14 +360,7 @@ object TextIndex {
     val st = doclensOf(docs, idCol, textCol)
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
     IndexTombstones.reset(spark, path)
-    val fs = fsOf(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(path, Pointer), false)
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { g =>
-        if (g.getPath.getName.startsWith("data.gen"))
-          fs.delete(g.getPath, true)
-      }
+    Generations.TextData.reset(fsOf(spark, path), path)
     // fresh build: postings are one groupBy(term, doc) pass — unique
     writeStats(spark, path, st.getLong(0), st.getLong(1), numBuckets,
       maybeDup = false, Some(attrCols))
@@ -439,8 +396,7 @@ object TextIndex {
     val st = spark.read.parquet(s"$outPath/data/doclens")
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
     IndexTombstones.reset(spark, outPath)
-    val fs = fsOf(spark, outPath)
-    fs.delete(new org.apache.hadoop.fs.Path(outPath, Pointer), false)
+    Generations.TextData.reset(fsOf(spark, outPath), outPath)
     // doc-disjoint halves (caller contract) can't create cross-side
     // duplicates: the merge is clean iff both inputs are
     writeStats(spark, outPath, st.getLong(0), st.getLong(1), numBuckets,
@@ -534,10 +490,9 @@ object TextIndex {
     val (_, _, nbOld, wasDup) = readStatsFull(spark, path)
     val nb = numBuckets.getOrElse(nbOld)
     val fs = fsOf(spark, path)
-    val curDir = activeDataDir(spark, path)
-    val curName = curDir.substring(curDir.lastIndexOf('/') + 1)
-    val gen = if (curName == "data") 0 else curName.stripPrefix("data.gen").toInt
-    val nextName = s"data.gen${gen + 1}"
+    val curName = Generations.TextData.activeName(fs, path)
+    val curDir = s"$path/${curName.get}"
+    val nextName = Generations.TextData.next(curName)
 
     val livePosts0 = IndexTombstones.applyDeletes(spark, path,
       spark.read.parquet(s"$curDir/postings"), "doc_id")
@@ -572,9 +527,8 @@ object TextIndex {
     // exact stats from what actually landed (read-back, not plan re-run)
     val st = spark.read.parquet(s"$path/$nextName/doclens")
       .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    atomicWrite(spark, path, Pointer, nextName)
+    Generations.TextData.flip(fs, path, nextName, curName, keepPrevious)
     IndexTombstones.clearLog(spark, path)
-    if (!keepPrevious) { fs.delete(new org.apache.hadoop.fs.Path(curDir), true); () }
     writeStats(spark, path, st.getLong(0), st.getLong(1), nb,
       maybeDup = false, Some(attrCols))
   }
@@ -1385,7 +1339,6 @@ object TextIndex {
   // Fuzzy term matching: SymSpell-style deletion-neighborhood dictionary
   // ------------------------------------------------------------------
 
-  private val DictPointer = "dict.current"
   private val DictStats = "_dict_stats"
 
   /** Deletion variants of a term at depth 1: the term itself plus every
@@ -1445,10 +1398,8 @@ object TextIndex {
                                   vocab: DataFrame,
                                   numBuckets: Int): Unit = {
     val fs = fsOf(spark, dictPath)
-    val cur = IndexTombstones.readSmallFile(fs,
-      new org.apache.hadoop.fs.Path(s"$dictPath/$DictPointer"))
-    val gen = cur.map(_.stripPrefix("dict.gen").toInt).getOrElse(-1)
-    val nextName = s"dict.gen${gen + 1}"
+    val cur = Generations.TermDict.activeName(fs, dictPath)
+    val nextName = Generations.TermDict.next(cur)
     vocab.select(explode(deletionVariants(col("term"))).as("variant"),
         col("term"), col("df"))
       .withColumn("bucket", termBucket(col("variant"), numBuckets))
@@ -1465,11 +1416,10 @@ object TextIndex {
       .write.mode("overwrite").partitionBy("p1")
       .parquet(s"$dictPath/$nextName/terms")
     val nTerms = spark.read.parquet(s"$dictPath/$nextName/terms").count()
-    atomicWrite(spark, dictPath, DictStats, s"$nTerms $numBuckets")
-    atomicWrite(spark, dictPath, DictPointer, nextName)
-    cur.foreach { old =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dictPath/$old"), true); ()
-    }
+    SmallFiles.publish(fs, new org.apache.hadoop.fs.Path(dictPath, DictStats),
+      s"$nTerms $numBuckets")
+    Generations.TermDict.flip(fs, dictPath, nextName, cur,
+      keepPrevious = false)
   }
 
   /** INCREMENTAL dictionary maintenance for an APPEND batch: fold the
@@ -1506,19 +1456,15 @@ object TextIndex {
 
   /** Whether a published term dictionary exists at `dictPath`. */
   def termDictExists(spark: SparkSession, dictPath: String): Boolean =
-    fsOf(spark, dictPath).exists(
-      new org.apache.hadoop.fs.Path(s"$dictPath/$DictPointer"))
+    Generations.TermDict.activeName(fsOf(spark, dictPath), dictPath)
+      .isDefined
 
-  private def activeDictDir(spark: SparkSession, dictPath: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dictPath/$DictPointer")
-    IndexTombstones.readSmallFile(fsOf(spark, dictPath), p)
-      .map(n => s"$dictPath/$n")
-      .getOrElse(sys.error(s"no $DictPointer at $dictPath"))
-  }
+  private def activeDictDir(spark: SparkSession, dictPath: String): String =
+    Generations.TermDict.active(fsOf(spark, dictPath), dictPath)
 
   /** (nTerms, numBuckets) of a term dictionary. */
   def readDictStats(spark: SparkSession, dictPath: String): (Long, Int) = {
-    val s = IndexTombstones.readSmallFile(fsOf(spark, dictPath),
+    val s = SmallFiles.read(fsOf(spark, dictPath),
       new org.apache.hadoop.fs.Path(s"$dictPath/$DictStats"))
       .getOrElse(sys.error(s"no $DictStats at $dictPath — not a term dict"))
       .trim.split(" ")

@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.engine.SmallFiles
+import graft.ml.IndexTombstones.fsOf
+
 /** Streaming counterparts of the batch dedup/join operators — the pieces a
   * continuously-ingesting pipeline needs to apply the same semantics
   * in-flight instead of in nightly batches.
@@ -112,19 +115,8 @@ object StreamOps {
       numBuckets: Int): Unit = {
       import graft.ml.Dedup
       val spark = batch.sparkSession
-      val fs = new org.apache.hadoop.fs.Path(indexPath)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val markerPath =
-        new org.apache.hadoop.fs.Path(indexPath, "_last_batch")
-      val committed: Long =
-        if (!fs.exists(markerPath)) -1L
-        else try {
-          val in = fs.open(markerPath)
-          try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-          finally in.close()
-        } catch { case _: Exception => -1L }
-      if (batchId <= committed) return // replayed batch: already applied
+      // replayed batch: already applied
+      if (batchId <= committedBatch(spark, indexPath)) return
       val b = batch.persist() // probed, self-joined and appended — one scan
       try {
         val activeDir = new org.apache.hadoop.fs.Path(
@@ -168,11 +160,7 @@ object StreamOps {
         // marker LAST: a crash anywhere above leaves it unwritten and the
         // replay re-runs the whole batch (at-least-once within the batch,
         // exactly-once across completed batches)
-        val out = fs.create(markerPath, true)
-        try out.write(batchId.toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        ()
+        commitBatch(spark, indexPath, batchId)
       } finally { b.unpersist(); () }
   }
 
@@ -288,9 +276,9 @@ object StreamOps {
       // marker) still routes to append.
       val builtByPath =
         new org.apache.hadoop.fs.Path(root, "_built_by_batch")
-      val builtBy = readSmallFile(fs, builtByPath).flatMap(_.toLongOption)
+      val builtBy = SmallFiles.read(fs, builtByPath).flatMap(_.toLongOption)
       if (!built || builtBy.contains(batchId)) {
-        writeSmallFile(fs, builtByPath, batchId.toString)
+        SmallFiles.publish(fs, builtByPath, batchId.toString)
         Similarity.saveIvfPqIndex(adds, idCol, vecCol, numCentroids,
           indexPath, numSubspaces, pqCentroids, dim, residual,
           refineIters, coarseIters)
@@ -356,9 +344,9 @@ object StreamOps {
       val built = fs.exists(new org.apache.hadoop.fs.Path(indexPath, "meta"))
       val builtByPath =
         new org.apache.hadoop.fs.Path(root, "_built_by_batch")
-      val builtBy = readSmallFile(fs, builtByPath).flatMap(_.toLongOption)
+      val builtBy = SmallFiles.read(fs, builtByPath).flatMap(_.toLongOption)
       if (!built || builtBy.contains(batchId)) {
-        writeSmallFile(fs, builtByPath, batchId.toString)
+        SmallFiles.publish(fs, builtByPath, batchId.toString)
         Similarity.saveLshIndex(adds, idCol, vecCol, indexPath, nBits)
       } else
         Similarity.appendToLshIndex(spark, adds, idCol, vecCol, indexPath)
@@ -432,9 +420,9 @@ object StreamOps {
         fs.exists(new org.apache.hadoop.fs.Path(indexPath, "_text_stats"))
       val builtByPath =
         new org.apache.hadoop.fs.Path(root, "_built_by_batch")
-      val builtBy = readSmallFile(fs, builtByPath).flatMap(_.toLongOption)
+      val builtBy = SmallFiles.read(fs, builtByPath).flatMap(_.toLongOption)
       if (!built || builtBy.contains(batchId)) {
-        writeSmallFile(fs, builtByPath, batchId.toString)
+        SmallFiles.publish(fs, builtByPath, batchId.toString)
         TextIndex.saveTextIndex(adds, idCol, textCol, indexPath, numBuckets)
         dictAction = "rebuild" // bootstrap (or its replay): full derive
       } else {
@@ -487,35 +475,6 @@ object StreamOps {
 
   // ----------------------- generation-pointer state fold (shared core)
 
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(p)) None
-    else try {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    } catch { case _: Exception => None }
-
-  /** Atomic small-file publish: write a sibling temp file, then rename
-    * over the destination with `FileContext.rename(OVERWRITE)` — an
-    * atomic replace on both POSIX local filesystems and HDFS. A plain
-    * `fs.create(p, true)` truncates IN PLACE, so a concurrent reader can
-    * observe an empty or torn pointer — the race the retention-grace
-    * spec caught.
-    */
-  private def writeSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path,
-                             s: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, s".${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, fs.getConf)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
   /** Fold one batch into generation-pointer state and return the current
     * state directory. The pointer file `_freq_state` holds
     * "<generation-dir> <folded-through-batch-id>"; recovery contract:
@@ -529,47 +488,34 @@ object StreamOps {
   private def foldGenState(spark: org.apache.spark.sql.SparkSession,
       statePath: String, batchId: Long, keepPrevious: Boolean)(
       merge: Option[DataFrame] => DataFrame): String = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val ptrPath = new org.apache.hadoop.fs.Path(root, "_freq_state")
-    val (genName, folded) = readSmallFile(fs, ptrPath) match {
-      case Some(s) =>
-        val Array(g, f) = s.split(" ", 2); (Some(g), f.toLong)
-      case None => (None, -1L)
-    }
-    if (folded >= batchId) s"$statePath/${genName.get}"
+    val fs = fsOf(spark, statePath)
+    val gens = graft.ml.Generations.FoldState
+    val cur = gens.current(fs, statePath)
+    val genName = cur.map(_._1)
+    if (cur.exists(_._2.toLong >= batchId)) s"$statePath/${genName.get}"
     else {
       val merged = merge(genName.map(g =>
         spark.read.parquet(s"$statePath/$g")))
-      val gen = genName.map(_.stripPrefix("freq.gen").toLong + 1)
-        .getOrElse(0L)
-      val next = s"freq.gen$gen"
+      val next = gens.next(genName)
       merged.write.mode("overwrite").parquet(s"$statePath/$next")
-      writeSmallFile(fs, ptrPath, s"$next $batchId") // atomic publish
-      // superseded generation: garbage once the swap lands, unless the
-      // caller wants a retention grace for long-scanning readers
-      if (!keepPrevious) genName.foreach(g => try {
-        fs.delete(new org.apache.hadoop.fs.Path(root, g), true); ()
-      } catch { case _: Exception => () })
+      // the pointer line records the folded-through batch id
+      gens.flip(fs, statePath, next, genName, keepPrevious,
+        note = batchId.toString)
       s"$statePath/$next"
     }
   }
 
   private def committedBatch(spark: org.apache.spark.sql.SparkSession,
-                             statePath: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    readSmallFile(fs, new org.apache.hadoop.fs.Path(root, "_last_batch"))
+                             statePath: String): Long =
+    SmallFiles.read(fsOf(spark, statePath),
+      new org.apache.hadoop.fs.Path(statePath, "_last_batch"))
       .map(_.toLong).getOrElse(-1L)
-  }
 
   private def commitBatch(spark: org.apache.spark.sql.SparkSession,
-                          statePath: String, batchId: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    writeSmallFile(fs,
-      new org.apache.hadoop.fs.Path(root, "_last_batch"), batchId.toString)
-  }
+                          statePath: String, batchId: Long): Unit =
+    SmallFiles.publish(fsOf(spark, statePath),
+      new org.apache.hadoop.fs.Path(statePath, "_last_batch"),
+      batchId.toString)
 
   /** One micro-batch of [[lineDedupStream]], exposed for replay specs. */
   private[streaming] def processLineDedupBatch(batch: DataFrame,

@@ -77,6 +77,39 @@ class StreamMetaSpec extends SparkSuite {
     assert(won.zOrder.contains((Seq("x"), 8))) // still absent → still kept
   }
 
+  test("a load racing saves returns one whole meta, never a torn file") {
+    val root = Files.createTempDirectory("metarace").toString
+    val schema = StructType(Seq(StructField("msg", StringType)))
+    val a = StreamMeta.fromConfig(StreamConfig("logs"), Some(schema))
+    val b = StreamMeta.fromConfig(
+      StreamConfig("logs", customPartitions = Seq("tenant"),
+        timePartitionLimitDays = Some(30)), Some(schema),
+      Some(StreamMeta.Retention("delete", 7)))
+    StreamMeta.save(root, a)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val loads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bad = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var firstBad = ""
+    def saw(what: String): Unit = {
+      if (bad.getAndIncrement() == 0) firstBad = what
+    }
+    val reader = new Thread(() => {
+      while (!stop.get()) {
+        try {
+          val m = StreamMeta.load(root, "logs")
+          if (m.contains(a) || m.contains(b)) loads.incrementAndGet()
+          else saw(String.valueOf(m))
+        } catch { case t: Throwable => saw(t.toString) }
+      }
+    })
+    reader.start()
+    try (0 until 300).foreach(i => StreamMeta.save(root, if (i % 2 == 0) b else a))
+    finally { stop.set(true); reader.join(30000) }
+    assert(bad.get() == 0, s"bad loads, the first: $firstBad")
+    assert(loads.get() > 0)
+    assert(StreamMeta.load(root, "logs").contains(a))
+  }
+
   test("metadata dir is invisible to parquet partition discovery") {
     val root = Files.createTempDirectory("meta2").toString
     Seq((1L, "2024-01-01"), (2L, "2024-01-02")).toDF("id", "date")

@@ -105,6 +105,43 @@ class AnnDeleteSpec extends SparkSuite {
     assert(after == before)
   }
 
+  test("searches racing three compactions never fail and answer identically") {
+    val dir = java.nio.file.Files.createTempDirectory("del-race").toString
+    Similarity.saveIvfIndex(corpus, "vec_id", "embedding",
+      numCentroids = 8, dir)
+    def search(): Seq[(Long, Long, Int)] = asPairs(
+      Similarity.ivfSearchPersisted(spark, dir, queries, "vec_id",
+        "embedding", k = 5, nProbe = 8))
+    // the top hits are purged by a first compaction that keeps the base
+    // `index` dir: a search that fell back to it would see them again
+    val dropped = search().map(_._2).toSet
+    Similarity.deleteFromAnnIndex(spark, dir, dropped.toSeq.toDF("vec_id"),
+      "vec_id")
+    Similarity.compactAnnIndex(spark, dir, keepPrevious = true)
+    val want = search()
+    assert(want.map(_._2).toSet.intersect(dropped).isEmpty)
+    @volatile var failure: Option[Throwable] = None
+    @volatile var stop = false
+    @volatile var searches = 0
+    val reader = new Thread(() => {
+      try {
+        while (!stop) {
+          val got = search()
+          assert(got == want, got) // every generation gives the same answer
+          searches += 1
+        }
+      } catch { case t: Throwable => failure = Some(t) }
+    })
+    reader.start()
+    try {
+      (0 until 3).foreach(_ =>
+        Similarity.compactAnnIndex(spark, dir, keepPrevious = true))
+    } finally { stop = true; reader.join(30000) }
+    assert(failure.isEmpty, s"concurrent search failed: $failure")
+    assert(searches > 0)
+    assert(Similarity.activeIndexDir(spark, dir).endsWith("index.gen4"))
+  }
+
   test("IVF: epoch stays monotone across compaction (post-compaction deletes work)") {
     val dir = java.nio.file.Files.createTempDirectory("del-epoch").toString
     Similarity.saveIvfIndex(corpus, "vec_id", "embedding",

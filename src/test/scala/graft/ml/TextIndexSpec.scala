@@ -343,6 +343,14 @@ class TextIndexSpec extends SparkSuite {
     val mClean = tmp("txtdupflagm1")
     TextIndex.mergeTextIndexes(spark, clean, half, mClean, numBuckets = 8)
     assert(!TextIndex.readStatsFull(spark, mClean)._4)
+    // a merge into an existing, compacted outPath sweeps its generations
+    TextIndex.compactTextIndex(spark, mClean)
+    assert(new java.io.File(s"$mClean/data.gen1").isDirectory)
+    TextIndex.mergeTextIndexes(spark, clean, half, mClean, numBuckets = 8)
+    assert(new java.io.File(mClean).list().filter(_.startsWith("data.gen"))
+      .isEmpty)
+    assert(TextIndex.readStatsFull(spark, mClean) == ((3L, 7L, 8, false)))
+    assert(scores(mClean).nonEmpty)
     TextIndex.appendToTextIndex(
       Seq((6L, "brown times")).toDF("doc_id", "text"),
       "doc_id", "text", half)

@@ -111,6 +111,31 @@ class LineDedupStreamSpec extends SparkSuite {
     assert(outRows(sinkDir) == afterOnce)
   }
 
+  test("an unreadable state pointer fails the batch instead of folding " +
+      "from empty; the previous generation is untouched") {
+    val dir = java.nio.file.Files.createTempDirectory("lds-unreadable")
+    val state = dir.resolve("state")
+    def run(rows: Seq[(Long, String)], id: Long): Unit =
+      StreamOps.processLineDedupBatch(rows.toDF("doc_id", "text"), id,
+        "doc_id", "text", state.toString, _ => (), maxDocFreq = 2L,
+        minLineChars = 1)
+    run(batch1, 0L)
+    val ptr = state.resolve("_freq_state")
+    val gen = java.nio.file.Files.readString(ptr).trim.split(" ")(0)
+    def genRows() = spark.read.parquet(state.resolve(gen).toString)
+      .collect().map(r => r.getAs[Long]("__h") -> r.getAs[Long]("__df"))
+      .toSet
+    val before = genRows()
+    assert(before.nonEmpty)
+    // a persistent read error where the pointer should be
+    java.nio.file.Files.delete(ptr)
+    java.nio.file.Files.createDirectory(ptr)
+    intercept[java.io.IOException](run(batch2, 1L))
+    assert(genRows() == before, "folded frequencies were rewritten")
+    assert(java.nio.file.Files.readString(state.resolve("_last_batch"))
+      .trim == "0")
+  }
+
   test("generation swaps vs racing readers: reads fail only inside the " +
       "documented deletion window; folded frequencies never shrink") {
     val dir = java.nio.file.Files.createTempDirectory("lds-race").toString
